@@ -263,21 +263,16 @@ def _a5_cuckoo_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # xxhash64(text): identical texts share a fingerprint, exactly the
     # URL-seen semantics (2^-64 cross-text collision accepted, as for
     # every fingerprint op in this repo).
-    from tegenaria_spark.operators.cuckoo import (
-        cuckoo_bucket_params,
-        cuckoo_delta_state,
-        cuckoo_fp_verdicts,
-        cuckoo_merge_state,
-    )
+    from tegenaria_spark.operators.cuckoo import cuckoo_bucket_filter
+    from tegenaria_spark.operators.dedup import filter_delta_state, filter_fp_verdicts
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.xxhash64(F.coalesce(F.col("text"), F.lit(""))).alias("fp")
     )
     seen = docs.filter(F.col("doc_id") < 400).select("fp").distinct()
     B = 8
-    fb = cuckoo_bucket_params(512, B)
-    state = cuckoo_merge_state(None, cuckoo_delta_state(seen, B, fb))
-    verd = cuckoo_fp_verdicts(docs, state, B, fb)
+    new, load = cuckoo_bucket_filter(512, B)
+    verd = filter_fp_verdicts(docs, filter_delta_state(seen, B, new), B, load)
     # exact correction: cuckoo "definitely new" is final (no false
     # negatives); "maybe" rows confirm against the seen table
     confirmed = (

@@ -30,15 +30,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    DoubleType,
-)
+from pyspark.sql.types import LongType
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _FAKE_JPEG_MAGIC = b"FAKEJPG0"
@@ -223,46 +215,6 @@ def hamming64(a: int, b: int) -> int:
 def phash_udf(blobs: pd.Series) -> pd.Series:
     """Vectorized phash over a binary image column (Arrow-batched)."""
     return blobs.map(lambda b: phash64(decode_image(bytes(b))) if b is not None else None)
-
-
-_DECODE_META_SCHEMA = StructType(
-    [
-        StructField("w", IntegerType()),
-        StructField("h", IntegerType()),
-        StructField("fmt", StringType()),
-    ]
-)
-
-
-@pandas_udf(_DECODE_META_SCHEMA)
-def image_meta_udf(blobs: pd.Series) -> pd.DataFrame:
-    """Decode metadata (dimensions + detected format) without keeping pixels."""
-    rows = []
-    for b in blobs:
-        if b is None:
-            rows.append((None, None, None))
-            continue
-        data = bytes(b)
-        fmt = "jpeg" if data[:8] == _FAKE_JPEG_MAGIC else "png"
-        px = decode_image(data)
-        rows.append((int(px.shape[1]), int(px.shape[0]), fmt))
-    return pd.DataFrame(rows, columns=["w", "h", "fmt"])
-
-
-def psnr_udf_factory():
-    """Pairwise PSNR between two binary image columns (store-vs-oracle check)."""
-
-    @pandas_udf(DoubleType())
-    def psnr_pair(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(a, b):
-            if x is None or y is None:
-                out.append(None)
-            else:
-                out.append(psnr(decode_image(bytes(x)), decode_image(bytes(y))))
-        return pd.Series(out, dtype="float64")
-
-    return psnr_pair
 
 
 def with_phash(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:

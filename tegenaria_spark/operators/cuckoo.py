@@ -2,11 +2,11 @@
 Filter: Practically Better than Bloom").
 
 The north rule names "bloom/cuckoo URL-seen membership implemented as
-vectorized pandas/Arrow UDFs"; this is the cuckoo half, mirroring the
-bloom accelerator's executor-side per-bucket state design
-(operators/dedup.py) with the one capability a bloom cannot offer:
-**deletion** — evict a fingerprint so the URL becomes fetchable again
-(re-crawl TTL expiry) without rebuilding the filter.
+vectorized pandas/Arrow UDFs"; this is the cuckoo half.  It plugs into
+the same executor-side per-bucket state functions as the bloom
+(operators/dedup.py ``filter_*``) and adds the one capability a bloom
+cannot offer: **deletion** — evict a fingerprint so the URL becomes
+fetchable again (re-crawl TTL expiry) without rebuilding the filter.
 
 Reference counterpart: the bloom TestOrAdd seen-set of
 /root/reference/dupefilters.go:131-141 — the reference offers no
@@ -29,24 +29,22 @@ never correctness, and inserted fps are NEVER reported unseen.
 
 Scale shape (10^10 fps): one filter per ``pmod(fp, B)`` bucket —
 4 bytes/2 slots per fp ⇒ ~23 GB total at load 0.84, B = 2^10 gives
-~23 MB per bucket row, built/merged entirely on executors via
-applyInPandas/cogroup; no driver-side table ever materializes.
+~23 MB per bucket row, built/merged entirely on executors by the
+shared per-bucket functions; no driver-side table ever materializes.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from functools import partial
+from typing import Callable, Optional
 
 import numpy as np
-import pandas as pd
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+
+from tegenaria_spark.operators.dedup import bucket_capacity
 
 MAX_KICKS = 500
 SLOTS = 4
 LOAD_FACTOR = 0.84
-
-CUCKOO_STATE_SCHEMA = "bucket int, tags binary"
 
 
 def _next_pow2(x: int) -> int:
@@ -235,77 +233,10 @@ class CuckooFilter:
             self._insert_tagged(int(idx), int(tag))
 
 
-# ---------------------------------------------------------------------------
-# Per-bucket executor-side state (mirrors bloom_delta_state /
-# bloom_merge_state / bloom_fp_verdicts in operators/dedup.py)
-# ---------------------------------------------------------------------------
-
-
-def cuckoo_bucket_params(n: int, n_buckets: int) -> int:
-    """nbuckets-per-filter sized for n/B fps at the design load."""
-    per = max(1, n // max(1, n_buckets))
-    return _next_pow2(max(1, int(np.ceil(per / (SLOTS * LOAD_FACTOR)))))
-
-
-def cuckoo_delta_state(fps: DataFrame, n_buckets: int, filter_buckets: int) -> DataFrame:
-    """Per-bucket cuckoo tables for a batch of fps — grouped-map build,
-    one shuffle on the bucket key, tables never leave the executors."""
-
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        f = CuckooFilter(filter_buckets)
-        f.add_many(np.unique(pdf["fp"].to_numpy()))
-        return pd.DataFrame({"bucket": [int(key[0])], "tags": [f.to_bytes()]})
-
-    return (
-        fps.select(F.pmod(F.col("fp"), F.lit(n_buckets)).cast("int").alias("bucket"), "fp")
-        .groupBy("bucket")
-        .applyInPandas(build, CUCKOO_STATE_SCHEMA)
-    )
-
-
-def cuckoo_merge_state(old: Optional[DataFrame], delta: DataFrame) -> DataFrame:
-    """Merge per-bucket tables (grouped-map over the union)."""
-    if old is None:
-        return delta
-
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        acc: Optional[CuckooFilter] = None
-        for raw in pdf["tags"]:
-            f = CuckooFilter.from_bytes(raw)
-            if acc is None:
-                acc = f
-            else:
-                acc.merge(f)
-        return pd.DataFrame({"bucket": [int(key[0])], "tags": [acc.to_bytes()]})
-
-    return old.unionByName(delta).groupBy("bucket").applyInPandas(fold, CUCKOO_STATE_SCHEMA)
-
-
-def cuckoo_fp_verdicts(
-    candidates: DataFrame, state: DataFrame, n_buckets: int, filter_buckets: int
-) -> DataFrame:
-    """(fp, _maybe) per distinct candidate fp — cogroup on the bucket
-    key; each table deserializes once per (bucket, task)."""
-    cand = (
-        candidates.select("fp")
-        .distinct()
-        .withColumn("_bb", F.pmod(F.col("fp"), F.lit(n_buckets)).cast("int"))
-    )
-
-    def mark(key, cpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
-        if cpdf.empty:
-            return pd.DataFrame(
-                {"fp": pd.Series([], dtype="int64"), "_maybe": pd.Series([], dtype=bool)}
-            )
-        if spdf.empty:
-            return pd.DataFrame({"fp": cpdf["fp"], "_maybe": False})
-        f = CuckooFilter.from_bytes(spdf["tags"].iloc[0])
-        return pd.DataFrame(
-            {"fp": cpdf["fp"], "_maybe": f.contains_many(cpdf["fp"].to_numpy())}
-        )
-
-    return (
-        cand.groupBy("_bb")
-        .cogroup(state.groupBy("bucket"))
-        .applyInPandas(mark, "fp long, _maybe boolean")
-    )
+def cuckoo_bucket_filter(
+    n: int, n_buckets: int
+) -> tuple[Callable[[], CuckooFilter], Callable[[bytes], CuckooFilter]]:
+    """(new, load) for the per-bucket ``filter_*`` functions of
+    operators/dedup.py, sized for n/B fps per bucket."""
+    per = bucket_capacity(n, n_buckets)
+    return partial(CuckooFilter.for_capacity, per), CuckooFilter.from_bytes

@@ -1,4 +1,4 @@
-"""Dedup gate: exact anti-join ground truth + bloom-filter prefilter.
+"""Dedup gate: exact anti-join ground truth + per-bucket filter prefilter.
 
 Reference semantics (/root/reference/engine.go:346-377 writeCache +
 dupefilters.go:131-141 DoDupeFilter):
@@ -8,11 +8,12 @@ dupefilters.go:131-141 DoDupeFilter):
 - otherwise the fingerprint is tested-and-added against a bloom filter
   sized by the optimal m,k formulas (utils.go:78-87).
 
-The rebuild keeps the bloom as an *accelerator only*: the north_rule
-demands the URL-seen set exactly, and a bloom alone has false
-positives, so ground truth is a left-anti join against the ``url_seen``
-table (hash-partitioned by fp).  The bloom (built once per round from
-url_seen, broadcast to executors) splits candidates into
+The rebuild keeps the filter as an *accelerator only*: the north_rule
+demands the URL-seen set exactly, and a bloom or cuckoo filter alone
+has false positives, so ground truth is a left-anti join against the
+``url_seen`` table (hash-partitioned by fp).  The filter (one per
+``pmod(fp, B)`` bucket, merged on executors from each round's url_seen
+delta and persisted as a state table) splits candidates into
 "definitely-new" (skip the join entirely — at crawl steady state the
 overwhelming majority) and "maybe-seen" (the only rows that shuffle
 into the anti-join).  False positives therefore cost speed, never
@@ -26,14 +27,13 @@ reference's sequential TestOrAdd does for free.
 from __future__ import annotations
 
 import math
-from typing import Optional
+from functools import partial
+from typing import Callable, Optional
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
 
 # ---------------------------------------------------------------------------
@@ -69,6 +69,15 @@ class Bloom:
         m = optimal_num_of_bits(n, p)
         return cls(m, optimal_num_of_hash_functions(n, m))
 
+    @classmethod
+    def from_bytes(cls, m_bits: int, k: int, raw: bytes) -> "Bloom":
+        """The raw bitmap is the whole state (m and k come from config),
+        so persisted ``state/bloom/v*`` rows stay plain bitmaps."""
+        return cls(m_bits, k, np.frombuffer(raw, dtype=np.uint8))
+
+    def to_bytes(self) -> bytes:
+        return self.bits.tobytes()
+
     def _positions(self, fps: np.ndarray) -> np.ndarray:
         u = fps.astype(np.int64).view(np.uint64)
         h1 = u
@@ -89,126 +98,107 @@ class Bloom:
         got = (self.bits[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
         return got.all(axis=0)
 
-    def union(self, other: "Bloom") -> "Bloom":
-        assert self.m == other.m and self.k == other.k
-        return Bloom(self.m, self.k, np.bitwise_or(self.bits, other.bits))
-
-
-def build_bloom(url_seen: DataFrame, n: int, p: float) -> Bloom:
-    """Distributed build: each partition folds its fps into a local
-    bitmap; bitmaps OR-reduce on the driver (tree-reduce shape).  At the
-    10^10 design point this becomes one bloom per fp-bucket (bitmaps
-    stay ≤ a few MB each and co-partition with the anti-join); the
-    sandbox build is the single-bucket case."""
-    m = optimal_num_of_bits(n, p)
-    k = optimal_num_of_hash_functions(n, m)
-
-    def fold(it):
-        b = Bloom(m, k)
-        for pdf in it:
-            b.add_many(pdf["fp"].to_numpy())
-        yield pd.DataFrame({"bits": [b.bits.tobytes()]})
-
-    parts = url_seen.select("fp").mapInPandas(fold, "bits binary").collect()
-    out = Bloom(m, k)
-    for row in parts:
-        out.bits |= np.frombuffer(row["bits"], dtype=np.uint8)
-    return out
+    def merge(self, other: "Bloom") -> None:
+        # not in place: a loaded bitmap is a read-only view of its bytes
+        self.bits = np.bitwise_or(self.bits, other.bits)
 
 
 # ---------------------------------------------------------------------------
-# Per-bucket bloom state (the 10^10 design): one bitmap per
-# pmod(fp, B) bucket, built and merged entirely on executors, persisted
-# as a tiny state table per round and updated incrementally from each
-# round's url_seen delta.  No driver-side bitmap ever materializes and
-# no O(|url_seen|) rebuild happens per round — the two scale-killers of
-# the single-global-bitmap build (round-1 VERDICT "What's wrong" #4).
+# Per-bucket filter state (the 10^10 design), shared by Bloom and
+# CuckooFilter (operators/cuckoo.py): one filter per pmod(fp, B) bucket,
+# built and merged entirely on executors, persisted as a tiny state
+# table per round and updated incrementally from each round's url_seen
+# delta.  No driver-side filter ever materializes and no O(|url_seen|)
+# rebuild happens per round.
+#
+# A filter type provides add_many / contains_many / merge / to_bytes;
+# callers pass a constructor of an empty, bucket-sized filter and a
+# loader from its bytes (bloom_bucket_filter / cuckoo_bucket_filter).
 #
 # Sizing at the design point: n=10^10, p=0.001 ⇒ m ≈ 17 GB total; with
 # B = 2^10 buckets each bitmap is ~17 MB — an executor-comfortable
 # cogroup row, vs a driver-OOM broadcast.
 # ---------------------------------------------------------------------------
 
-BLOOM_STATE_SCHEMA = "bucket int, bits binary"
+FILTER_STATE_SCHEMA = "bucket int, bits binary"
 
 
-def bloom_bucket_params(n: int, p: float, n_buckets: int) -> tuple[int, int]:
-    """(m_bits_per_bucket, k) sized for n/B expected fps per bucket."""
-    per = max(1, n // max(1, n_buckets))
+def bucket_capacity(n: int, n_buckets: int) -> int:
+    """Expected fps per bucket when n spread over n_buckets."""
+    return max(1, n // max(1, n_buckets))
+
+
+def bloom_bucket_filter(
+    n: int, p: float, n_buckets: int
+) -> tuple[Callable[[], Bloom], Callable[[bytes], Bloom]]:
+    """(new, load) for bloom state sized for n/B fps per bucket at rate p."""
+    per = bucket_capacity(n, n_buckets)
     m = optimal_num_of_bits(per, p)
-    return m, optimal_num_of_hash_functions(per, m)
+    k = optimal_num_of_hash_functions(per, m)
+    return partial(Bloom, m, k), partial(Bloom.from_bytes, m, k)
 
 
-def bloom_delta_state(fps: DataFrame, n_buckets: int, m_bits: int, k: int) -> DataFrame:
-    """Per-bucket bitmaps for a batch of fps — grouped-map build, one
-    shuffle on the bucket key, bitmaps never leave the executors."""
+def _bucket_of(n_buckets: int):
+    return F.pmod(F.col("fp"), F.lit(n_buckets)).cast("int")
+
+
+def filter_delta_state(fps: DataFrame, n_buckets: int, new: Callable) -> DataFrame:
+    """Per-bucket filters for a batch of fps — grouped-map build, one
+    shuffle on the bucket key, filters never leave the executors.  fps
+    are deduplicated first: a cuckoo stores a repeated insert twice."""
 
     def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        b = Bloom(m_bits, k)
-        b.add_many(pdf["fp"].to_numpy())
-        return pd.DataFrame({"bucket": [int(key[0])], "bits": [b.bits.tobytes()]})
+        f = new()
+        f.add_many(np.unique(pdf["fp"].to_numpy()))
+        return pd.DataFrame({"bucket": [int(key[0])], "bits": [f.to_bytes()]})
 
     return (
-        fps.select(F.pmod(F.col("fp"), F.lit(n_buckets)).cast("int").alias("bucket"), "fp")
+        fps.select(_bucket_of(n_buckets).alias("bucket"), "fp")
         .groupBy("bucket")
-        .applyInPandas(build, BLOOM_STATE_SCHEMA)
+        .applyInPandas(build, FILTER_STATE_SCHEMA)
     )
 
 
-def bloom_merge_state(old: Optional[DataFrame], delta: DataFrame) -> DataFrame:
-    """OR bitmaps per bucket (grouped-map over the union)."""
+def filter_merge_state(old: Optional[DataFrame], delta: DataFrame, load: Callable) -> DataFrame:
+    """Merge per-bucket filters (grouped-map over the union)."""
     if old is None:
         return delta
 
-    def orfold(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        acc: Optional[np.ndarray] = None
+    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        acc = None
         for raw in pdf["bits"]:
-            arr = np.frombuffer(raw, dtype=np.uint8)
-            acc = arr.copy() if acc is None else np.bitwise_or(acc, arr)
-        return pd.DataFrame({"bucket": [int(key[0])], "bits": [acc.tobytes()]})
+            f = load(raw)
+            if acc is None:
+                acc = f
+            else:
+                acc.merge(f)
+        return pd.DataFrame({"bucket": [int(key[0])], "bits": [acc.to_bytes()]})
 
-    return old.unionByName(delta).groupBy("bucket").applyInPandas(orfold, BLOOM_STATE_SCHEMA)
+    return old.unionByName(delta).groupBy("bucket").applyInPandas(fold, FILTER_STATE_SCHEMA)
 
 
-def bloom_fp_verdicts(
-    candidates: DataFrame, bloom_state: DataFrame, n_buckets: int, m_bits: int, k: int
+def filter_fp_verdicts(
+    candidates: DataFrame, state: DataFrame, n_buckets: int, load: Callable
 ) -> DataFrame:
     """(fp, _maybe) per distinct candidate fp — cogroup on the bucket
-    key so each bitmap meets exactly its candidate slice; the bitmap is
+    key so each filter meets exactly its candidate slice; the filter is
     deserialized once per (bucket, task), never per row, and never
     broadcast through the driver."""
-    cand_fps = (
-        candidates.select("fp")
-        .distinct()
-        .withColumn("_bb", F.pmod(F.col("fp"), F.lit(n_buckets)).cast("int"))
-    )
+    cand_fps = candidates.select("fp").distinct().withColumn("_bb", _bucket_of(n_buckets))
 
-    def mark(key, cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
+    def mark(key, cpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
         if cpdf.empty:
             return pd.DataFrame({"fp": pd.Series([], dtype="int64"), "_maybe": pd.Series([], dtype=bool)})
-        if bpdf.empty:
+        if spdf.empty:
             return pd.DataFrame({"fp": cpdf["fp"], "_maybe": False})
-        b = Bloom(m_bits, k, np.frombuffer(bpdf["bits"].iloc[0], dtype=np.uint8))
-        return pd.DataFrame({"fp": cpdf["fp"], "_maybe": b.contains_many(cpdf["fp"].to_numpy())})
+        f = load(spdf["bits"].iloc[0])
+        return pd.DataFrame({"fp": cpdf["fp"], "_maybe": f.contains_many(cpdf["fp"].to_numpy())})
 
     return (
         cand_fps.groupBy("_bb")
-        .cogroup(bloom_state.groupBy("bucket"))
+        .cogroup(state.groupBy("bucket"))
         .applyInPandas(mark, "fp long, _maybe boolean")
     )
-
-
-def bloom_maybe_seen_udf(spark, bloom: Bloom):
-    """Broadcast the bitmap once; return a vectorized membership UDF."""
-    bc = spark.sparkContext.broadcast((bloom.m, bloom.k, bloom.bits.tobytes()))
-
-    @pandas_udf(BooleanType())
-    def maybe_seen(fps: pd.Series) -> pd.Series:
-        m, k, raw = bc.value
-        b = Bloom(m, k, np.frombuffer(raw, dtype=np.uint8))
-        return pd.Series(b.contains_many(fps.to_numpy()))
-
-    return maybe_seen
 
 
 # ---------------------------------------------------------------------------
@@ -232,46 +222,36 @@ def dedup_within_batch(candidates: DataFrame) -> tuple[DataFrame, DataFrame]:
 def dedup_gate(
     candidates: DataFrame,
     url_seen: DataFrame,
-    bloom_udf=None,
-    bloom_verdicts: Optional[DataFrame] = None,
+    verdicts: Optional[DataFrame] = None,
 ) -> tuple[DataFrame, DataFrame]:
     """F1: drop candidates whose fp is already in url_seen (unless
     do_not_filter).  Returns (fresh, dup_dropped).
 
-    With a bloom prefilter the anti-join only sees maybe-seen rows;
-    definitely-new rows bypass the shuffle entirely.  Two prefilter
-    forms: ``bloom_udf`` (broadcast bitmap — fine while the bitmap is
-    driver-sized) and ``bloom_verdicts`` (a (fp, _maybe) DataFrame from
-    :func:`bloom_fp_verdicts` — the per-bucket sharded form that never
-    touches the driver; the join on fp is batch×batch, tiny next to the
-    anti-join's url_seen side it prunes).
+    ``verdicts`` is the optional prefilter: a (fp, _maybe) DataFrame
+    from :func:`filter_fp_verdicts`.  Rows it marks definitely-new skip
+    the url_seen anti-join; every other row takes the exact check.
+
+    Every split is a left_semi/left_anti join: Catalyst sizes those by
+    their left side alone, where inner/outer joins and cogroups multiply
+    their inputs' estimates.  Pinned outputs carry their estimate into
+    the next round, so a multiplying gate would square it every round
+    until planning alone stalls the crawl.
     """
     kept, batch_dups = dedup_within_batch(candidates)
     filt = kept.filter(~F.col("do_not_filter"))
     bypass = kept.filter(F.col("do_not_filter"))
-    # one left join with a marker instead of anti+semi twins — fp is
-    # unique in url_seen (each fp registers exactly once), so the join
-    # never fans out and both outputs fall out of a single shuffle
-    seen = url_seen.select("fp").withColumn("_seen", F.lit(True))
+    seen = url_seen.select("fp")
 
-    if bloom_verdicts is not None:
-        tagged = filt.join(bloom_verdicts, "fp")
-    elif bloom_udf is not None:
-        tagged = filt.withColumn("_maybe", bloom_udf(F.col("fp")))
-    else:
-        tagged = None
+    surely_new = None
+    if verdicts is not None:
+        new_fps = verdicts.filter(~F.col("_maybe")).select("fp")
+        surely_new = filt.join(new_fps, "fp", "left_semi")
+        filt = filt.join(new_fps, "fp", "left_anti")
 
-    if tagged is not None:
-        surely_new = tagged.filter(~F.col("_maybe")).drop("_maybe")
-        maybe = tagged.filter(F.col("_maybe")).drop("_maybe")
-        marked = maybe.join(seen, "fp", "left")
-        fresh = surely_new.unionByName(marked.filter(F.col("_seen").isNull()).drop("_seen"))
-        dup = marked.filter(F.col("_seen").isNotNull()).drop("_seen")
-    else:
-        marked = filt.join(seen, "fp", "left")
-        fresh = marked.filter(F.col("_seen").isNull()).drop("_seen")
-        dup = marked.filter(F.col("_seen").isNotNull()).drop("_seen")
-
+    fresh = filt.join(seen, "fp", "left_anti")
+    dup = filt.join(seen, "fp", "left_semi")
+    if surely_new is not None:
+        fresh = surely_new.unionByName(fresh)
     return fresh.unionByName(bypass), batch_dups.unionByName(dup)
 
 

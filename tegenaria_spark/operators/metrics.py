@@ -53,14 +53,6 @@ def parse_counter_rows(rows) -> tuple[dict, dict]:
     return outcome_counts, status_counts
 
 
-def collect_round_counters(fetch_log: DataFrame) -> tuple[dict, dict]:
-    """Standalone convenience (tests / ad-hoc): one aggregation job over
-    the round fetch_log.  The engine itself goes through
-    :func:`counter_rows` so the collect folds into its combined
-    side-aggregate job."""
-    return parse_counter_rows(counter_rows(fetch_log).collect())
-
-
 def round_metrics_rows(
     outcome_counts: dict, status_counts: dict, n_items: int, round_no: int
 ) -> list[tuple[int, str, int]]:

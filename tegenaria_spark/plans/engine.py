@@ -40,11 +40,11 @@ from pyspark.storagelevel import StorageLevel
 from tegenaria_spark.config import DEFAULT_CONFIG, EngineConfig
 from tegenaria_spark.functions.canonical import with_canonical, with_fingerprint
 from tegenaria_spark.operators.dedup import (
-    bloom_bucket_params,
-    bloom_delta_state,
-    bloom_fp_verdicts,
-    bloom_merge_state,
+    bloom_bucket_filter,
     dedup_gate,
+    filter_delta_state,
+    filter_fp_verdicts,
+    filter_merge_state,
     url_seen_delta,
 )
 from tegenaria_spark.plans import events as ev
@@ -199,7 +199,9 @@ class CrawlEngine:
         self._seen_cache_round = -1
         self._commit_pool: Optional[ThreadPoolExecutor] = None  # live during run()
         self._bloom_state = None  # per-bucket bitmap DF, pinned
-        self._bloom_mk = bloom_bucket_params(cfg.bloom_n, cfg.bloom_p, cfg.bloom_buckets)
+        self._bloom_new, self._bloom_load = bloom_bucket_filter(
+            cfg.bloom_n, cfg.bloom_p, cfg.bloom_buckets
+        )
         # user extension points: lifecycle events (events.go:30-148) and
         # the middleware/pipeline chains (middlewares.go:27-42,
         # pipelines.go:28-33)
@@ -310,11 +312,10 @@ class CrawlEngine:
         distributed rebuild from url_seen — never a driver collect."""
         if self._bloom_state is not None:
             return self._bloom_state
-        m, k = self._bloom_mk
         state = self.store.read_state("bloom", r)
         if state is None:
-            state = bloom_delta_state(
-                self.store.read_url_seen(r), self.cfg.bloom_buckets, m, k
+            state = filter_delta_state(
+                self.store.read_url_seen(r), self.cfg.bloom_buckets, self._bloom_new
             )
         self._bloom_state = state.localCheckpoint(eager=True)
         return self._bloom_state
@@ -330,16 +331,15 @@ class CrawlEngine:
         the base state MUST be materialized from the full url_seen as of
         round r first — merging the delta onto None would silently drop
         every earlier fp (seeds included) from the filter, and
-        bloom_fp_verdicts would then route re-discovered URLs around the
+        filter_fp_verdicts would then route re-discovered URLs around the
         dedup anti-join as 'surely_new'."""
         if not self._bloom_enabled():
             return None
-        m, k = self._bloom_mk
-        delta = bloom_delta_state(seen_delta, self.cfg.bloom_buckets, m, k)
+        delta = filter_delta_state(seen_delta, self.cfg.bloom_buckets, self._bloom_new)
         if self._bloom_state is None:
             self._load_bloom_state(r)
         old = self._bloom_state
-        merged = bloom_merge_state(old, delta).localCheckpoint(eager=True)
+        merged = filter_merge_state(old, delta, self._bloom_load).localCheckpoint(eager=True)
         if old is not None:
             old.unpersist()
         self._bloom_state = merged
@@ -443,11 +443,10 @@ class CrawlEngine:
 
         verdicts = None
         if self._bloom_enabled() and self.store.url_seen_total(r) >= cfg.bloom_min_seen:
-            m, k = self._bloom_mk
-            verdicts = bloom_fp_verdicts(
-                candidates, self._load_bloom_state(r), cfg.bloom_buckets, m, k
+            verdicts = filter_fp_verdicts(
+                candidates, self._load_bloom_state(r), cfg.bloom_buckets, self._bloom_load
             )
-        fresh, dups = dedup_gate(candidates, url_seen, bloom_verdicts=verdicts)
+        fresh, dups = dedup_gate(candidates, url_seen, verdicts)
         # fresh feeds three sinks (frontier, url_seen, logs) that run as
         # concurrent commit jobs — eager pin, or they race the compute
         fresh = pin(fresh)
@@ -632,7 +631,7 @@ class CrawlEngine:
             n_fetched=counts.get("fetched", 0),
             n_failed=counts.get("failed", 0),
             n_items=table_counts.get("items", 0),
-            n_new=counts.get("fetched", 0),
+            n_new=table_counts.get("url_seen", 0),
             n_dup=counts.get("dup_dropped", 0),
             n_deferred=counts.get("deferred", 0),
             n_blocked=counts.get("robots_blocked", 0),

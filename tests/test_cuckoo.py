@@ -1,20 +1,14 @@
 """Cuckoo-filter URL-seen membership: no false negatives, bounded FPR,
-TestOrAdd, deletion (the capability bloom lacks), deterministic state,
-merge, and the distributed per-bucket gate returning EXACT membership.
+TestOrAdd, deletion (the capability bloom lacks), deterministic state
+and merge.  The distributed per-bucket gate is covered with the bloom's
+in test_dedup.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyspark.sql.functions as F
 
-from tegenaria_spark.operators.cuckoo import (
-    CuckooFilter,
-    cuckoo_bucket_params,
-    cuckoo_delta_state,
-    cuckoo_fp_verdicts,
-    cuckoo_merge_state,
-)
+from tegenaria_spark.operators.cuckoo import CuckooFilter
 
 
 def _fps(n, seed):
@@ -88,27 +82,3 @@ def test_merge_equals_bulk_insert_membership():
     probe = _fps(6_000, 7)
     # merged filter's false-positive surface stays bounded
     assert a.contains_many(probe).mean() < 0.01
-
-
-def test_distributed_gate_exact_membership(spark):
-    """Per-bucket cuckoo state + cogroup verdicts + exact correction ==
-    plain set membership — the accelerator never changes the answer."""
-    seen_fps = [int(x) for x in _fps(3_000, 8)]
-    new_fps = [int(x) for x in _fps(1_000, 9)]
-    seen = spark.createDataFrame([(f,) for f in seen_fps], "fp long")
-    cands = spark.createDataFrame([(f,) for f in seen_fps[:500] + new_fps], "fp long")
-
-    B = 8
-    fb = cuckoo_bucket_params(4_000, B)
-    state = cuckoo_merge_state(None, cuckoo_delta_state(seen, B, fb))
-    verd = cuckoo_fp_verdicts(cands, state, B, fb)
-
-    # no false negatives: every truly-seen candidate is "maybe"
-    truly = verd.join(seen, "fp", "left_semi")
-    assert truly.filter(~F.col("_maybe")).count() == 0
-    # exact correction: maybe rows semi-join the seen table
-    confirmed = {
-        r["fp"]
-        for r in verd.filter(F.col("_maybe")).join(seen, "fp", "left_semi").collect()
-    }
-    assert confirmed == set(seen_fps[:500])

@@ -106,6 +106,11 @@ def test_crawl_terminates_and_dedups(spark, tmp_store_dir):
     assert summary.total_fetched == len(canon) > 0
     # some duplicates were dropped (seed list has ~20% dups + link cycles)
     assert log.filter(F.col("outcome") == "dup_dropped").count() > 0
+    # n_new counts the round's url_seen rows (round r commits as r + 1)
+    for rr in summary.rounds:
+        grown = store.url_seen_total(rr.round_no + 1) - store.url_seen_total(rr.round_no)
+        assert rr.n_new == grown
+    assert sum(rr.n_new for rr in summary.rounds) > 0
 
 
 def test_resume_from_snapshot(spark, tmp_store_dir):
