@@ -324,7 +324,7 @@ def _robots_txt_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _robots_residual_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r5 (verdict #3): the ENGINE's schedule_round with wildcard robots
     # residuals + Crawl-delay-lowered budgets — `*`/`$` Disallows block
-    # through schedule.robots_gate_residual (map-only exact matcher for
+    # through schedule._residual_allowed (map-only exact matcher for
     # wildcard-bearing domains) and a domain's Crawl-delay caps its
     # per-round budget via functions.robots.crawl_delay_budget_rows.
     # Twin: an independent parse+match+rank in
@@ -665,7 +665,7 @@ def _crawl_round_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tegenaria_spark.config import EngineConfig
     from tegenaria_spark.functions.canonical import with_canonical, with_fingerprint
     from tegenaria_spark.operators.dedup import dedup_gate
-    from tegenaria_spark.operators.schedule import budget_select, robots_gate, split_ready
+    from tegenaria_spark.operators.schedule import schedule_round
     from tegenaria_spark.schemas import (
         DOMAIN_BUDGET_SCHEMA,
         FRONTIER_SCHEMA,
@@ -683,24 +683,21 @@ def _crawl_round_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         {**r, "next_fetch_time": ts0}
         for r in seed_urls(site, n_seeds=300, option_ratio=0.5)
     ]
-    # r6 (guide §2.4/§1): pin the canonicalize+fingerprint+dedup chain
-    # ONCE — the four union branches below each re-derived the whole
-    # upstream (createDataFrame → canonical UDF → fingerprint → gate),
-    # a 4× recompute that dominated this query's wall (engine.py pins
-    # the same fork in production; this mirrors it)
+    # pin the canonicalize+fingerprint+dedup chain ONCE, as engine.py
+    # does in production: the scheduler output and the gate's dup rows
+    # both read it, and each would otherwise re-derive the upstream
+    # (createDataFrame → canonical UDF → fingerprint → gate)
     frontier = with_fingerprint(with_canonical(spark.createDataFrame(rows, FRONTIER_SCHEMA)))
     frontier = frontier.filter(F.col("valid")).localCheckpoint(eager=True)
     fresh, dups = dedup_gate(frontier, spark.createDataFrame([], URL_SEEN_SCHEMA))
-    fresh = fresh.localCheckpoint(eager=True)  # ready/allowed/budget fork
+    fresh = fresh.localCheckpoint(eager=True)
     robots = spark.createDataFrame(robots_rules(site), ROBOTS_SCHEMA)
     budgets = spark.createDataFrame(domain_budgets(site, 8), DOMAIN_BUDGET_SCHEMA)
-    ready, _ = split_ready(fresh, 0, cfg)
-    allowed, blocked = robots_gate(ready, robots)
-    selected, deferred = budget_select(allowed, budgets, 0, cfg)
+    # the engine's own scheduler; sleeping rows are not an outcome
+    decided = schedule_round(fresh, robots, budgets, 0, cfg)
     return (
-        selected.select("ctx_id", "domain", F.lit("selected").alias("outcome"))
-        .unionByName(deferred.select("ctx_id", "domain", F.lit("deferred").alias("outcome")))
-        .unionByName(blocked.select("ctx_id", "domain", F.lit("robots_blocked").alias("outcome")))
+        decided.filter(F.col("sched") != "sleeping")
+        .select("ctx_id", "domain", F.col("sched").alias("outcome"))
         .unionByName(dups.select("ctx_id", "domain", F.lit("dup_dropped").alias("outcome")))
     )
 

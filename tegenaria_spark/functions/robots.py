@@ -181,7 +181,7 @@ def robots_engine_inputs(
     domain's whole rule list — a prefix Disallow must lose to a longer
     wildcard Allow.  So a domain with ANY wildcard/anchored rule routes
     its ENTIRE group (prefix rules included) through the exact matcher
-    (``residual_map`` → schedule.robots_gate_residual) and contributes
+    (``residual_map`` → schedule._residual_allowed) and contributes
     no prefix rows; wildcard-free domains lower fully to the broadcast
     prefix join.  ``crawl_delays`` feeds :func:`crawl_delay_budget_rows`.
 

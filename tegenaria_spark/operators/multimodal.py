@@ -1,13 +1,14 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Images/audio/video ride as ``binary`` columns with typed metadata
-beside them; every transform is a Pandas-UDF/``mapInPandas`` stage with
-a real schema, real partitioning, and bounded Arrow batches.  The
-*codecs* are the only stubbed part in this container (no PIL/libjpeg/
-ffmpeg): PNG + the deterministic lossy stand-in are real
-(functions/images.py); anything else raises ``NotImplementedError`` at
-the decode call, not at plan time — so the Spark-side plumbing is fully
-exercised by tests while the codec swap stays a one-function change.
+Images ride as ``binary`` columns with typed metadata beside them;
+every transform is a Pandas-UDF/``mapInPandas`` stage with a real
+schema, real partitioning, and bounded Arrow batches.  The *codecs* are
+the only stubbed part in this container (no PIL/libjpeg; no video
+codec, so there is no frame sampling): PNG + the deterministic lossy
+stand-in are real (functions/images.py); anything else raises
+``NotImplementedError`` at the decode call, not at plan time — so the
+Spark-side plumbing is fully exercised by tests while the codec swap
+stays a one-function change.
 """
 
 from __future__ import annotations
@@ -153,20 +154,3 @@ def caption_dedup(
             (F.col(id_col) == F.col("kept_image_id")).cast("int").alias("is_kept"),
         )
     )
-
-
-def frame_sample_stub(df: DataFrame, every_n: int = 10, bytes_col: str = "bytes") -> DataFrame:
-    """Video frame sampling — pure stub: the container has no video
-    codec, so this raises at execution (NotImplementedError) while the
-    plan (schema, partitioning) is real and testable."""
-    in_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema = in_schema + ", frame_idx INT, frame BINARY"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for _pdf in it:
-            raise NotImplementedError(
-                "video decode requires ffmpeg/pyav — not present in this container"
-            )
-        yield  # pragma: no cover
-
-    return df.mapInPandas(batches, schema=out_schema)

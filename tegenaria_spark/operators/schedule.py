@@ -37,16 +37,17 @@ def round_ts_expr(round_no: int, cfg: EngineConfig):
     return F.timestamp_millis(F.lit(ms))
 
 
-def split_ready(frontier: DataFrame, round_no: int, cfg: EngineConfig) -> tuple[DataFrame, DataFrame]:
-    """Rows eligible this round vs rows sleeping until a later round."""
-    ready = frontier.filter(F.col("next_fetch_time") <= round_ts_expr(round_no, cfg))
-    sleeping = frontier.filter(F.col("next_fetch_time") > round_ts_expr(round_no, cfg))
-    return ready, sleeping
-
-
 def _prefix_allowed(ready: DataFrame, robots: DataFrame) -> DataFrame:
     """*ready* plus an ``_allowed`` column: longest-matching-prefix
-    robots decision per URL; default allow (see :func:`robots_gate`)."""
+    robots decision per URL; default allow.  Called by
+    :func:`schedule_round` for domains without wildcard rules.
+
+    MAP-ONLY: rules collapse to ONE array row per domain (the robots
+    dim is tiny — that groupBy shuffles a few rules per domain, not
+    the frontier), broadcast-join on ``domain``, and the longest-match
+    fold (equal-length Allow beats Disallow, RFC 9309 §2.2.2; no match
+    ⇒ allow) runs as a Catalyst ``aggregate`` over the row's rule
+    array, deciding in place without a second frontier exchange."""
     path = F.coalesce(F.parse_url(F.col("canon_url"), F.lit("PATH")), F.lit("/"))
     rules_by_domain = F.broadcast(
         robots.groupBy("domain").agg(
@@ -81,59 +82,19 @@ def _prefix_allowed(ready: DataFrame, robots: DataFrame) -> DataFrame:
     )
 
 
-def robots_gate(ready: DataFrame, robots: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Longest-matching-prefix robots decision per URL; default allow.
-
-    MAP-ONLY: rules collapse to ONE array row per domain (the robots
-    dim is tiny — that groupBy shuffles a few rules per domain, not
-    the frontier), broadcast-join on ``domain``, and the longest-match
-    fold (equal-length Allow beats Disallow, RFC 9309 §2.2.2; no match
-    ⇒ allow) runs as a Catalyst ``aggregate`` over the row's rule
-    array.  r4 verdict #5: the previous shape exploded candidate
-    matches and re-ranked them under a ``row_number`` window
-    partitioned by (ctx_id, enqueue_seq) — a per-round frontier
-    exchange on a second key before the budget window's domain
-    shuffle; this fold decides in place and drops that exchange.
-    Returns (allowed, blocked).
-    """
-    decided = _prefix_allowed(ready, robots)
-    allowed = decided.filter(F.col("_allowed")).drop("_allowed")
-    blocked = decided.filter(~F.col("_allowed")).drop("_allowed")
-    return allowed, blocked
-
-
-def robots_gate_residual(
-    ready: DataFrame, residual_map: dict[str, list[tuple[str, bool]]]
-) -> tuple[DataFrame, DataFrame]:
-    """Wildcard-capable robots decision for domains whose rule group
-    contains ``*``/``$`` patterns (RFC 9309) — the prefix join can't
-    express those, and longest-match is only correct when one matcher
-    sees the domain's WHOLE rule list (functions/robots.py lowering).
-
-    Zero-shuffle: ``mapInPandas`` with the residual rule map in the
-    task closure — rules are a per-domain dimension (a few KB/domain,
-    wildcard-bearing domains a subset of that), the batch groups by
-    domain locally and patterns compile once per (domain, batch).
-    Returns (allowed, blocked)."""
-    import pandas as pd
-
-    from tegenaria_spark.functions.robots import robots_gate_pandas
-
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    cols = [f.name for f in ready.schema.fields]
-    decided = _residual_allowed(ready, residual_map)
-    return (
-        decided.filter(F.col("_allowed")).drop("_allowed").select(*cols),
-        decided.filter(~F.col("_allowed")).drop("_allowed").select(*cols),
-    )
-
-
 def _residual_allowed(
     ready: DataFrame, residual_map: dict[str, list[tuple[str, bool]]]
 ) -> DataFrame:
     """*ready* plus an ``_allowed`` column from the wildcard-exact
-    matcher (see :func:`robots_gate_residual` for the contract)."""
+    matcher, for domains whose rule group contains ``*``/``$`` patterns
+    (RFC 9309) — the prefix join can't express those, and longest-match
+    is only correct when one matcher sees the domain's WHOLE rule list
+    (functions/robots.py lowering).
+
+    Zero-shuffle: ``mapInPandas`` with the residual rule map in the
+    task closure — rules are a per-domain dimension (a few KB/domain,
+    wildcard-bearing domains a subset of that), the batch groups by
+    domain locally and patterns compile once per (domain, batch)."""
     import pandas as pd
 
     from tegenaria_spark.functions.robots import robots_gate_pandas
@@ -161,39 +122,6 @@ def _residual_allowed(
     return ready.mapInPandas(gate, out_schema)
 
 
-def budget_select(
-    allowed: DataFrame,
-    domain_budget: DataFrame,
-    round_no: int,
-    cfg: EngineConfig,
-) -> tuple[DataFrame, DataFrame]:
-    """Q1+Q2: rank per domain by (priority, next_fetch_time,
-    enqueue_seq); the first ``budget_per_round`` rows fetch now, the
-    rest defer one round.  Budget dim is broadcast (small), ranking is
-    the round's one unavoidable shuffle on ``domain``."""
-    budgets = F.broadcast(
-        domain_budget.select(
-            F.col("domain").alias("_b_domain"), F.col("budget_per_round").alias("_budget")
-        )
-    )
-    w = Window.partitionBy("domain").orderBy(
-        F.col("priority").asc(), F.col("next_fetch_time").asc(), F.col("enqueue_seq").asc()
-    )
-    ranked = (
-        allowed.join(budgets, F.col("domain") == F.col("_b_domain"), "left")
-        .withColumn("_budget", F.coalesce(F.col("_budget"), F.lit(cfg.default_budget_per_round)))
-        .withColumn("_rank", F.row_number().over(w))
-        .drop("_b_domain")
-    )
-    selected = ranked.filter(F.col("_rank") <= F.col("_budget")).drop("_rank", "_budget")
-    deferred = (
-        ranked.filter(F.col("_rank") > F.col("_budget"))
-        .drop("_rank", "_budget")
-        .withColumn("next_fetch_time", round_ts_expr(round_no + 1, cfg))
-    )
-    return selected, deferred
-
-
 def schedule_round(
     frontier: DataFrame,
     robots: DataFrame,
@@ -215,17 +143,14 @@ def schedule_round(
     instead of the prefix join, so `*`/`$` Disallows actually block
     (RFC 9309; no reference counterpart — north-rule surface).
 
-    r6 restructure (guide §2.4): ONE LINEAR PASS.  The old shape
-    filter-split the frontier and unioned four decision slices back
-    together — every materialization of that union re-evaluated the
-    robots gates up to 3× and the budget window 2× (each union branch
-    re-derives its whole chain).  Now the decision is three COLUMNS
-    (``_ready``, ``_allowed``, ``_rank``) computed once on a single
-    stream — the only split left is the disjoint residual-vs-prefix
-    robots routing, whose branches don't overlap — and ``sched`` is a
-    CASE over them.  The budget window ranks within
-    ``(domain, _ready AND _allowed)``, which orders the contending rows
-    exactly as the old allowed-only window did."""
+    ONE LINEAR PASS: the decision is three COLUMNS (``_ready``,
+    ``_allowed``, ``_rank``) computed once on a single stream, and
+    ``sched`` is a CASE over them.  Splitting the frontier into slices
+    and unioning them back would re-derive the robots gates and the
+    budget window once per union branch.  The only split is the
+    disjoint residual-vs-prefix robots routing.  The budget window
+    ranks within ``(domain, _ready AND _allowed)``, so sleeping and
+    blocked rows never take a budget slot."""
     ts_now = round_ts_expr(round_no, cfg)
     if robots_residual:
         res_domains = sorted(robots_residual)

@@ -83,9 +83,11 @@ def repetition_stats(
     two word-mode exchanges and built bigrams with an interpreted
     Catalyst higher-order transform; a vectorized ``mapInArrow``
     tokenizer (C-level split + one Counter pass per doc) computes all
-    five counters in a single pipeline stage with zero exchanges —
-    strictly better at every scale (map-only passes are embarrassingly
-    parallel).
+    five counters in a single pipeline stage with zero exchanges.
+    Measured once, at sf0.1 on ``local[32]``: the query went from
+    3.2 s to 0.5-0.6 s.  The pass moves tokenizing from JVM codegen to
+    Python workers, so it trades CPU for Arrow boundary cost; no other
+    scale was measured.
     """
     import pyarrow as pa
     import pandas as pd

@@ -404,7 +404,7 @@ def expected_crawl_round_schedule(
             fresh.append(s)
 
     # robots: longest matching prefix wins, equal-length Allow beats
-    # Disallow (RFC 9309 tie rule, mirrored by schedule.robots_gate and
+    # Disallow (RFC 9309 tie rule, mirrored by schedule._prefix_allowed and
     # the simulator), default allow
     def allowed(s) -> bool:
         path = urlsplit(s["canon_url"]).path or "/"

@@ -174,7 +174,7 @@ class CrawlEngine:
         self.store = store
         self.site = site
         self.cfg = cfg
-        # the changed-bucket set (run_round) and the store's frontier
+        # the changed-bucket set (_compute_round) and the store's frontier
         # layout hash fp with the SAME modulus, or write_frontier's
         # `_fb.isin(changed)` filter silently drops rows — fail loudly
         if store.fp_buckets != cfg.fp_buckets:
@@ -559,9 +559,9 @@ class CrawlEngine:
         work.parsed["buckets"] = [int(x["i"]) for x in rows if x["kind"] == "bucket"]
 
     def _launch_commit(self, work: "_RoundWork") -> None:
-        """Phase B: hand the round's commit to the commit thread (or run
-        it inline when no pool is active).  Closures resolve the side
-        aggregate lazily, so only the commit thread ever blocks on it."""
+        """Phase B: hand the round's commit to the commit thread.
+        Closures resolve the side aggregate lazily, so only the commit
+        thread ever blocks on it."""
         r = work.round_no
 
         def _changed_buckets() -> list[int]:
@@ -602,21 +602,12 @@ class CrawlEngine:
             )
 
         work.commit_t0 = time.time()
-        if self._commit_pool is not None:
-            work.commit_fut = self._commit_pool.submit(_commit)
-        else:
-            fut: Future = Future()
-            try:
-                fut.set_result(_commit())
-            except BaseException as e:  # noqa: BLE001 — surfaced at finalize
-                fut.set_exception(e)
-            work.commit_fut = fut
+        work.commit_fut = self._commit_pool.submit(_commit)
 
     def _finalize_round(self, work: "_RoundWork", wall_s: float) -> RoundResult:
         """Phase C: wait for the commit, advance the seen cache, build
-        the RoundResult.  Pins are NOT unpersisted here — the caller
-        frees them once the NEXT round's pins exist (the pipelined loop)
-        or immediately (the synchronous wrapper)."""
+        the RoundResult.  Pins are NOT unpersisted here — ``run()``
+        frees them once the NEXT round's pins exist."""
         snapshot_id, table_counts = work.commit_fut.result()
         work.side_exec.shutdown(wait=False)
         work.timings["commit"] = round(time.time() - work.commit_t0, 3)
@@ -652,17 +643,6 @@ class CrawlEngine:
         work.side_exec.shutdown(wait=False)
         for df in work.pins:
             df.unpersist()
-
-    def run_round(self, r: int, frontier: DataFrame, url_seen: DataFrame) -> RoundResult:
-        """One fully synchronous round (streaming driver + direct
-        callers); ``run()`` uses the pipelined phases directly."""
-        t0 = time.time()
-        work = self._compute_round(r, frontier, url_seen)
-        self._launch_commit(work)
-        result = self._finalize_round(work, wall_s=round(time.time() - t0, 3))
-        for df in work.pins:
-            df.unpersist()
-        return result
 
     def run(
         self,

@@ -2,16 +2,13 @@
 
 The reference is a continuous pull loop (engine.go:217-247) — an
 unbounded stream with no event-time semantics.  The rebuild's primary
-mode is batch rounds (SURVEY.md §2.6); these wrappers give the same
-round function a streaming surface:
+mode is batch rounds (SURVEY.md §2.6); these wrappers give the
+crawl's logs and their rollups a streaming surface:
 
 - ``stream_fetch_log_metrics``: a live metrics query over the growing
   fetch_log directory (file-source stream + stateful aggregation) — the
   streaming rendering of the reference's stats watcher
   (stats.go:143-205 + events.go:102-148).
-- ``run_rounds_foreachBatch``: drive crawl rounds from a rate stream —
-  each micro-batch executes one frontier round, so trigger intervals
-  become the reference's round_interval wall-clock pacing.
 """
 
 from __future__ import annotations
@@ -112,49 +109,6 @@ def stream_windowed_counts(
         )
         q.awaitTermination(600)
     return spark.table(name)
-
-
-def run_rounds_foreachBatch(
-    engine,
-    max_rounds: int = 10,
-    interval: str = "1 second",
-):
-    """Drive the engine from a rate stream: one round per micro-batch.
-
-    The rate source exists only as a ticker; the round reads its real
-    input from the committed frontier snapshot (same as batch mode), so
-    exactly-once comes from the store's commit markers, not the stream.
-    """
-    spark = engine.spark
-    start = engine.store.last_committed_round()
-    if start is None:
-        # mirror CrawlEngine.run's resume check — an un-bootstrapped
-        # store has no frontier snapshot for the first tick to read
-        raise RuntimeError("store has no committed snapshot — bootstrap before streaming rounds")
-    # max_rounds is a budget relative to where we resume, not an
-    # absolute round index (else resuming at round ≥ max_rounds no-ops)
-    state = {"round": start, "end": start + max_rounds, "done": False}
-
-    def tick(_batch_df, _batch_id):
-        if state["done"] or state["round"] >= state["end"]:
-            state["done"] = True
-            return
-        r = state["round"]
-        frontier, url_seen = engine._read_state(r)
-        if frontier.isEmpty():
-            state["done"] = True
-            return
-        engine.run_round(r, frontier, url_seen)
-        state["round"] = r + 1
-
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", "1")
-        .load()
-        .writeStream.foreachBatch(tick)
-        .trigger(processingTime=interval)
-        .start()
-    )
 
 
 def stream_windowed_counts_watermarked(

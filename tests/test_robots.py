@@ -5,8 +5,10 @@ selection, engine-schema lowering, and the vectorized pandas gate."""
 from __future__ import annotations
 
 import urllib.robotparser
+from datetime import datetime, timezone
 
 import pandas as pd
+import pytest
 
 from tegenaria_spark.functions.robots import (
     parse_robots_txt,
@@ -159,56 +161,93 @@ def test_pandas_gate_matches_scalar():
     assert bool(got.iloc[-2])  # the $-anchored Allow fires
 
 
-def test_lowered_rows_drive_engine_gate_identically(spark):
-    """robots.txt → robots_rows_from_txt → the ENGINE's broadcast
-    prefix gate (schedule.robots_gate) decides exactly like the RFC
-    matcher on wildcard-free files — including the equal-length
-    Allow/Disallow tie, which the gate now breaks toward Allow
-    deterministically (RFC 9309 §2.2.2)."""
-    from tegenaria_spark.operators.schedule import robots_gate
-    from tegenaria_spark.schemas import ROBOTS_SCHEMA
+# wildcard-free files lower to prefix rows, wildcard files to the
+# residual map; each shape below hands schedule_round a subset
+_PREFIX_TXTS = {
+    "d0.io": (
+        "User-agent: *\nDisallow: /admin/\nAllow: /admin/help\n"
+        "Disallow: /private\nAllow: /private/public\n"
+    ),
+    # equal-length conflicting pair: Allow must win the tie
+    "d1.io": "User-agent: *\nAllow: /folder\nDisallow: /folder\n",
+    "d2.io": "User-agent: *\nDisallow:\n",
+    # nested prefixes: the longest match decides
+    "d3.io": "User-agent: *\nAllow: /\nDisallow: /private\nAllow: /private/open\n",
+}
+_RESIDUAL_TXTS = {
+    # a prefix Disallow beside wildcards: the whole group stays residual
+    "w0.io": "User-agent: *\nDisallow: /fish*\nAllow: /fish/safe$\nDisallow: /admin/\n",
+    "w1.io": "User-agent: *\nDisallow: /*.php$\nAllow: /folder\nDisallow: /private\n",
+}
+_ROBOTS_SHAPES = {
+    "none": {},
+    "prefix": _PREFIX_TXTS,
+    "residual": _RESIDUAL_TXTS,
+    "residual_prefix": {**_PREFIX_TXTS, **_RESIDUAL_TXTS},
+}
 
-    txts = {
-        "d0.io": (
-            "User-agent: *\nDisallow: /admin/\nAllow: /admin/help\n"
-            "Disallow: /private\nAllow: /private/public\n"
-        ),
-        # equal-length conflicting pair: Allow must win the tie
-        "d1.io": "User-agent: *\nAllow: /folder\nDisallow: /folder\n",
-        "d2.io": "User-agent: *\nDisallow:\n",
-    }
-    rows, residual = robots_rows_from_txt(txts)
-    assert residual == []
-    robots = spark.createDataFrame(
-        [(r["domain"], r["path_prefix"], r["allow"]) for r in rows], ROBOTS_SCHEMA
+
+@pytest.mark.parametrize("shape", list(_ROBOTS_SHAPES))
+def test_schedule_round_robots_shapes_match_rfc_matcher(spark, shape):
+    """robots.txt → robots_engine_inputs → the ENGINE's schedule_round
+    decides every URL exactly like parse_robots_txt + robots_allowed,
+    for each robots input shape it takes: no rules, prefix rows only,
+    residual map only (``robots=None``), and both.  Covers the
+    equal-length Allow/Disallow tie (RFC 9309 §2.2.2), nested
+    longest-prefix wins, `*`/`$` patterns, and domains without a file
+    (default allow)."""
+    from tegenaria_spark.config import EngineConfig
+    from tegenaria_spark.functions.robots import robots_engine_inputs
+    from tegenaria_spark.operators.schedule import schedule_round
+    from tegenaria_spark.schemas import DOMAIN_BUDGET_SCHEMA, ROBOTS_SCHEMA
+
+    txts = _ROBOTS_SHAPES[shape]
+    rows, residual, _delays = robots_engine_inputs(txts)
+    # the lowering produced exactly the shape under test
+    assert bool(rows) == (shape in ("prefix", "residual_prefix"))
+    assert bool(residual) == (shape in ("residual", "residual_prefix"))
+    # as CrawlEngine builds its inputs: no rows ⇒ no robots frame
+    robots = (
+        spark.createDataFrame(
+            [(r["domain"], r["path_prefix"], r["allow"]) for r in rows], ROBOTS_SCHEMA
+        )
+        if rows
+        else None
     )
 
+    cfg = EngineConfig(shuffle_partitions=4)
     paths = ["/", "/admin/", "/admin/help/x", "/private/public/y", "/private/z",
-             "/folder/page", "/folder", "/else"]
-    frontier_rows = []
-    i = 0
-    for domain in txts:
-        for p in paths:
-            frontier_rows.append((f"c{i}", f"http://{domain}{p}?", domain, 0, i, None))
-            i += 1
+             "/private/open/x", "/folder/page", "/folder", "/fish", "/fish/safe",
+             "/fish/safe/x", "/a.php", "/a.php/x", "/else"]
+    domains = sorted({**_PREFIX_TXTS, **_RESIDUAL_TXTS}) + ["nofile.io"]
+    ts0 = datetime.fromtimestamp(cfg.epoch_ms / 1000, tz=timezone.utc)
+    frontier_rows = [
+        (f"c{i}", f"http://{domain}{p}?", domain, 0, i, ts0)
+        for i, (domain, p) in enumerate((d, p) for d in domains for p in paths)
+    ]
     frontier = spark.createDataFrame(
         frontier_rows,
         "ctx_id string, canon_url string, domain string, priority int, "
         "enqueue_seq bigint, next_fetch_time timestamp",
     )
-    allowed, blocked = robots_gate(frontier, robots)
-    got = {r["ctx_id"]: True for r in allowed.collect()}
-    got.update({r["ctx_id"]: False for r in blocked.collect()})
+    # budget above the per-domain row count: robots alone decides
+    budgets = spark.createDataFrame(
+        [(d, len(paths), 128) for d in domains], DOMAIN_BUDGET_SCHEMA
+    )
+    decided = schedule_round(frontier, robots, budgets, 0, cfg, residual or None)
+    got = {r["ctx_id"]: r["sched"] for r in decided.collect()}
 
-    for row in frontier_rows:
-        ctx, domain, path = row[0], row[2], row[1].split(domain := row[2], 1)[1].rstrip("?")
-        rules = parse_robots_txt(txts[domain])["rules"]
-        assert got[ctx] == robots_allowed(rules, path or "/"), (domain, path)
+    assert len(got) == len(frontier_rows)
+    for ctx, _url, domain, _prio, i, _ts in frontier_rows:
+        path = paths[i % len(paths)]
+        rules = parse_robots_txt(txts.get(domain, ""))["rules"]
+        want = "selected" if robots_allowed(rules, path) else "robots_blocked"
+        assert got[ctx] == want, (shape, domain, path)
 
 
 def test_wildcard_residual_and_crawl_delay_drive_engine(spark, tmp_path):
     """r4 verdict #3: a `*`/`$` Disallow must actually BLOCK a fetch on
-    the engine path (robots_gate_residual stage), and a Crawl-delay
+    the engine path (schedule_round's residual matcher), and a Crawl-delay
     must shrink the domain's per-round politeness budget."""
     from tegenaria_spark.config import EngineConfig
     from tegenaria_spark.functions.robots import (

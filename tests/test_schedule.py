@@ -1,5 +1,6 @@
-"""Scheduler semantics: budget window (limiter_test.go analogue),
-robots gate, deferral, salting."""
+"""Scheduler semantics through the engine's ``schedule_round``: budget
+window (limiter_test.go analogue), priority order, sleeping rows,
+salting.  Robots decisions are covered in test_robots.py."""
 
 from __future__ import annotations
 
@@ -8,21 +9,18 @@ from datetime import datetime, timezone
 import pyspark.sql.functions as F
 
 from tegenaria_spark.config import EngineConfig
-from tegenaria_spark.operators.schedule import (
-    budget_select,
-    robots_gate,
-    salt_for_fetch,
-    split_ready,
-)
-from tegenaria_spark.schemas import DOMAIN_BUDGET_SCHEMA, ROBOTS_SCHEMA
+from tegenaria_spark.operators.schedule import salt_for_fetch, schedule_round
+from tegenaria_spark.schemas import DOMAIN_BUDGET_SCHEMA
 
 CFG = EngineConfig(shuffle_partitions=8)
 
 
+def _ms(round_no: int) -> int:
+    return CFG.epoch_ms + round_no * CFG.round_interval_s * 1000
+
+
 def _ts(round_no: int):
-    return datetime.fromtimestamp(
-        (CFG.epoch_ms + round_no * CFG.round_interval_s * 1000) / 1000, tz=timezone.utc
-    )
+    return datetime.fromtimestamp(_ms(round_no) / 1000, tz=timezone.utc)
 
 
 def _frontier(spark, rows):
@@ -31,6 +29,16 @@ def _frontier(spark, rows):
         "ctx_id string, canon_url string, domain string, priority int, "
         "enqueue_seq bigint, next_fetch_time timestamp",
     )
+
+
+def _by_sched(decided) -> dict[str, list]:
+    """Collected rows grouped by ``sched``, each group in enqueue order;
+    ``next_ms`` is ``next_fetch_time`` in epoch milliseconds."""
+    out: dict[str, list] = {}
+    rows = decided.withColumn("next_ms", F.unix_millis("next_fetch_time"))
+    for r in rows.orderBy("enqueue_seq").collect():
+        out.setdefault(r["sched"], []).append(r)
+    return out
 
 
 def test_budget_64_requests_rate_16_takes_4_rounds(spark):
@@ -44,11 +52,9 @@ def test_budget_64_requests_rate_16_takes_4_rounds(spark):
     budgets = spark.createDataFrame([("d.io", 16, 128)], DOMAIN_BUDGET_SCHEMA)
     fetched_per_round = []
     for r in range(5):
-        ready, sleeping = split_ready(frontier, r, CFG)
-        selected, deferred = budget_select(ready, budgets, r, CFG)
-        n = selected.count()
-        fetched_per_round.append(n)
-        frontier = sleeping.unionByName(deferred)
+        decided = schedule_round(frontier, None, budgets, r, CFG).localCheckpoint()
+        fetched_per_round.append(decided.filter(F.col("sched") == "selected").count())
+        frontier = decided.filter(F.col("sched") != "selected").drop("sched")
         if frontier.isEmpty():
             break
     assert fetched_per_round == [16, 16, 16, 16]
@@ -61,47 +67,35 @@ def test_budget_orders_by_priority_then_seq(spark):
         ("hi-early", "http://d.io/c?", "d.io", 0, 2, _ts(0)),
     ]
     budgets = spark.createDataFrame([("d.io", 2, 128)], DOMAIN_BUDGET_SCHEMA)
-    selected, deferred = budget_select(_frontier(spark, rows), budgets, 0, CFG)
-    assert {r["ctx_id"] for r in selected.collect()} == {"hi-early", "hi-late"}
-    assert [r["ctx_id"] for r in deferred.collect()] == ["low"]
+    got = _by_sched(schedule_round(_frontier(spark, rows), None, budgets, 0, CFG))
+    assert set(got) == {"selected", "deferred"}
+    assert {r["ctx_id"] for r in got["selected"]} == {"hi-early", "hi-late"}
+    assert [r["ctx_id"] for r in got["deferred"]] == ["low"]
+    # a deferred row moves to the next round's timestamp
+    assert got["deferred"][0]["next_ms"] == _ms(1)
 
 
 def test_budget_default_when_domain_unknown(spark):
     rows = [(f"c{i}", "http://x.io/p?", "x.io", 0, i, _ts(0)) for i in range(40)]
     budgets = spark.createDataFrame([], DOMAIN_BUDGET_SCHEMA)
-    selected, deferred = budget_select(_frontier(spark, rows), budgets, 0, CFG)
-    assert selected.count() == CFG.default_budget_per_round
-    assert deferred.count() == 40 - CFG.default_budget_per_round
+    got = _by_sched(schedule_round(_frontier(spark, rows), None, budgets, 0, CFG))
+    assert len(got["selected"]) == CFG.default_budget_per_round
+    assert len(got["deferred"]) == 40 - CFG.default_budget_per_round
 
 
-def test_split_ready_defers_future_rows(spark):
+def test_future_rows_stay_sleeping(spark):
+    """A row whose ``next_fetch_time`` is after the round neither
+    fetches nor takes a budget slot, and keeps its timestamp."""
     rows = [
         ("now", "http://d.io/a?", "d.io", 0, 1, _ts(0)),
         ("later", "http://d.io/b?", "d.io", 0, 2, _ts(3)),
     ]
-    ready, sleeping = split_ready(_frontier(spark, rows), 0, CFG)
-    assert [r["ctx_id"] for r in ready.collect()] == ["now"]
-    assert [r["ctx_id"] for r in sleeping.collect()] == ["later"]
-
-
-def test_robots_longest_prefix_wins(spark):
-    rows = [
-        ("ok", "http://d.io/pub/x?", "d.io", 0, 1, _ts(0)),
-        ("blocked", "http://d.io/private/x?", "d.io", 0, 2, _ts(0)),
-        ("nested-ok", "http://d.io/private/open/x?", "d.io", 0, 3, _ts(0)),
-        ("no-rules", "http://other.io/x?", "other.io", 0, 4, _ts(0)),
-    ]
-    robots = spark.createDataFrame(
-        [
-            ("d.io", "/", True),
-            ("d.io", "/private", False),
-            ("d.io", "/private/open", True),
-        ],
-        ROBOTS_SCHEMA,
-    )
-    allowed, blocked = robots_gate(_frontier(spark, rows), robots)
-    assert {r["ctx_id"] for r in allowed.collect()} == {"ok", "nested-ok", "no-rules"}
-    assert {r["ctx_id"] for r in blocked.collect()} == {"blocked"}
+    budgets = spark.createDataFrame([("d.io", 1, 128)], DOMAIN_BUDGET_SCHEMA)
+    got = _by_sched(schedule_round(_frontier(spark, rows), None, budgets, 0, CFG))
+    assert set(got) == {"selected", "sleeping"}
+    assert [r["ctx_id"] for r in got["selected"]] == ["now"]
+    assert [r["ctx_id"] for r in got["sleeping"]] == ["later"]
+    assert got["sleeping"][0]["next_ms"] == _ms(3)
 
 
 def test_salting_spreads_hot_domain(spark):

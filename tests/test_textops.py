@@ -302,16 +302,6 @@ def test_multimodal_resize_and_features(spark):
     assert all(r["phash"] is not None for r in feats)
 
 
-def test_frame_sample_stub_raises(spark):
-    from tegenaria_spark.operators.multimodal import frame_sample_stub
-
-    df = spark.createDataFrame([("v1", b"notavideo")], "video_id string, bytes binary")
-    out = frame_sample_stub(df)
-    assert "frame_idx" in out.columns  # plan is real
-    with pytest.raises(Exception):  # noqa: B017 — PySpark wraps the NotImplementedError
-        out.collect()  # execution hits the stub
-
-
 def test_repetition_stats_hand_case(spark, docs):
     from tegenaria_spark.operators.textstats import repetition_stats
 
