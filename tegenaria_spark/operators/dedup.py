@@ -13,7 +13,8 @@ demands the URL-seen set exactly, and a bloom or cuckoo filter alone
 has false positives, so ground truth is a left-anti join against the
 ``url_seen`` table (hash-partitioned by fp).  The filter (one per
 ``pmod(fp, B)`` bucket, merged on executors from each round's url_seen
-delta and persisted as a state table) splits candidates into
+delta and held in engine memory only, since url_seen rebuilds it) splits
+candidates into
 "definitely-new" (skip the join entirely — at crawl steady state the
 overwhelming majority) and "maybe-seen" (the only rows that shuffle
 into the anti-join).  False positives therefore cost speed, never
@@ -72,7 +73,7 @@ class Bloom:
     @classmethod
     def from_bytes(cls, m_bits: int, k: int, raw: bytes) -> "Bloom":
         """The raw bitmap is the whole state (m and k come from config),
-        so persisted ``state/bloom/v*`` rows stay plain bitmaps."""
+        so a filter state row's ``bits`` is a plain bitmap."""
         return cls(m_bits, k, np.frombuffer(raw, dtype=np.uint8))
 
     def to_bytes(self) -> bytes:
@@ -106,10 +107,11 @@ class Bloom:
 # ---------------------------------------------------------------------------
 # Per-bucket filter state (the 10^10 design), shared by Bloom and
 # CuckooFilter (operators/cuckoo.py): one filter per pmod(fp, B) bucket,
-# built and merged entirely on executors, persisted as a tiny state
-# table per round and updated incrementally from each round's url_seen
-# delta.  No driver-side filter ever materializes and no O(|url_seen|)
-# rebuild happens per round.
+# built and merged entirely on executors.  The engine builds the state
+# from url_seen once, on the first round that uses the prefilter, and
+# then updates it from each round's url_seen delta; nothing is written
+# to the store.  No driver-side filter ever materializes and no
+# O(|url_seen|) rebuild happens per round.
 #
 # A filter type provides add_many / contains_many / merge / to_bytes;
 # callers pass a constructor of an empty, bucket-sized filter and a
@@ -159,10 +161,8 @@ def filter_delta_state(fps: DataFrame, n_buckets: int, new: Callable) -> DataFra
     )
 
 
-def filter_merge_state(old: Optional[DataFrame], delta: DataFrame, load: Callable) -> DataFrame:
+def filter_merge_state(old: DataFrame, delta: DataFrame, load: Callable) -> DataFrame:
     """Merge per-bucket filters (grouped-map over the union)."""
-    if old is None:
-        return delta
 
     def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
         acc = None

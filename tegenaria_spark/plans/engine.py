@@ -127,7 +127,6 @@ class _RoundWork:
     seen_delta: DataFrame
     items: DataFrame
     fetch_log: DataFrame
-    bloom_state: Optional[DataFrame]
     side_exec: ThreadPoolExecutor
     side_fut: Future
     parsed: dict = field(default_factory=dict)
@@ -198,7 +197,7 @@ class CrawlEngine:
         self._seen_cache = None
         self._seen_cache_round = -1
         self._commit_pool: Optional[ThreadPoolExecutor] = None  # live during run()
-        self._bloom_state = None  # per-bucket bitmap DF, pinned
+        self._bloom_state = None  # per-bucket bitmap DF, pinned; built on first use
         self._bloom_new, self._bloom_load = bloom_bucket_filter(
             cfg.bloom_n, cfg.bloom_p, cfg.bloom_buckets
         )
@@ -299,52 +298,6 @@ class CrawlEngine:
             old.unpersist()
         self._seen_cache_round = r
 
-    # ------------------------------------------------------------------
-    # per-bucket bloom state (A5): maintained incrementally from each
-    # round's url_seen delta; persisted with the commit for resume
-    # ------------------------------------------------------------------
-
-    def _bloom_enabled(self) -> bool:
-        return self.cfg.bloom_enabled
-
-    def _load_bloom_state(self, r: int) -> Optional[DataFrame]:
-        """In-memory state, else the store's (resume), else a one-shot
-        distributed rebuild from url_seen — never a driver collect."""
-        if self._bloom_state is not None:
-            return self._bloom_state
-        state = self.store.read_state("bloom", r)
-        if state is None:
-            state = filter_delta_state(
-                self.store.read_url_seen(r), self.cfg.bloom_buckets, self._bloom_new
-            )
-        self._bloom_state = state.localCheckpoint(eager=True)
-        return self._bloom_state
-
-    def _advance_bloom_state(
-        self, seen_delta: DataFrame, r: int
-    ) -> Optional[DataFrame]:
-        """Merge round *r*'s new fps into the bitmap shards; returns the
-        new state (pinned) for inclusion in the commit.
-
-        When no in-memory state exists yet (fresh engine whose rounds ran
-        below bloom_min_seen, or a resume whose snapshot predates bloom),
-        the base state MUST be materialized from the full url_seen as of
-        round r first — merging the delta onto None would silently drop
-        every earlier fp (seeds included) from the filter, and
-        filter_fp_verdicts would then route re-discovered URLs around the
-        dedup anti-join as 'surely_new'."""
-        if not self._bloom_enabled():
-            return None
-        delta = filter_delta_state(seen_delta, self.cfg.bloom_buckets, self._bloom_new)
-        if self._bloom_state is None:
-            self._load_bloom_state(r)
-        old = self._bloom_state
-        merged = filter_merge_state(old, delta, self._bloom_load).localCheckpoint(eager=True)
-        if old is not None:
-            old.unpersist()
-        self._bloom_state = merged
-        return merged
-
     def _compute_round(self, r: int, frontier: DataFrame, url_seen: DataFrame) -> "_RoundWork":
         """Phase A of a round: every Spark job EXCEPT the commit —
         schedule, fetch, parse, dedup, log assembly, and the submitted
@@ -441,10 +394,20 @@ class CrawlEngine:
         invalid = candidates.filter(~F.col("valid"))
         candidates = candidates.filter(F.col("valid"))
 
+        # per-bucket bloom state (A5) is engine memory, never persisted:
+        # built from this round's url_seen input the first time the
+        # prefilter gates (a fresh engine and a resume take the same
+        # path), then merged with each round's delta below.  That input
+        # is the seen cache plus the pending delta, so it is complete
+        # even while the previous round's commit is still in flight
         verdicts = None
-        if self._bloom_enabled() and self.store.url_seen_total(r) >= cfg.bloom_min_seen:
+        if cfg.bloom_enabled and self.store.url_seen_total(r) >= cfg.bloom_min_seen:
+            if self._bloom_state is None:
+                self._bloom_state = filter_delta_state(
+                    url_seen, cfg.bloom_buckets, self._bloom_new
+                ).localCheckpoint(eager=True)
             verdicts = filter_fp_verdicts(
-                candidates, self._load_bloom_state(r), cfg.bloom_buckets, self._bloom_load
+                candidates, self._bloom_state, cfg.bloom_buckets, self._bloom_load
             )
         fresh, dups = dedup_gate(candidates, url_seen, verdicts)
         # fresh feeds three sinks (frontier, url_seen, logs) that run as
@@ -521,7 +484,13 @@ class CrawlEngine:
             )
         )
 
-        bloom_state = self._advance_bloom_state(seen_delta, r)
+        if self._bloom_state is not None:
+            old = self._bloom_state
+            delta = filter_delta_state(seen_delta, cfg.bloom_buckets, self._bloom_new)
+            self._bloom_state = filter_merge_state(
+                old, delta, self._bloom_load
+            ).localCheckpoint(eager=True)
+            old.unpersist()
         mark("counts")
 
         side_exec = ThreadPoolExecutor(max_workers=1)
@@ -534,7 +503,6 @@ class CrawlEngine:
             seen_delta=seen_delta,
             items=items,
             fetch_log=fetch_log,
-            bloom_state=bloom_state,
             side_exec=side_exec,
             side_fut=side_exec.submit(side_df.collect),
         )
@@ -595,9 +563,6 @@ class CrawlEngine:
                 {"items": work.items, "fetch_log": work.fetch_log},
                 _stats,
                 frontier_changed_buckets=_changed_buckets,
-                extra_state={"bloom": work.bloom_state}
-                if work.bloom_state is not None
-                else None,
                 deferred_logs={"metrics": _metrics_fn},
             )
 

@@ -21,7 +21,6 @@ Iceberg writer and nothing above this module changes):
       state/url_seen/v{r}/          append-only delta per round
       state/url_seen_base/v{r}/     periodic compaction of deltas ≤ r
                                     (read = newest base + later deltas)
-      state/bloom/v{r}/             per-bucket bloom bitmaps (A5 state)
       logs/{items,fetch_log,metrics,lineage}/r{r}/
       commits/round-{r}.json        written LAST — the atomic commit
                                     marker; carries the frontier bucket
@@ -214,7 +213,6 @@ class LocalSnapshotStore:
         logs: dict[str, DataFrame],
         stats: dict,
         frontier_changed_buckets: Optional[list[int]] = None,
-        extra_state: Optional[dict[str, DataFrame]] = None,
         deferred_logs: Optional[dict] = None,
     ) -> tuple[str, dict[str, int]]:
         """Write state + appends, then the marker.
@@ -228,9 +226,6 @@ class LocalSnapshotStore:
         zero-arg callable returning the list: only the frontier writer
         thread blocks on it, so the caller can overlap the bucket-set
         job with the other table writes.
-
-        ``extra_state``: additional full-state tables (e.g. the
-        per-bucket bloom bitmaps) written under ``state/{name}/v{r}``.
 
         ``deferred_logs``: {name: fn(table_counts) -> DataFrame} —
         append tables derived from the OTHER tables' committed row
@@ -258,7 +253,6 @@ class LocalSnapshotStore:
                 logs,
                 stats,
                 frontier_changed_buckets,
-                extra_state,
                 deferred_logs,
             )
         finally:
@@ -337,7 +331,6 @@ class LocalSnapshotStore:
         logs: dict[str, DataFrame],
         stats: dict,
         frontier_changed_buckets=None,
-        extra_state: Optional[dict[str, DataFrame]] = None,
         deferred_logs: Optional[dict] = None,
     ) -> tuple[str, dict[str, int]]:
         lineage_rows = []
@@ -379,11 +372,6 @@ class LocalSnapshotStore:
                 lineage_rows.extend(rows)
 
         def write_frontier() -> None:
-            if "fp" not in frontier.columns:
-                # schema-free caller (tests / ad-hoc tables): flat
-                # layout, no bucket manifest
-                write(frontier, self._state_path("frontier", r), "frontier")
-                return
             import time as _time
 
             _t0 = _time.time()
@@ -434,19 +422,12 @@ class LocalSnapshotStore:
         # concurrent writes: Spark schedules jobs from multiple driver
         # threads, so commit wall time is the slowest table, not the sum
         jobs = [(url_seen_delta, self._state_path("url_seen", r), "url_seen")]
-        jobs += [(df, self._state_path(name, r), name) for name, df in (extra_state or {}).items()]
         jobs += [(df, self._log_path(name, r), name) for name, df in logs.items()]
-        max_workers = int(os.environ.get("TEGENARIA_COMMIT_THREADS", str(len(jobs) + 1)))
-        if max_workers <= 1:
-            write_frontier()
-            for j in jobs:
-                write(*j)
-        else:
-            with ThreadPoolExecutor(max_workers=max_workers) as pool:
-                futures = [pool.submit(write_frontier)]
-                futures += [pool.submit(write, *j) for j in jobs]
-                for f in futures:
-                    f.result()
+        with ThreadPoolExecutor(max_workers=len(jobs) + 1) as pool:
+            futures = [pool.submit(write_frontier)]
+            futures += [pool.submit(write, *j) for j in jobs]
+            for f in futures:
+                f.result()
         if deferred_logs:
             partial_counts: dict[str, int] = {}
             for _, table, _, _, n in lineage_rows:
@@ -484,9 +465,8 @@ class LocalSnapshotStore:
                 "frontier": self._state_path("frontier", r),
                 "url_seen_delta": self._state_path("url_seen", r),
             },
+            "frontier_manifest": manifest,
         }
-        if "fp" in frontier.columns:
-            marker["frontier_manifest"] = manifest
         table_counts: dict[str, int] = {}
         for _, table, _, _, n in lineage_rows:
             table_counts[table] = table_counts.get(table, 0) + n
@@ -550,11 +530,7 @@ class LocalSnapshotStore:
         last-written version)."""
         manifest = self.frontier_manifest(r)
         if manifest is None:
-            # pre-manifest store (or uncommitted round): flat dir read
-            path = self._state_path("frontier", r)
-            if not os.path.exists(path):
-                raise FileNotFoundError(f"no committed frontier for round {r}: {path}")
-            return self.spark.read.parquet(path)
+            raise FileNotFoundError(f"no committed frontier for round {r}")
         paths = [m["path"] for m in manifest.values() if m.get("rows", 0) > 0]
         if not paths:
             return self.spark.createDataFrame([], FRONTIER_STATE_SCHEMA)
@@ -571,14 +547,6 @@ class LocalSnapshotStore:
         if not paths:
             return self.spark.createDataFrame([], URL_SEEN_SCHEMA)
         return self.spark.read.schema(URL_SEEN_SCHEMA).parquet(*paths)
-
-    def read_state(self, table: str, r: int) -> Optional[DataFrame]:
-        """A full-state table written via ``extra_state`` (e.g. bloom),
-        or None if that round didn't persist one."""
-        path = self._state_path(table, r)
-        if not os.path.exists(path):
-            return None
-        return self.spark.read.parquet(path)
 
     def read_log(self, table: str, upto_round: Optional[int] = None) -> DataFrame:
         base = os.path.join(self.root, "logs", table)

@@ -120,9 +120,9 @@ def test_parity_with_per_request_options(spark, tmp_store_dir):
 def test_bloom_threshold_crossed_mid_crawl(spark, tmp_store_dir):
     """Regression (r2 ADVICE high): when bloom_min_seen is crossed AFTER
     round 0, the incremental bloom state must include every fp committed
-    before the threshold crossing (seeds included).  Pre-fix,
-    _advance_bloom_state merged round deltas onto None without loading
-    the existing url_seen, so once the prefilter activated it routed
+    before the threshold crossing (seeds included).  Pre-fix, the engine
+    merged round deltas onto an empty filter without loading the
+    existing url_seen, so once the prefilter activated it routed
     already-seen URLs around the anti-join as 'surely_new' — refetches
     and duplicate url_seen fps."""
     site = SiteConfig(n_domains=3, pages_per_domain=12)

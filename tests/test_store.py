@@ -18,7 +18,7 @@ def _seen(spark, fps, rnd=0):
 def test_commit_marker_is_the_visibility_point(spark, tmp_store_dir):
     store = LocalSnapshotStore(tmp_store_dir, spark)
     assert store.last_committed_round() is None
-    frontier = _seen(spark, [1, 2, 3]).withColumnRenamed("fp", "x")
+    frontier = _seen(spark, [1, 2, 3])
     sid, counts = store.commit_round(
         0, frontier, _seen(spark, [1, 2, 3]), {}, {"phase": "t"}
     )
@@ -33,7 +33,7 @@ def test_commit_marker_is_the_visibility_point(spark, tmp_store_dir):
 
 def test_url_seen_union_and_total(spark, tmp_store_dir):
     store = LocalSnapshotStore(tmp_store_dir, spark)
-    f = _seen(spark, [0]).withColumnRenamed("fp", "x")
+    f = _seen(spark, [0])
     store.commit_round(0, f, _seen(spark, [1, 2]), {}, {})
     store.commit_round(1, f, _seen(spark, [3], rnd=1), {}, {})
     got = {r["fp"] for r in store.read_url_seen(1).collect()}
@@ -44,7 +44,7 @@ def test_url_seen_union_and_total(spark, tmp_store_dir):
 
 def test_commit_overwrites_crashed_attempt(spark, tmp_store_dir):
     store = LocalSnapshotStore(tmp_store_dir, spark)
-    f = _seen(spark, [9]).withColumnRenamed("fp", "x")
+    f = _seen(spark, [9])
     # simulate a crashed round-0 attempt: data dir exists, no marker
     path = store._state_path("frontier", 0)
     os.makedirs(path, exist_ok=True)
@@ -56,7 +56,7 @@ def test_commit_overwrites_crashed_attempt(spark, tmp_store_dir):
 
 def test_marker_contents(spark, tmp_store_dir):
     store = LocalSnapshotStore(tmp_store_dir, spark)
-    f = _seen(spark, [1]).withColumnRenamed("fp", "x")
+    f = _seen(spark, [1])
     store.commit_round(0, f, _seen(spark, [1]), {}, {"phase": "bootstrap"})
     with open(os.path.join(tmp_store_dir, "commits", "round-0.json")) as fh:
         m = json.load(fh)
@@ -67,7 +67,7 @@ def test_marker_contents(spark, tmp_store_dir):
 
 def test_lineage_counts_match_rows(spark, tmp_store_dir):
     store = LocalSnapshotStore(tmp_store_dir, spark)
-    f = _seen(spark, list(range(100))).withColumnRenamed("fp", "x")
+    f = _seen(spark, list(range(100)))
     store.commit_round(0, f, _seen(spark, list(range(100))), {}, {})
     lineage = store.read_log("lineage", 0)
     rows = lineage.collect()
@@ -88,7 +88,7 @@ def test_multi_writer_commit_is_exclusive(spark, tmp_store_dir):
 
     store_a = LocalSnapshotStore(tmp_store_dir, spark)
     store_b = LocalSnapshotStore(tmp_store_dir, spark)
-    f = _seen(spark, [1, 2, 3]).withColumnRenamed("fp", "x")
+    f = _seen(spark, [1, 2, 3])
 
     results: dict[str, object] = {}
     barrier = threading.Barrier(2)
@@ -125,7 +125,7 @@ def test_second_writer_conflicts_after_commit(spark, tmp_store_dir):
     """A round already committed is a conflict for any later attempt —
     and the conflicting attempt must leave the committed data intact."""
     store = LocalSnapshotStore(tmp_store_dir, spark)
-    f = _seen(spark, [1]).withColumnRenamed("fp", "x")
+    f = _seen(spark, [1])
     sid, _ = store.commit_round(0, f, _seen(spark, [1]), {}, {})
     with pytest.raises(CommitConflictError):
         store.commit_round(0, f, _seen(spark, [2]), {}, {})
@@ -137,7 +137,7 @@ def test_stale_claim_from_dead_writer_is_stolen(spark, tmp_store_dir):
     """A claim whose owner pid is gone (crashed writer) must not wedge
     the round forever — the next writer steals it and commits."""
     store = LocalSnapshotStore(tmp_store_dir, spark)
-    f = _seen(spark, [1]).withColumnRenamed("fp", "x")
+    f = _seen(spark, [1])
     with open(store._claim_path(0), "w") as fh:
         json.dump({"snapshot_id": "snap-0-deadbeef", "pid": 2**22 + 1234567}, fh)
     sid, _ = store.commit_round(0, f, _seen(spark, [1]), {}, {})
@@ -150,7 +150,7 @@ def test_read_log_schema_evolution_add_column(spark, tmp_store_dir):
     import pyspark.sql.functions as F
 
     store = LocalSnapshotStore(tmp_store_dir, spark)
-    f = _seen(spark, [0]).withColumnRenamed("fp", "x")
+    f = _seen(spark, [0])
     log0 = spark.createDataFrame([(0, "fetched")], "round INT, outcome STRING")
     store.commit_round(0, f, _seen(spark, [1]), {"fetch_log": log0}, {})
     log1 = spark.createDataFrame(
