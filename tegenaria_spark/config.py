@@ -21,7 +21,6 @@ class EngineConfig:
     round_interval_s: int = 1
     max_redirects: int = 3          # request.go:259
     max_retries: int = 3            # error re-enqueue cap (engine.go:269-277 path)
-    max_outlinks: int = 16
 
     # --- dedup / bloom (reference: components.go:71 n=1M p=0.001;
     # optimal m,k math ported from utils.go:78-87).
@@ -39,10 +38,9 @@ class EngineConfig:
     # paths without drowning tiny tests in empty buckets.
     bloom_buckets: int = 16
 
-    # --- state-cache hygiene: rebuild the in-memory url_seen cache from
-    # the store (flat, file-backed lineage) and compact the url_seen
-    # delta dirs into a base snapshot every K rounds — caps both the
-    # union-plan depth and the O(rounds) delta-dir reads.
+    # --- url_seen hygiene: every K rounds compact the url_seen delta
+    # dirs into a base snapshot, so a round's url_seen read opens
+    # O(K) dirs instead of O(rounds).
     seen_compact_every: int = 8
 
     # --- partitioning / skew (north_rule: explicit salting).
@@ -60,17 +58,12 @@ class EngineConfig:
     # frontier size — at 10^10 URLs use O(10^4) buckets so a bucket is
     # ~10 MB-scale; the sandbox default keeps file counts small.
     fp_buckets: int = 16
-    image_buckets: int = 16         # image store bucket(image_id) count
 
     # --- arrow batching (keeps a partition of images in executor memory)
     arrow_max_records_per_batch: int = 1024
 
     # --- determinism
     epoch_ms: int = 1_700_000_000_000   # fixed base "crawl start" timestamp
-    seed: int = 42
-
-    # --- limits
-    max_inflight_per_round: int = 1_048_576   # queue capacity analog (components.go:72)
 
     # --- observability: which outcomes get per-row fetch_log entries.
     # The reference only *counts* (stats.go); per-row dup/deferral logs

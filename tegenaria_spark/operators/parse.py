@@ -114,29 +114,26 @@ def build_quote_html_parser(name: str = "quote_html_parser") -> str:
     return name
 
 
-def run_parsers(
-    ok: DataFrame, links_from: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame]:
+def run_parsers(ok: DataFrame, links_from: DataFrame) -> tuple[DataFrame, DataFrame]:
     """M3: route fetched rows to their parser by the ``parser`` column.
 
     With one registered parser this is a single pass; with many, each
     parser sees only its slice (same effect as the reference's
     per-request reflective dispatch, engine.go:477-479).
 
-    ``links_from``: optional schema-identical twin of ``ok`` whose
-    payload columns are NULL literals (the engine's narrow meta pin).
-    Link extraction runs against it so the outlink path never scans the
+    ``links_from``: schema-identical twin of ``ok`` whose payload
+    columns are NULL literals (the engine's narrow meta pin).  Link
+    extraction runs against it so the outlink path never scans the
     round's pinned image bytes; item extraction always reads ``ok``.
     Both halves stay lazy, so the unused half of each parser call is
     never executed."""
-    links_src = ok if links_from is None else links_from
     if len(PARSER_REGISTRY) == 1:
         # fast path: no distinct job — everything routes to the one parser
         name, fn = next(iter(PARSER_REGISTRY.items()))
         items, _ = fn(ok)
-        _, links = fn(links_src)
+        _, links = fn(links_from)
         return items, links
-    names = [r["parser"] for r in links_src.select("parser").distinct().collect()]
+    names = [r["parser"] for r in links_from.select("parser").distinct().collect()]
     items_parts: list[DataFrame] = []
     links_parts: list[DataFrame] = []
     for name in names:
@@ -144,7 +141,7 @@ def run_parsers(
         if fn is None:
             raise KeyError(f"parser not registered: {name!r}")
         items, _ = fn(ok.filter(F.col("parser") == name))
-        _, links = fn(links_src.filter(F.col("parser") == name))
+        _, links = fn(links_from.filter(F.col("parser") == name))
         items_parts.append(items)
         links_parts.append(links)
     if not items_parts:
@@ -162,7 +159,7 @@ def run_parsers(
     return items, links
 
 
-def assign_enqueue_seq(links: DataFrame, round_no: int, cfg: EngineConfig, pin=None) -> DataFrame:
+def assign_enqueue_seq(links: DataFrame, round_no: int, cfg: EngineConfig, pin) -> DataFrame:
     """Deterministic distributed sequence assignment (zipWithIndex
     semantics, Arrow-only implementation).
 
@@ -179,8 +176,9 @@ def assign_enqueue_seq(links: DataFrame, round_no: int, cfg: EngineConfig, pin=N
         .withColumn("_pid", F.spark_partition_id())
     )
     # pin the partitioning so both passes see identical pids; the
-    # caller's `pin` registers the block for unpersist at round end
-    ordered = pin(ordered) if pin is not None else ordered.localCheckpoint(eager=True)
+    # caller's `pin` (an eager localCheckpoint) registers the block for
+    # unpersist at round end
+    ordered = pin(ordered)
     counts = {
         r["_pid"]: r["count"] for r in ordered.groupBy("_pid").count().collect()
     }

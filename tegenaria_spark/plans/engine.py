@@ -16,7 +16,10 @@ engine.go:217-335):
 committed as one snapshot per round; the loop re-reads the committed
 frontier until it is empty (Q6, engine.go:341-343) — which makes every
 round restartable: kill the driver at any point and ``resume=True``
-continues from the last committed snapshot (Q7).
+continues from the last committed snapshot (Q7).  The store is the only
+copy of url_seen: a round reads it from the committed snapshots plus
+the previous round's pinned delta, and seeds pass the same gate
+(``_gate``) as every round's outlinks.
 
 The only wide exchanges per round: the per-domain budget window, the
 salted fetch repartition, the new-link seq range-partition, and the
@@ -28,9 +31,10 @@ frontier read).
 from __future__ import annotations
 
 import time
-from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import partial, reduce
 from typing import Optional
 
 import pyspark.sql.functions as F
@@ -67,16 +71,50 @@ from tegenaria_spark.operators.schedule import (
 )
 from tegenaria_spark.schemas import (
     DOMAIN_BUDGET_SCHEMA,
-    FETCH_LOG_SCHEMA,
     FRONTIER_SCHEMA,
     METRICS_SCHEMA,
     ROBOTS_SCHEMA,
-    URL_SEEN_SCHEMA,
 )
 from tegenaria_spark.sources.store import LocalSnapshotStore
 from tegenaria_spark.sources.synth import SiteConfig
 
 FRONTIER_COLS = [f.name for f in FRONTIER_SCHEMA.fields]
+STATE_COLS = FRONTIER_COLS + ["canon_url", "domain", "fp"]
+
+
+def _pin(pins: list, df: DataFrame, disk: bool = False) -> DataFrame:
+    """Eager localCheckpoint registered in *pins* for unpersist once the
+    round is committed — leaked checkpoint blocks otherwise accumulate
+    across rounds until storage eviction + GC churn wreck throughput.
+
+    ``disk=True`` stores the blocks DISK_ONLY: the fetch output carries
+    the round's image payload (GBs), and holding it as deserialized JVM
+    heap objects drove G1 young pauses of 0.6-3.8 s and a live set that
+    climbed past 14 GB (measured with -Xlog:gc at budget 256).  With
+    spark.local.dir on tmpfs, DISK_ONLY is RAM-speed storage OUTSIDE
+    the heap — the payload stops being the garbage collector's problem.
+    On a real cluster this is exactly executor local-disk spill, so the
+    choice survives the scale-up."""
+    out = df.localCheckpoint(
+        eager=True,
+        storageLevel=StorageLevel.DISK_ONLY if disk else None,
+    )
+    pins.append(out)
+    return out
+
+
+def _side_facts(side_df: DataFrame) -> tuple[dict, dict, list[int]]:
+    """Collect a round's side aggregate in one job and fold it into
+    (outcome counts, status counts, changed fp-buckets)."""
+    rows = side_df.collect()
+    counts, status = parse_counter_rows(
+        [
+            {"outcome": x["s"], "status": x["i"], "_disallowed": x["flag"], "count": x["n"]}
+            for x in rows
+            if x["kind"] == "ctr"
+        ]
+    )
+    return counts, status, [int(x["i"]) for x in rows if x["kind"] == "bucket"]
 
 
 def _log_rows(df: DataFrame, round_no: int, outcome: str) -> DataFrame:
@@ -116,8 +154,9 @@ class RoundResult:
 
 @dataclass
 class _RoundWork:
-    """A computed-but-not-yet-committed round: the pinned DataFrames and
-    deferred side-aggregate the commit thread consumes."""
+    """A computed-but-not-yet-committed round: the pinned DataFrames the
+    commit writes, and ``side``, the Future of the round's
+    ``_side_facts`` that the commit and finalize read."""
 
     round_no: int
     t0: float
@@ -127,9 +166,7 @@ class _RoundWork:
     seen_delta: DataFrame
     items: DataFrame
     fetch_log: DataFrame
-    side_exec: ThreadPoolExecutor
-    side_fut: Future
-    parsed: dict = field(default_factory=dict)
+    side: Future
     commit_fut: Optional[Future] = None
     commit_t0: float = 0.0
 
@@ -194,9 +231,9 @@ class CrawlEngine:
             if budget_rows
             else spark.createDataFrame([], DOMAIN_BUDGET_SCHEMA)
         )
-        self._seen_cache = None
-        self._seen_cache_round = -1
-        self._commit_pool: Optional[ThreadPoolExecutor] = None  # live during run()
+        # two workers, live during run(): a round's side job and the
+        # previous round's commit overlap; commits never overlap each other
+        self._executor: Optional[ThreadPoolExecutor] = None
         self._bloom_state = None  # per-bucket bitmap DF, pinned; built on first use
         self._bloom_new, self._bloom_load = bloom_bucket_filter(
             cfg.bloom_n, cfg.bloom_p, cfg.bloom_buckets
@@ -225,7 +262,7 @@ class CrawlEngine:
         cfg = self.cfg
         if isinstance(seed_rows, DataFrame):
             seeds = seed_rows.withColumn("next_fetch_time", round_ts_expr(0, cfg)).select(
-                *[f.name for f in FRONTIER_SCHEMA.fields]
+                *FRONTIER_COLS
             )
             n_seeds = -1
         else:
@@ -234,23 +271,18 @@ class CrawlEngine:
                 [{**r, "next_fetch_time": ts0} for r in seed_rows], FRONTIER_SCHEMA
             )
             n_seeds = len(seed_rows)
-        cand = with_fingerprint(with_canonical(seeds))
-        # three commit writers consume these — pin before they race
-        cand = cand.localCheckpoint(eager=True)
-        invalid = cand.filter(~F.col("valid"))
-        cand = cand.filter(F.col("valid"))
-        empty_seen = self.store.read_url_seen(-1)
-        fresh, dups = dedup_gate(cand, empty_seen)
-        fresh = fresh.localCheckpoint(eager=True)
-        pins = [cand, fresh]
-        seen = url_seen_delta(fresh, 0)
-        frontier = fresh.select(*FRONTIER_COLS, "canon_url", "domain", "fp")
-        fetch_log = _log_rows(dups, 0, "dup_dropped").unionByName(
-            _log_rows(invalid, 0, "invalid")
+        pins: list[DataFrame] = []
+        fresh, dups, invalid, seen = self._gate(
+            -1, seeds, self.store.read_url_seen(-1), partial(_pin, pins)
+        )
+        fetch_log = (
+            _log_rows(dups, 0, "dup_dropped")
+            .unionByName(_log_rows(invalid, 0, "invalid"))
+            .filter(F.col("outcome").isin(*cfg.log_outcomes))
         )
         self.store.commit_round(
             0,
-            frontier,
+            fresh.select(*STATE_COLS),
             seen,
             {"fetch_log": fetch_log},
             {"phase": "bootstrap", "n_seeds": n_seeds},
@@ -260,43 +292,46 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------
 
-    def _read_state(self, r: int) -> tuple[DataFrame, DataFrame]:
-        """Frontier from the round's snapshot (manifest read: changed +
-        carried buckets); url_seen from the hot in-memory cache
-        (append-only set — re-reading every delta dir each round would
-        be O(rounds²) file opens).  The cache is rebuilt from the store
-        on first use, so resume still works."""
-        frontier_raw = self.store.read_frontier(r)
-        if self._seen_cache is None or self._seen_cache_round > r:
-            self._seen_cache = self.store.read_url_seen(r).persist()
-            self._seen_cache_round = r
-        return frontier_raw, self._seen_cache
+    def _gate(self, r: int, cand: DataFrame, url_seen: DataFrame, pin):
+        """The one URL-seen gate: seeds (``bootstrap``, r = -1) and each
+        round's outlinks pass it.  Canonicalize + fingerprint, split off
+        invalid URLs, drop fps already in *url_seen* (and duplicates
+        within *cand*), and build the url_seen rows that round r commits
+        as store round r + 1.  Returns (fresh, dups, invalid, seen_delta).
 
-    def _advance_seen_cache(self, r: int) -> None:
-        """Union the round's committed delta (read back from the store —
-        file-backed lineage, safe after round checkpoints unpersist).
-
-        The superseded cache is unpersisted (round-1 ADVICE: cached
-        copies otherwise stack up O(rounds) in executor storage), and
-        every ``seen_compact_every`` rounds the delta dirs compact into
-        a base snapshot and the cache rebuilds from it — capping both
-        union-plan depth and delta-dir fan-in."""
-        old = self._seen_cache
-        if r > 0 and r % self.cfg.seen_compact_every == 0:
-            self.store.compact_url_seen(r)
-            self._seen_cache = self.store.read_url_seen(r).persist()
-        else:
-            delta = self.spark.read.schema(URL_SEEN_SCHEMA).parquet(
-                self.store._state_path("url_seen", r)
+        The per-bucket filter (A5) is engine memory, never persisted:
+        built from *url_seen* the first time the prefilter gates (a fresh
+        engine and a resume take the same path), then merged with every
+        delta this gate produces — so once it exists it holds every fp
+        in url_seen."""
+        cfg = self.cfg
+        # cand feeds invalid-log, dup-log and fresh, which race as
+        # concurrent commit jobs — pin EAGERLY, or two jobs racing a lazy
+        # checkpoint both recompute the canonicalize UDF
+        cand = pin(with_fingerprint(with_canonical(cand)))
+        invalid = cand.filter(~F.col("valid"))
+        cand = cand.filter(F.col("valid"))
+        verdicts = None
+        if cfg.bloom_enabled and self.store.url_seen_total(r) >= cfg.bloom_min_seen:
+            if self._bloom_state is None:
+                self._bloom_state = filter_delta_state(
+                    url_seen, cfg.bloom_buckets, self._bloom_new
+                ).localCheckpoint(eager=True)
+            verdicts = filter_fp_verdicts(
+                cand, self._bloom_state, cfg.bloom_buckets, self._bloom_load
             )
-            self._seen_cache = (
-                old.unionByName(delta).persist() if old is not None else delta.persist()
-            )
-        if old is not None and old is not self._seen_cache:
-            # safe immediately: the new cache's lineage reads parquet
-            # files, never the old cache's blocks
+        fresh, dups = dedup_gate(cand, url_seen, verdicts)
+        # fresh feeds three sinks (frontier, url_seen, logs) — eager pin
+        fresh = pin(fresh)
+        seen_delta = url_seen_delta(fresh, r + 1)
+        if self._bloom_state is not None:
+            old = self._bloom_state
+            delta = filter_delta_state(seen_delta, cfg.bloom_buckets, self._bloom_new)
+            self._bloom_state = filter_merge_state(
+                old, delta, self._bloom_load
+            ).localCheckpoint(eager=True)
             old.unpersist()
-        self._seen_cache_round = r
+        return fresh, dups, invalid, seen_delta
 
     def _compute_round(self, r: int, frontier: DataFrame, url_seen: DataFrame) -> "_RoundWork":
         """Phase A of a round: every Spark job EXCEPT the commit —
@@ -312,27 +347,7 @@ class CrawlEngine:
         t0 = time.time()
         timings: dict[str, float] = {}
         pins: list[DataFrame] = []
-
-        def pin(df: DataFrame, disk: bool = False) -> DataFrame:
-            """Eager localCheckpoint registered for unpersist at round
-            end — leaked checkpoint blocks otherwise accumulate across
-            rounds until storage eviction + GC churn wreck throughput.
-
-            ``disk=True`` stores the blocks DISK_ONLY: the fetch output
-            carries the round's image payload (GBs), and holding it as
-            deserialized JVM heap objects drove G1 young pauses of
-            0.6-3.8 s and a live set that climbed past 14 GB (measured
-            with -Xlog:gc at budget 256).  With spark.local.dir on
-            tmpfs, DISK_ONLY is RAM-speed storage OUTSIDE the heap —
-            the payload stops being the garbage collector's problem.
-            On a real cluster this is exactly executor local-disk
-            spill, so the choice survives the scale-up."""
-            out = df.localCheckpoint(
-                eager=True,
-                storageLevel=StorageLevel.DISK_ONLY if disk else None,
-            )
-            pins.append(out)
-            return out
+        pin = partial(_pin, pins)
 
         def mark(name: str) -> None:
             now = time.time()
@@ -359,7 +374,7 @@ class CrawlEngine:
             self.plugins.response_middlewares.apply(fetch_stage(to_fetch, site, cfg))
         )
         fetched = pin(fetched, disk=True)  # cut lineage; fetch runs once;
-        # payload blocks live off-heap (see pin docstring)
+        # payload blocks live off-heap (see _pin)
         mark("fetch")
         # Narrow meta twin of the fetch output: the image payload column
         # is replaced by a NULL literal so the schema (and the parser
@@ -379,80 +394,47 @@ class CrawlEngine:
         ok_meta = meta.filter(F.col("error").isNull())
         failed = meta.filter(F.col("error").isNotNull())
 
-        items, links = run_parsers(ok, links_from=ok_meta)
+        items, links = run_parsers(ok, ok_meta)
         items = self.plugins.item_pipelines.apply(items)
-        links_seq = assign_enqueue_seq(links, r + 1, cfg, pin=pin)
+        links_seq = assign_enqueue_seq(links, r + 1, cfg, pin)
         mark("parse_seq")
         next_ts = round_ts_expr(r + 1, cfg)
-        candidates = with_fingerprint(
-            with_canonical(links_to_candidates(links_seq, r, next_ts))
+        fresh, dups, invalid, seen_delta = self._gate(
+            r, links_to_candidates(links_seq, r, next_ts), url_seen, pin
         )
-        # candidates feed invalid-log, dup-log, fresh, url_seen, frontier —
-        # pin EAGERLY: the commit writes run concurrently, and two jobs
-        # racing a lazy checkpoint both recompute the canonicalize UDF
-        candidates = pin(candidates)
-        invalid = candidates.filter(~F.col("valid"))
-        candidates = candidates.filter(F.col("valid"))
-
-        # per-bucket bloom state (A5) is engine memory, never persisted:
-        # built from this round's url_seen input the first time the
-        # prefilter gates (a fresh engine and a resume take the same
-        # path), then merged with each round's delta below.  That input
-        # is the seen cache plus the pending delta, so it is complete
-        # even while the previous round's commit is still in flight
-        verdicts = None
-        if cfg.bloom_enabled and self.store.url_seen_total(r) >= cfg.bloom_min_seen:
-            if self._bloom_state is None:
-                self._bloom_state = filter_delta_state(
-                    url_seen, cfg.bloom_buckets, self._bloom_new
-                ).localCheckpoint(eager=True)
-            verdicts = filter_fp_verdicts(
-                candidates, self._bloom_state, cfg.bloom_buckets, self._bloom_load
-            )
-        fresh, dups = dedup_gate(candidates, url_seen, verdicts)
-        # fresh feeds three sinks (frontier, url_seen, logs) that run as
-        # concurrent commit jobs — eager pin, or they race the compute
-        fresh = pin(fresh)
-        seen_delta = url_seen_delta(fresh, r + 1)
-
         retries = retry_candidates(failed, r, cfg, next_ts)
-
-        state_cols = FRONTIER_COLS + ["canon_url", "domain", "fp"]
-        new_frontier = (
-            sleeping.select(*state_cols)
-            .unionByName(deferred.select(*state_cols))
-            .unionByName(fresh.select(*state_cols))
-            .unionByName(retries.select(*state_cols))
+        new_frontier = reduce(
+            DataFrame.unionByName,
+            [df.select(*STATE_COLS) for df in (sleeping, deferred, fresh, retries)],
         )
 
-        log_parts = {
-            "fetched": ok_meta,
-            "failed": failed,
-            "robots_blocked": blocked,
-            "deferred": deferred,
-            "dup_dropped": dups,
-            "invalid": invalid,
-        }
-        branches = [
-            _log_rows(df, r, outcome)
-            for outcome, df in log_parts.items()
-            if outcome in cfg.log_outcomes
-        ]
-        fetch_log = branches[0]
-        for b in branches[1:]:
-            fetch_log = fetch_log.unionByName(b)
-        fetch_log = fetch_log.select([f.name for f in FETCH_LOG_SCHEMA.fields])
-        fetch_log = pin(fetch_log)
+        # every outcome is counted (the marker's counters, the metrics
+        # table, RoundResult); only cfg.log_outcomes get fetch_log rows
+        outcomes = pin(
+            reduce(
+                DataFrame.unionByName,
+                [
+                    _log_rows(df, r, outcome)
+                    for outcome, df in (
+                        ("fetched", ok_meta),
+                        ("failed", failed),
+                        ("robots_blocked", blocked),
+                        ("deferred", deferred),
+                        ("dup_dropped", dups),
+                        ("invalid", invalid),
+                    )
+                ],
+            )
+        )
+        fetch_log = outcomes.filter(F.col("outcome").isin(*cfg.log_outcomes))
         mark("dedup_log")
 
         # the round's driver-side side facts (outcome counters + changed-
         # bucket set) fold into ONE aggregation job — two stages with no
         # dependency, scheduled in parallel inside a single collect —
-        # submitted on a helper thread so it overlaps the commit's table
-        # writes; the item count is NOT a job at all (it falls out of the
-        # items write's parquet footers inside the commit).  r2 ran three
-        # separate sub-second collects here: pure per-round constant that
-        # scaling can't amortize.
+        # submitted to the run's executor so it overlaps the previous
+        # round's commit; the item count is NOT a job at all (it falls
+        # out of the items write's parquet footers inside the commit).
         # commit I/O ∝ churn: only fp-buckets touched this round rewrite
         # (ready rows left/changed; fresh/retry rows entered) — sleeping
         # buckets carry over by manifest reference
@@ -468,7 +450,7 @@ class CrawlEngine:
             )
             .distinct()
         )
-        side_df = counter_rows(fetch_log).select(
+        side_df = counter_rows(outcomes).select(
             F.lit("ctr").alias("kind"),
             F.col("outcome").alias("s"),
             F.col("status").cast("int").alias("i"),
@@ -483,18 +465,8 @@ class CrawlEngine:
                 F.lit(None).cast("long").alias("n"),
             )
         )
-
-        if self._bloom_state is not None:
-            old = self._bloom_state
-            delta = filter_delta_state(seen_delta, cfg.bloom_buckets, self._bloom_new)
-            self._bloom_state = filter_merge_state(
-                old, delta, self._bloom_load
-            ).localCheckpoint(eager=True)
-            old.unpersist()
         mark("counts")
-
-        side_exec = ThreadPoolExecutor(max_workers=1)
-        work = _RoundWork(
+        return _RoundWork(
             round_no=r,
             t0=t0,
             timings=timings,
@@ -503,57 +475,24 @@ class CrawlEngine:
             seen_delta=seen_delta,
             items=items,
             fetch_log=fetch_log,
-            side_exec=side_exec,
-            side_fut=side_exec.submit(side_df.collect),
+            side=self._executor.submit(_side_facts, side_df),
         )
-        return work
-
-    def _resolve_side(self, work: "_RoundWork") -> None:
-        if "counts" in work.parsed:
-            return
-        rows = work.side_fut.result()
-        work.parsed["counts"], work.parsed["status"] = parse_counter_rows(
-            [
-                {
-                    "outcome": x["s"],
-                    "status": x["i"],
-                    "_disallowed": x["flag"],
-                    "count": x["n"],
-                }
-                for x in rows
-                if x["kind"] == "ctr"
-            ]
-        )
-        work.parsed["buckets"] = [int(x["i"]) for x in rows if x["kind"] == "bucket"]
 
     def _launch_commit(self, work: "_RoundWork") -> None:
-        """Phase B: hand the round's commit to the commit thread.
-        Closures resolve the side aggregate lazily, so only the commit
-        thread ever blocks on it."""
+        """Phase B: hand the round's commit to the run's executor.  The
+        closures read the side Future lazily, so only the commit thread
+        ever blocks on it."""
         r = work.round_no
 
-        def _changed_buckets() -> list[int]:
-            self._resolve_side(work)
-            return work.parsed["buckets"]
-
         def _metrics_fn(partial_counts: dict):
-            self._resolve_side(work)
+            counts, status, _ = work.side.result()
             # (rows, schema): the store writes this driver-built table
             # with pyarrow directly — no Spark job (r6, store.py
             # _write_local_parquet)
             return (
-                round_metrics_rows(
-                    work.parsed["counts"],
-                    work.parsed["status"],
-                    partial_counts.get("items", 0),
-                    r,
-                ),
+                round_metrics_rows(counts, status, partial_counts.get("items", 0), r),
                 METRICS_SCHEMA,
             )
-
-        def _stats() -> dict:
-            self._resolve_side(work)
-            return {"phase": "round", "round": r, "outcomes": work.parsed["counts"]}
 
         def _commit():
             return self.store.commit_round(
@@ -561,23 +500,24 @@ class CrawlEngine:
                 work.new_frontier,
                 work.seen_delta,
                 {"items": work.items, "fetch_log": work.fetch_log},
-                _stats,
-                frontier_changed_buckets=_changed_buckets,
+                lambda: {"phase": "round", "round": r, "outcomes": work.side.result()[0]},
+                frontier_changed_buckets=lambda: work.side.result()[2],
                 deferred_logs={"metrics": _metrics_fn},
             )
 
         work.commit_t0 = time.time()
-        work.commit_fut = self._commit_pool.submit(_commit)
+        work.commit_fut = self._executor.submit(_commit)
 
     def _finalize_round(self, work: "_RoundWork", wall_s: float) -> RoundResult:
-        """Phase C: wait for the commit, advance the seen cache, build
-        the RoundResult.  Pins are NOT unpersisted here — ``run()``
-        frees them once the NEXT round's pins exist."""
+        """Phase C: wait for the commit, compact url_seen every
+        ``seen_compact_every`` rounds, build the RoundResult.  Pins are
+        NOT unpersisted here — ``run()`` frees them once the NEXT
+        round's pins exist."""
         snapshot_id, table_counts = work.commit_fut.result()
-        work.side_exec.shutdown(wait=False)
         work.timings["commit"] = round(time.time() - work.commit_t0, 3)
-        counts = work.parsed["counts"]
-        self._advance_seen_cache(work.round_no + 1)
+        counts = work.side.result()[0]
+        if (work.round_no + 1) % self.cfg.seen_compact_every == 0:
+            self.store.compact_url_seen(work.round_no + 1)
         marker = self.store._marker(work.round_no + 1)
         if marker:
             work.timings["commit_tables"] = marker.get("write_times", {})
@@ -600,12 +540,9 @@ class CrawlEngine:
     def _discard_work(self, work: "_RoundWork") -> None:
         """Drop a speculatively computed round without committing it
         (pause raced ahead of the pipeline).  Deterministic recompute on
-        resume makes the discard invisible to parity."""
-        try:
-            work.side_fut.result(timeout=60)
-        except Exception:  # noqa: BLE001 — side job is advisory here
-            pass
-        work.side_exec.shutdown(wait=False)
+        resume makes the discard invisible to parity.  The side job
+        reads the pins, so it ends before they are freed."""
+        wait([work.side])
         for df in work.pins:
             df.unpersist()
 
@@ -620,8 +557,10 @@ class CrawlEngine:
 
         The loop PIPELINES round N+1's compute phase with round N's
         commit: compute(N+1) runs against the in-memory new_frontier and
-        (seen cache ∪ pinned delta) while the commit thread writes round
-        N's tables.  Crash mid-commit is still safe — the marker is the
+        (committed url_seen ∪ pinned delta) while the commit thread
+        writes round N's tables.  One two-worker executor runs the
+        commits and the rounds' side jobs: a round's side job overlaps
+        the previous round's commit, and commits never overlap.  Crash mid-commit is still safe — the marker is the
         visibility point and commits launch strictly in round order, so
         resume restarts from the last committed round and recomputes the
         (deterministic) lost round bit-identically."""
@@ -639,7 +578,7 @@ class CrawlEngine:
         r = start
         self._lifecycle = "running"
         pending: Optional[_RoundWork] = None
-        self._commit_pool = ThreadPoolExecutor(max_workers=1)
+        self._executor = ThreadPoolExecutor(max_workers=2)
         last_done = time.time()
 
         def _finalize_pending() -> None:
@@ -677,13 +616,18 @@ class CrawlEngine:
                     self.events.emit(ev.PAUSE, round_no=r)
                     break
                 if pending is None:
-                    frontier, url_seen = self._read_state(r)
+                    frontier = self.store.read_frontier(r)
+                    url_seen = self.store.read_url_seen(r)
                 else:
-                    # round r's inputs live in memory: the previous
-                    # round's pinned new_frontier, and the seen cache
-                    # (deltas ≤ r-1) unioned with its pinned delta (v_r)
+                    # round r's inputs: the previous round's pinned
+                    # new_frontier, and url_seen as committed through
+                    # store round r-1 (finalized, so immutable) unioned
+                    # with the pinned delta whose commit (v_r) may still
+                    # be in flight
                     frontier = pending.new_frontier
-                    url_seen = self._seen_cache.unionByName(pending.seen_delta)
+                    url_seen = self.store.read_url_seen(r - 1).unionByName(
+                        pending.seen_delta
+                    )
                 if frontier.isEmpty():
                     break
                 self.events.emit(ev.ROUND_START, round_no=r)
@@ -712,8 +656,8 @@ class CrawlEngine:
                     pending.commit_fut.result()
                 except Exception:  # noqa: BLE001
                     pass
-            self._commit_pool.shutdown(wait=True)
-            self._commit_pool = None
+            self._executor.shutdown(wait=True)
+            self._executor = None
             if self._lifecycle == "running":  # drained / max_rounds / error
                 self._lifecycle = "idle"
         self.events.emit(ev.STOP, round_no=r, total_fetched=summary.total_fetched)

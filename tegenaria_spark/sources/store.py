@@ -70,6 +70,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid
 from typing import Optional
 
@@ -227,13 +228,13 @@ class LocalSnapshotStore:
         thread blocks on it, so the caller can overlap the bucket-set
         job with the other table writes.
 
-        ``deferred_logs``: {name: fn(table_counts) -> DataFrame} —
-        append tables derived from the OTHER tables' committed row
-        counts (e.g. the metrics table needs the items count, which
-        falls out of the items write's parquet footers — a separate
-        ``items.count()`` job would be pure per-round constant).  Each
-        fn is called after the main writes with the footer-based counts
-        accumulated so far.
+        ``deferred_logs``: {name: fn(table_counts) -> (rows, schema)} —
+        small driver-built append tables derived from the OTHER tables'
+        committed row counts (e.g. the metrics table needs the items
+        count, which falls out of the items write's parquet footers — a
+        separate ``items.count()`` job would be pure per-round
+        constant).  Each fn is called after the main writes with the
+        footer-based counts accumulated so far.
 
         Returns ``(snapshot_id, row_counts_per_table)`` — counts fall out
         of the footer/manifest pass, so callers never need a count job.
@@ -345,10 +346,9 @@ class LocalSnapshotStore:
         _lineage_lock = threading.Lock()
 
         def write(df: DataFrame, path: str, table: str) -> None:
-            import time as _time
             from pyspark.sql.types import BinaryType
 
-            _t0 = _time.time()
+            _t0 = time.time()
             if os.path.exists(path):
                 shutil.rmtree(path)  # orphan from a crashed attempt
             # unions of checkpointed branches accumulate partitions
@@ -363,7 +363,7 @@ class LocalSnapshotStore:
                 # data: pure CPU burn on the commit path's biggest table
                 writer = writer.option("compression", "uncompressed")
             writer.parquet(path)
-            write_times[table] = round(_time.time() - _t0, 2)
+            write_times[table] = round(time.time() - _t0, 2)
             rows = [
                 (r, table, pid, snapshot_id, n)
                 for pid, (_f, n) in enumerate(self._scan_parts(path))
@@ -372,9 +372,7 @@ class LocalSnapshotStore:
                 lineage_rows.extend(rows)
 
         def write_frontier() -> None:
-            import time as _time
-
-            _t0 = _time.time()
+            _t0 = time.time()
             path = self._state_path("frontier", r)
             if os.path.exists(path):
                 shutil.rmtree(path)
@@ -395,7 +393,7 @@ class LocalSnapshotStore:
             if df.rdd.getNumPartitions() > max_files:
                 df = df.coalesce(max_files)
             df.write.mode("overwrite").partitionBy("_fb").parquet(path)
-            write_times["frontier"] = round(_time.time() - _t0, 2)
+            write_times["frontier"] = round(time.time() - _t0, 2)
 
             rows = []
             pid = 0
@@ -433,20 +431,13 @@ class LocalSnapshotStore:
             for _, table, _, _, n in lineage_rows:
                 partial_counts[table] = partial_counts.get(table, 0) + n
             for name, fn in deferred_logs.items():
-                out = fn(partial_counts)
-                path = self._log_path(name, r)
-                if isinstance(out, DataFrame):
-                    write(out, path, name)
-                else:
-                    # (rows, schema): driver-built tiny table — write
-                    # without a Spark job (see _write_local_parquet)
-                    import time as _time
-
-                    _t0 = _time.time()
-                    d_rows, d_schema = out
-                    n = self._write_local_parquet(d_rows, d_schema, path)
-                    write_times[name] = round(_time.time() - _t0, 2)
-                    lineage_rows.append((r, name, 0, snapshot_id, n))
+                # (rows, schema): driver-built tiny table — written
+                # without a Spark job (see _write_local_parquet)
+                _t0 = time.time()
+                d_rows, d_schema = fn(partial_counts)
+                n = self._write_local_parquet(d_rows, d_schema, self._log_path(name, r))
+                write_times[name] = round(time.time() - _t0, 2)
+                lineage_rows.append((r, name, 0, snapshot_id, n))
                 logs = {**logs, name: None}  # marker["tables"] lists it
 
         lineage_rows.sort(key=lambda t: (t[1], t[2]))

@@ -13,10 +13,46 @@ crawl's logs and their rollups a streaming surface:
 
 from __future__ import annotations
 
+import os
+import tempfile
+import uuid
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from tegenaria_spark.schemas import FETCH_LOG_SCHEMA
+
+
+def _parquet_stream(spark: SparkSession, path: str) -> DataFrame:
+    """readStream over a parquet directory or a single parquet file,
+    with the batch schema.  The file stream source requires a directory,
+    so a file streams its parent dir with a glob pinned to its name."""
+    reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    if os.path.isfile(path):
+        path, fname = os.path.split(path)
+        reader = reader.option("pathGlobFilter", fname)
+    return reader.parquet(path)
+
+
+def _await_drain(q, what: str) -> None:
+    """Wait for an ``availableNow`` query to finish.  awaitTermination
+    (timeout) returns False on timeout with the query STILL RUNNING —
+    returning then would hand back a partial result and let the caller
+    delete or reuse the checkpoint under it (r3 ADVICE).  Stop and
+    raise."""
+    if not q.awaitTermination(600):
+        q.stop()
+        raise TimeoutError(f"{what}: availableNow drain did not complete within 600 s")
+
+
+def _drain(start, what: str) -> None:
+    """Run ``start(checkpoint_dir)`` — which starts an ``availableNow``
+    query — on a fresh checkpoint that is deleted afterwards, and wait
+    for the drain.  tmpfs for the checkpoint: the commit log is many
+    tiny fsync'd writes — on the VM disk they dominate the drain wall."""
+    ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    with tempfile.TemporaryDirectory(prefix="drain-ckpt-", dir=ckpt_base) as ckpt:
+        _await_drain(start(ckpt), what)
 
 
 def fetch_log_stream(spark: SparkSession, store_root: str) -> DataFrame:
@@ -73,19 +109,8 @@ def stream_windowed_counts(
     order (no watermark-dependent late-data drops; watermarks matter
     for unbounded streams — this surface certifies the stateful
     streaming plan itself)."""
-    import os
-    import uuid
-
-    batch_schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(batch_schema)
-    if os.path.isfile(path):
-        # the file stream source requires a directory basePath: stream
-        # the parent dir with a glob pinned to this one file
-        base, fname = os.path.split(path)
-        reader = reader.option("pathGlobFilter", fname)
-        path = base
     agg = (
-        reader.parquet(path)
+        _parquet_stream(spark, path)
         .groupBy(F.window(F.col(ts_col), window).alias("win"), F.col(key_col))
         .agg(F.count("*").alias("n"))
         .select(
@@ -93,21 +118,15 @@ def stream_windowed_counts(
         )
     )
     name = f"swc_{uuid.uuid4().hex[:8]}"
-    import tempfile
-
-    # tmpfs for the checkpoint: the commit log is many tiny fsync'd
-    # writes — on the VM disk they dominate the drain wall
-    ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    with tempfile.TemporaryDirectory(prefix="swc-ckpt-", dir=ckpt_base) as ckpt:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
+    _drain(
+        lambda ckpt: agg.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start(),
+        "stream_windowed_counts",
+    )
     return spark.table(name)
 
 
@@ -156,12 +175,5 @@ def stream_windowed_counts_watermarked(
         .trigger(availableNow=True)
         .start()
     )
-    # awaitTermination(timeout) returns False on timeout with the query
-    # STILL RUNNING — returning then would let a second drain against
-    # the same checkpoint race this one (r3 ADVICE).  Stop and raise.
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "stream_windowed_counts_watermarked: availableNow drain did not "
-            "complete within 600 s"
-        )
+    # a second drain against the same checkpoint must not race this one
+    _await_drain(q, "stream_windowed_counts_watermarked")

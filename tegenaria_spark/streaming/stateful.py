@@ -22,6 +22,8 @@ import pyspark.sql.functions as F  # noqa: F401  (callers compose with it)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from tegenaria_spark.streaming.rounds import _drain, _parquet_stream
+
 
 def stream_running_counts(
     spark: SparkSession,
@@ -37,17 +39,9 @@ def stream_running_counts(
     results from the memory sink: because counts are cumulative, the
     final value per key is ``max(n)`` regardless of how many
     micro-batches the file source split the input into."""
-    import os
-
     import pandas as pd
 
-    batch_schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(batch_schema)
-    if os.path.isfile(path):
-        base, fname = os.path.split(path)
-        reader = reader.option("pathGlobFilter", fname)
-        path = base
-    sdf = reader.parquet(path)
+    sdf = _parquet_stream(spark, path)
 
     def update(key, pdfs, state: GroupState):
         total = state.get[0] if state.exists else 0
@@ -91,15 +85,11 @@ def stream_running_counts_drained(
     the GroupState path's driver-contract surface (its totals must
     equal the batch ``groupBy(key).count()``, whatever micro-batch
     split the file source chose)."""
-    import os
-    import tempfile
     import uuid
 
     name = f"src_{uuid.uuid4().hex[:8]}"
-    ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    with tempfile.TemporaryDirectory(prefix="src-ckpt-", dir=ckpt_base) as ckpt:
-        q = stream_running_counts(spark, path, key_col, ckpt, query_name=name)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("stateful stream did not drain within 600 s")
+    _drain(
+        lambda ckpt: stream_running_counts(spark, path, key_col, ckpt, query_name=name),
+        "stream_running_counts_drained",
+    )
     return final_counts(spark, name)

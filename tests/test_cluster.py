@@ -72,17 +72,25 @@ def test_cc_matches_union_find(spark, case):
 
 
 def test_cc_long_chain_converges(spark):
-    # 64-node path graph: diameter 63.  Min-label propagation would need
-    # ~63 rounds; the alternating algorithm must finish in <= 30.
+    # 64-node path graph: diameter 63.  The default path answers it with
+    # the driver union-find; driver_max_edges=0 forces the distributed
+    # large-star/small-star loop (edge sets above the driver cap), where
+    # min-label propagation would need ~63 rounds — it must finish in <= 30.
     n = 64
     edges = [(i, i + 1) for i in range(n - 1)]
     comp = _spark_components(spark, n, edges)
     assert set(comp.values()) == {0}
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    loop = connected_components(pairs, "doc_a", "doc_b", max_iter=30, driver_max_edges=0)
+    assert {r.node: r.component for r in loop.collect()} == comp
 
 
 def test_cc_empty_and_self_loops(spark):
     comp = _spark_components(spark, 5, [(2, 2), (3, 3)])
     assert comp == {i: i for i in range(5)}
+    pairs = spark.createDataFrame([(2, 2), (3, 3)], "doc_a long, doc_b long")
+    for driver_max_edges in (1_000_000, 0):  # default path, forced loop
+        assert connected_components(pairs, "doc_a", "doc_b", driver_max_edges=driver_max_edges).isEmpty()
 
 
 def test_cc_string_nodes(spark):
@@ -90,8 +98,9 @@ def test_cc_string_nodes(spark):
         [("img-b", "img-a"), ("img-c", "img-b"), ("img-x", "img-y")],
         "doc_a string, doc_b string",
     )
-    cc = {r.node: r.component for r in connected_components(pairs, "doc_a", "doc_b").collect()}
-    assert cc == {
-        "img-a": "img-a", "img-b": "img-a", "img-c": "img-a",
-        "img-x": "img-x", "img-y": "img-x",
-    }
+    for driver_max_edges in (1_000_000, 0):  # default path, forced loop
+        cc = connected_components(pairs, "doc_a", "doc_b", driver_max_edges=driver_max_edges)
+        assert {r.node: r.component for r in cc.collect()} == {
+            "img-a": "img-a", "img-b": "img-a", "img-c": "img-a",
+            "img-x": "img-x", "img-y": "img-x",
+        }

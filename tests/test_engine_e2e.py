@@ -113,6 +113,52 @@ def test_crawl_terminates_and_dedups(spark, tmp_store_dir):
     assert sum(rr.n_new for rr in summary.rounds) > 0
 
 
+def test_log_outcomes_keeps_every_counter(spark, tmp_store_dir):
+    """``log_outcomes`` picks which outcomes get fetch_log rows; every
+    outcome is still counted (config.py: production keeps the aggregate
+    metrics).  A crawl that logs only fetches must report, per round, the
+    outcome counts of the simulator's full log — the log a crawl with
+    the default config writes (test_parity) — in its markers, its
+    metrics table and RoundResult."""
+    import dataclasses
+    from collections import Counter
+
+    from tegenaria_spark.plans.simulator import simulate_crawl
+
+    site = SiteConfig(n_domains=2, pages_per_domain=8)
+    seeds = seed_urls(site, n_seeds=10)
+    budgets = domain_budgets(site, 2)  # rounds defer; seed dups + link cycles drop
+    cfg = dataclasses.replace(CFG, log_outcomes=("fetched",))
+    sim = simulate_crawl(seeds, site, cfg, budgets=budgets, max_rounds=1)
+    # the seeds' gate logs its round-0 dups/invalids outside any round's counters
+    want = Counter(
+        (t[0], t[6])
+        for t in sim.fetch_log
+        if not (t[6] in ("dup_dropped", "invalid") and t[1] < cfg.seq_stride)
+    )
+    assert sum(n for (_, o), n in want.items() if o == "dup_dropped") > 0
+    assert sum(n for (_, o), n in want.items() if o == "deferred") > 0
+
+    store = LocalSnapshotStore(tmp_store_dir, spark)
+    summary = CrawlEngine(spark, store, site, cfg, budget_rows=budgets).run(seeds, max_rounds=1)
+    assert [rr.round_no for rr in summary.rounds] == [0]
+    for rr in summary.rounds:
+        counts = {o: n for (r, o), n in want.items() if r == rr.round_no}
+        outcomes = store._marker(rr.round_no + 1)["stats"]["outcomes"]
+        assert {o: n for o, n in outcomes.items() if not o.startswith("_")} == counts
+        assert (rr.n_fetched, rr.n_failed, rr.n_dup, rr.n_deferred, rr.n_blocked) == tuple(
+            counts.get(o, 0) for o in ("fetched", "failed", "dup_dropped", "deferred", "robots_blocked")
+        )
+    metrics = {
+        (r["round"], r["metric"][len("outcome_"):]): r["value"]
+        for r in store.read_log("metrics").collect()
+        if r["metric"].startswith("outcome_")
+    }
+    assert metrics == want
+    logged = sorted((r["round"], r["seq"], r["outcome"]) for r in store.read_log("fetch_log").collect())
+    assert logged == sorted((t[0], t[1], t[6]) for t in sim.fetch_log if t[6] == "fetched")
+
+
 def test_resume_from_snapshot(spark, tmp_store_dir):
     """Q7/north_rule: kill after round k, resume, final state identical
     to an uninterrupted run.  bloom_min_seen=1 makes the prefilter gate

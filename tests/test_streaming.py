@@ -5,12 +5,14 @@ from __future__ import annotations
 import tempfile
 
 import pyspark.sql.functions as F
+import pytest
 
 from tegenaria_spark.config import EngineConfig
 from tegenaria_spark.plans.engine import CrawlEngine
 from tegenaria_spark.sources.store import LocalSnapshotStore
 from tegenaria_spark.sources.synth import SiteConfig, seed_urls
-from tegenaria_spark.streaming.rounds import stream_fetch_log_metrics
+from tegenaria_spark.streaming.rounds import stream_fetch_log_metrics, stream_windowed_counts
+from tegenaria_spark.streaming.stateful import stream_running_counts_drained
 
 CFG = EngineConfig(shuffle_partitions=4)
 
@@ -130,3 +132,28 @@ def test_watermarked_late_data_dropped(spark, tmp_store_dir):
         final[key] = r.n
     assert final[("2026-01-01T00:00:00", "a")] == 2  # late event NOT counted
     assert final[("2026-01-01T02:00:00", "a")] == 1  # hour-2 finalized by batch 2
+
+
+@pytest.mark.parametrize(
+    "drain",
+    [
+        lambda spark, path: stream_windowed_counts(spark, path),
+        lambda spark, path: stream_running_counts_drained(spark, path, "event_type"),
+    ],
+    ids=["windowed", "running"],
+)
+def test_drain_timeout_stops_query_and_raises(spark, monkeypatch, tmp_path, drain):
+    """awaitTermination(timeout) returns False with the query still
+    running: a drain must stop it and raise, never hand back a partial
+    table while its deleted checkpoint is still in use."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    path = str(tmp_path / "events")
+    spark.createDataFrame(
+        [("2024-01-01 00:00:00", "view"), ("2024-01-02 00:00:00", "click")],
+        "ts string, event_type string",
+    ).select(F.to_timestamp("ts").alias("ts"), "event_type").write.parquet(path)
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
+    with pytest.raises(TimeoutError):
+        drain(spark, path)
+    assert not spark.streams.active

@@ -104,13 +104,17 @@ def test_ngram_jaccard_short_texts(spark):
 def test_minhash_lsh_finds_near_dups(spark, docs):
     from tegenaria_spark.operators.textdedup import minhash_lsh_pairs
 
-    pairs = {
-        (r["doc_a"], r["doc_b"]): r["est_jaccard"]
-        for r in minhash_lsh_pairs(docs, n_perm=64, n_bands=16, threshold=0.5).collect()
-    }
-    assert pairs.get((0, 1)) == 1.0  # identical docs: all minhashes agree
-    assert (0, 2) in pairs  # near dup found via shared band
-    assert (3, 4) not in pairs
+    def pairs(**kw):
+        out = minhash_lsh_pairs(docs, n_perm=64, n_bands=16, threshold=0.5, **kw)
+        return {(r["doc_a"], r["doc_b"]): r["est_jaccard"] for r in out.collect()}
+
+    default = pairs()
+    assert default.get((0, 1)) == 1.0  # identical docs: all minhashes agree
+    assert (0, 2) in default  # near dup found via shared band
+    assert (3, 4) not in default
+    # broadcast_max_docs=0 forces the codegen verify (corpora above the
+    # broadcast cap): same pairs, same estimates
+    assert pairs(broadcast_max_docs=0) == default
 
 
 def test_simhash_near_pairs(spark, docs):
