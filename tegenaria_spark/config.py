@@ -53,10 +53,9 @@ class EngineConfig:
     # let dynamic scheduling even the load.  A property of the DATA/plan,
     # so hold it fixed when comparing cluster sizes.
     fetch_partitions: int = 0
-    # frontier/url_seen hash-bucket count (the store's manifest
-    # granularity: commit rewrites only changed buckets).  Scale with
-    # frontier size — at 10^10 URLs use O(10^4) buckets so a bucket is
-    # ~10 MB-scale; the sandbox default keeps file counts small.
+    # hash-bucket count for LocalSnapshotStore(fp_buckets=): the url_seen
+    # compaction writes fp_buckets // 4 fp-hashed partitions.  Scale with
+    # url_seen size; the sandbox default keeps file counts small.
     fp_buckets: int = 16
 
     # --- arrow batching (keeps a partition of images in executor memory)

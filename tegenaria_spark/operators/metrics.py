@@ -16,10 +16,8 @@ from pyspark.sql import DataFrame
 
 def counter_rows(fetch_log: DataFrame) -> DataFrame:
     """The tiny aggregate behind :func:`parse_counter_rows` — kept as a
-    DataFrame so the engine can union it with other per-round side
-    aggregates and collect everything in ONE driver job (each separate
-    ``collect()`` is a full job-scheduling round-trip of per-round
-    constant time that scaling cannot amortize)."""
+    DataFrame so the engine can hand its collect to a helper thread that
+    overlaps the previous round's commit."""
     return fetch_log.groupBy(
         "outcome",
         F.col("status"),

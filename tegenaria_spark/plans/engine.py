@@ -103,18 +103,10 @@ def _pin(pins: list, df: DataFrame, disk: bool = False) -> DataFrame:
     return out
 
 
-def _side_facts(side_df: DataFrame) -> tuple[dict, dict, list[int]]:
-    """Collect a round's side aggregate in one job and fold it into
-    (outcome counts, status counts, changed fp-buckets)."""
-    rows = side_df.collect()
-    counts, status = parse_counter_rows(
-        [
-            {"outcome": x["s"], "status": x["i"], "_disallowed": x["flag"], "count": x["n"]}
-            for x in rows
-            if x["kind"] == "ctr"
-        ]
-    )
-    return counts, status, [int(x["i"]) for x in rows if x["kind"] == "bucket"]
+def _side_facts(side_df: DataFrame) -> tuple[dict, dict]:
+    """Collect a round's ``counter_rows`` aggregate in one job and fold
+    it into (outcome counts, status counts)."""
+    return parse_counter_rows(side_df.collect())
 
 
 def _log_rows(df: DataFrame, round_no: int, outcome: str) -> DataFrame:
@@ -210,14 +202,6 @@ class CrawlEngine:
         self.store = store
         self.site = site
         self.cfg = cfg
-        # the changed-bucket set (_compute_round) and the store's frontier
-        # layout hash fp with the SAME modulus, or write_frontier's
-        # `_fb.isin(changed)` filter silently drops rows — fail loudly
-        if store.fp_buckets != cfg.fp_buckets:
-            raise ValueError(
-                f"store.fp_buckets={store.fp_buckets} != cfg.fp_buckets="
-                f"{cfg.fp_buckets}; pass cfg.fp_buckets to LocalSnapshotStore"
-            )
         # None ⇒ schedule_round skips the robots join (no rules at all)
         self.robots = (
             spark.createDataFrame(robots_rows, ROBOTS_SCHEMA) if robots_rows else None
@@ -264,29 +248,29 @@ class CrawlEngine:
             seeds = seed_rows.withColumn("next_fetch_time", round_ts_expr(0, cfg)).select(
                 *FRONTIER_COLS
             )
-            n_seeds = -1
         else:
             ts0 = datetime.fromtimestamp(cfg.epoch_ms / 1000, tz=timezone.utc)
             seeds = self.spark.createDataFrame(
                 [{**r, "next_fetch_time": ts0} for r in seed_rows], FRONTIER_SCHEMA
             )
-            n_seeds = len(seed_rows)
         pins: list[DataFrame] = []
         fresh, dups, invalid, seen = self._gate(
             -1, seeds, self.store.read_url_seen(-1), partial(_pin, pins)
         )
-        fetch_log = (
-            _log_rows(dups, 0, "dup_dropped")
-            .unionByName(_log_rows(invalid, 0, "invalid"))
-            .filter(F.col("outcome").isin(*cfg.log_outcomes))
+        # counted in full, logged per cfg.log_outcomes — as in a round;
+        # the count job overlaps the commit's table writes
+        outcomes = _log_rows(dups, 0, "dup_dropped").unionByName(
+            _log_rows(invalid, 0, "invalid")
         )
-        self.store.commit_round(
-            0,
-            fresh.select(*STATE_COLS),
-            seen,
-            {"fetch_log": fetch_log},
-            {"phase": "bootstrap", "n_seeds": n_seeds},
-        )
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            side = pool.submit(_side_facts, counter_rows(outcomes))
+            self.store.commit_round(
+                0,
+                fresh.select(*STATE_COLS),
+                seen,
+                {"fetch_log": outcomes.filter(F.col("outcome").isin(*cfg.log_outcomes))},
+                lambda: {"phase": "bootstrap", "outcomes": side.result()[0]},
+            )
         for df in pins:
             df.unpersist()
 
@@ -429,42 +413,11 @@ class CrawlEngine:
         fetch_log = outcomes.filter(F.col("outcome").isin(*cfg.log_outcomes))
         mark("dedup_log")
 
-        # the round's driver-side side facts (outcome counters + changed-
-        # bucket set) fold into ONE aggregation job — two stages with no
-        # dependency, scheduled in parallel inside a single collect —
+        # the round's driver-side outcome counters: one aggregation job,
         # submitted to the run's executor so it overlaps the previous
         # round's commit; the item count is NOT a job at all (it falls
-        # out of the items write's parquet footers inside the commit).
-        # commit I/O ∝ churn: only fp-buckets touched this round rewrite
-        # (ready rows left/changed; fresh/retry rows entered) — sleeping
-        # buckets carry over by manifest reference
-        ready_fps = decided.filter(F.col("sched") != "sleeping").select("fp")
-        bucket_df = (
-            ready_fps.unionByName(fresh.select("fp"))
-            .select(
-                # store.fp_buckets == cfg.fp_buckets (asserted in __init__);
-                # the store's modulus is the layout's source of truth
-                F.pmod(F.col("fp"), F.lit(self.store.fp_buckets))
-                .cast("int")
-                .alias("b")
-            )
-            .distinct()
-        )
-        side_df = counter_rows(outcomes).select(
-            F.lit("ctr").alias("kind"),
-            F.col("outcome").alias("s"),
-            F.col("status").cast("int").alias("i"),
-            F.col("_disallowed").alias("flag"),
-            F.col("count").alias("n"),
-        ).unionByName(
-            bucket_df.select(
-                F.lit("bucket").alias("kind"),
-                F.lit(None).cast("string").alias("s"),
-                F.col("b").alias("i"),
-                F.lit(None).cast("boolean").alias("flag"),
-                F.lit(None).cast("long").alias("n"),
-            )
-        )
+        # out of the items write's parquet footers inside the commit)
+        side_df = counter_rows(outcomes)
         mark("counts")
         return _RoundWork(
             round_no=r,
@@ -485,7 +438,7 @@ class CrawlEngine:
         r = work.round_no
 
         def _metrics_fn(partial_counts: dict):
-            counts, status, _ = work.side.result()
+            counts, status = work.side.result()
             # (rows, schema): the store writes this driver-built table
             # with pyarrow directly — no Spark job (r6, store.py
             # _write_local_parquet)
@@ -501,7 +454,6 @@ class CrawlEngine:
                 work.seen_delta,
                 {"items": work.items, "fetch_log": work.fetch_log},
                 lambda: {"phase": "round", "round": r, "outcomes": work.side.result()[0]},
-                frontier_changed_buckets=lambda: work.side.result()[2],
                 deferred_logs={"metrics": _metrics_fn},
             )
 

@@ -12,25 +12,23 @@ what Iceberg's catalog would provide; swap ``LocalSnapshotStore`` for an
 Iceberg writer and nothing above this module changes):
 
     root/
-      state/frontier/v{r}/_fb={b}/  CHANGED fp-buckets of the frontier as
-                                    of end of round r; unchanged buckets
-                                    are carried by manifest reference to
-                                    their last-written version (Iceberg-
-                                    manifest style: commit I/O scales
-                                    with frontier CHURN, not size)
+      state/frontier/v{r}/          the whole frontier as of end of round
+                                    r, rewritten every round: each
+                                    version stands alone, so expiring
+                                    v{<r} is a plain directory delete
       state/url_seen/v{r}/          append-only delta per round
       state/url_seen_base/v{r}/     periodic compaction of deltas ≤ r
                                     (read = newest base + later deltas)
       logs/{items,fetch_log,metrics,lineage}/r{r}/
       commits/round-{r}.json        written LAST — the atomic commit
-                                    marker; carries the frontier bucket
-                                    manifest {bucket: {path, rows}}
+                                    marker (stats, row counts, paths)
 
 A round is visible iff its marker exists; crash mid-round leaves
 orphan data dirs that the next run ignores and overwrites.  With real
-Iceberg, the bucket manifest becomes row-level MERGE on a
-``bucket(fp)`` partition spec and compaction becomes snapshot
-expiration — the fallback keeps the same read/write API.
+Iceberg, the frontier becomes one table whose snapshots share unchanged
+data files through the manifest list (so commit I/O could follow churn
+via row-level MERGE), and compaction plus old-version deletes become
+snapshot expiration — the fallback keeps the same read/write API.
 
 HARD CONSTRAINT (recorded per r2 VERDICT #8): no Iceberg/Delta jars
 ship in this environment (no network, no ``--packages``), so the real
@@ -74,11 +72,9 @@ import time
 import uuid
 from typing import Optional
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from tegenaria_spark.schemas import (
-    FRONTIER_SCHEMA,
     FRONTIER_STATE_SCHEMA,
     LINEAGE_SCHEMA,
     URL_SEEN_SCHEMA,
@@ -140,11 +136,6 @@ class LocalSnapshotStore:
         with open(path) as fh:
             return json.load(fh)
 
-    def frontier_manifest(self, r: int) -> Optional[dict]:
-        """{bucket(str): {"path": dir, "rows": n}} as committed at round r."""
-        m = self._marker(r)
-        return None if m is None else m.get("frontier_manifest")
-
     @staticmethod
     def _write_local_parquet(rows: list[tuple], schema, path: str) -> int:
         """Driver-local parquet write for TINY driver-built tables
@@ -193,17 +184,16 @@ class LocalSnapshotStore:
 
     @staticmethod
     def _scan_parts(path: str) -> list[tuple[str, int]]:
-        """(file, num_rows) for every parquet part under *path* (recursive
-        for partitioned layouts) — a pure footer/metadata read, zero
-        Spark jobs (the manifest scan Iceberg would give us)."""
+        """(file, num_rows) for every parquet part in *path* — a pure
+        footer/metadata read, zero Spark jobs (the manifest scan Iceberg
+        would give us)."""
         import pyarrow.parquet as pq
 
         out = []
-        for dirpath, _dirs, files in os.walk(path):
-            for f in sorted(files):
-                if f.startswith("part-") and f.endswith(".parquet"):
-                    full = os.path.join(dirpath, f)
-                    out.append((full, int(pq.ParquetFile(full).metadata.num_rows)))
+        for f in sorted(os.listdir(path)):
+            if f.startswith("part-") and f.endswith(".parquet"):
+                full = os.path.join(path, f)
+                out.append((full, int(pq.ParquetFile(full).metadata.num_rows)))
         return out
 
     def commit_round(
@@ -213,20 +203,9 @@ class LocalSnapshotStore:
         url_seen_delta: DataFrame,
         logs: dict[str, DataFrame],
         stats: dict,
-        frontier_changed_buckets: Optional[list[int]] = None,
         deferred_logs: Optional[dict] = None,
     ) -> tuple[str, dict[str, int]]:
         """Write state + appends, then the marker.
-
-        ``frontier_changed_buckets``: fp-buckets whose rows changed this
-        round.  Only those buckets rewrite (partitioned by ``_fb``);
-        unchanged buckets are carried into the new manifest by reference
-        to their previously-written files — commit I/O scales with
-        frontier churn, not frontier size.  ``None`` ⇒ full rewrite
-        (bootstrap, or a caller without churn tracking).  May also be a
-        zero-arg callable returning the list: only the frontier writer
-        thread blocks on it, so the caller can overlap the bucket-set
-        job with the other table writes.
 
         ``deferred_logs``: {name: fn(table_counts) -> (rows, schema)} —
         small driver-built append tables derived from the OTHER tables'
@@ -237,7 +216,7 @@ class LocalSnapshotStore:
         footer-based counts accumulated so far.
 
         Returns ``(snapshot_id, row_counts_per_table)`` — counts fall out
-        of the footer/manifest pass, so callers never need a count job.
+        of the footer pass, so callers never need a count job.
 
         Raises :class:`CommitConflictError` if another live writer has
         claimed round *r* or a marker for it already exists — before
@@ -253,7 +232,6 @@ class LocalSnapshotStore:
                 url_seen_delta,
                 logs,
                 stats,
-                frontier_changed_buckets,
                 deferred_logs,
             )
         finally:
@@ -331,11 +309,9 @@ class LocalSnapshotStore:
         url_seen_delta: DataFrame,
         logs: dict[str, DataFrame],
         stats: dict,
-        frontier_changed_buckets=None,
         deferred_logs: Optional[dict] = None,
     ) -> tuple[str, dict[str, int]]:
         lineage_rows = []
-        manifest: dict[str, dict] = {}
 
         write_times: dict[str, float] = {}
         max_files = int(os.environ.get("TEGENARIA_COMMIT_MAX_FILES", "16"))
@@ -357,10 +333,14 @@ class LocalSnapshotStore:
             if df.rdd.getNumPartitions() > max_files:
                 df = df.coalesce(max_files)
             writer = df.write.mode("overwrite")
-            if any(isinstance(f.dataType, BinaryType) for f in df.schema.fields):
-                # payload tables (image bytes) are ALREADY compressed
+            if table == "items" and any(
+                isinstance(f.dataType, BinaryType) for f in df.schema.fields
+            ):
+                # the items payload (image bytes) is ALREADY compressed
                 # (PNG/JPEG) — snappy on top re-compresses incompressible
-                # data: pure CPU burn on the commit path's biggest table
+                # data: pure CPU burn on the commit path's biggest table.
+                # The frontier's `body` column is a request body and
+                # compresses like any other column.
                 writer = writer.option("compression", "uncompressed")
             writer.parquet(path)
             write_times[table] = round(time.time() - _t0, 2)
@@ -371,59 +351,15 @@ class LocalSnapshotStore:
             with _lineage_lock:
                 lineage_rows.extend(rows)
 
-        def write_frontier() -> None:
-            _t0 = time.time()
-            path = self._state_path("frontier", r)
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            df = frontier.withColumn(
-                "_fb", F.pmod(F.col("fp"), F.lit(self.fp_buckets)).cast("int")
-            )
-            carried: dict[str, dict] = {}
-            changed_list = (
-                frontier_changed_buckets()
-                if callable(frontier_changed_buckets)
-                else frontier_changed_buckets
-            )
-            if changed_list is not None:
-                prev = self.frontier_manifest(r - 1) or {}
-                changed = {int(b) for b in changed_list}
-                df = df.filter(F.col("_fb").isin(*changed) if changed else F.lit(False))
-                carried = {b: m for b, m in prev.items() if int(b) not in changed}
-            if df.rdd.getNumPartitions() > max_files:
-                df = df.coalesce(max_files)
-            df.write.mode("overwrite").partitionBy("_fb").parquet(path)
-            write_times["frontier"] = round(time.time() - _t0, 2)
-
-            rows = []
-            pid = 0
-            for entry in sorted(os.listdir(path)):
-                if not entry.startswith("_fb="):
-                    continue
-                bdir = os.path.join(path, entry)
-                parts = self._scan_parts(bdir)
-                n_bucket = sum(n for _f, n in parts)
-                manifest[entry[len("_fb=") :]] = {"path": bdir, "rows": n_bucket}
-                for _f, n in parts:
-                    rows.append((r, "frontier", pid, snapshot_id, n))
-                    pid += 1
-            manifest.update(carried)
-            # carried buckets appear in lineage as references (rows
-            # counted, partition id continues) so per-partition
-            # provenance covers the whole table, not just the rewrite
-            for b in sorted(carried, key=int):
-                rows.append((r, "frontier", pid, snapshot_id, int(carried[b]["rows"])))
-                pid += 1
-            with _lineage_lock:
-                lineage_rows.extend(rows)
-
         # concurrent writes: Spark schedules jobs from multiple driver
         # threads, so commit wall time is the slowest table, not the sum
-        jobs = [(url_seen_delta, self._state_path("url_seen", r), "url_seen")]
+        jobs = [
+            (frontier, self._state_path("frontier", r), "frontier"),
+            (url_seen_delta, self._state_path("url_seen", r), "url_seen"),
+        ]
         jobs += [(df, self._log_path(name, r), name) for name, df in logs.items()]
-        with ThreadPoolExecutor(max_workers=len(jobs) + 1) as pool:
-            futures = [pool.submit(write_frontier)]
-            futures += [pool.submit(write, *j) for j in jobs]
+        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+            futures = [pool.submit(write, *j) for j in jobs]
             for f in futures:
                 f.result()
         if deferred_logs:
@@ -456,7 +392,6 @@ class LocalSnapshotStore:
                 "frontier": self._state_path("frontier", r),
                 "url_seen_delta": self._state_path("url_seen", r),
             },
-            "frontier_manifest": manifest,
         }
         table_counts: dict[str, int] = {}
         for _, table, _, _, n in lineage_rows:
@@ -516,16 +451,15 @@ class LocalSnapshotStore:
     # -- reads ---------------------------------------------------------------
 
     def read_frontier(self, r: int) -> DataFrame:
-        """Frontier state at end of round r via the commit manifest
-        (changed buckets from v{r}, carried buckets from their
-        last-written version)."""
-        manifest = self.frontier_manifest(r)
-        if manifest is None:
+        """Frontier state at end of round r: the snapshot ``v{r}`` alone."""
+        m = self._marker(r)
+        if m is None:
             raise FileNotFoundError(f"no committed frontier for round {r}")
-        paths = [m["path"] for m in manifest.values() if m.get("rows", 0) > 0]
-        if not paths:
+        if not m["row_counts"].get("frontier", 0):
             return self.spark.createDataFrame([], FRONTIER_STATE_SCHEMA)
-        return self.spark.read.schema(FRONTIER_STATE_SCHEMA).parquet(*paths)
+        return self.spark.read.schema(FRONTIER_STATE_SCHEMA).parquet(
+            self._state_path("frontier", r)
+        )
 
     def read_url_seen(self, upto_round: int) -> DataFrame:
         base = self._latest_seen_base(upto_round)

@@ -130,7 +130,8 @@ def test_log_outcomes_keeps_every_counter(spark, tmp_store_dir):
     budgets = domain_budgets(site, 2)  # rounds defer; seed dups + link cycles drop
     cfg = dataclasses.replace(CFG, log_outcomes=("fetched",))
     sim = simulate_crawl(seeds, site, cfg, budgets=budgets, max_rounds=1)
-    # the seeds' gate logs its round-0 dups/invalids outside any round's counters
+    # the seeds' gate logs its round-0 dups/invalids in the bootstrap's
+    # commit, outside any round's counters
     want = Counter(
         (t[0], t[6])
         for t in sim.fetch_log
@@ -140,7 +141,8 @@ def test_log_outcomes_keeps_every_counter(spark, tmp_store_dir):
     assert sum(n for (_, o), n in want.items() if o == "deferred") > 0
 
     store = LocalSnapshotStore(tmp_store_dir, spark)
-    summary = CrawlEngine(spark, store, site, cfg, budget_rows=budgets).run(seeds, max_rounds=1)
+    engine = CrawlEngine(spark, store, site, cfg, budget_rows=budgets)
+    summary = engine.run(seeds, max_rounds=1)
     assert [rr.round_no for rr in summary.rounds] == [0]
     for rr in summary.rounds:
         counts = {o: n for (r, o), n in want.items() if r == rr.round_no}
@@ -155,6 +157,9 @@ def test_log_outcomes_keeps_every_counter(spark, tmp_store_dir):
         if r["metric"].startswith("outcome_")
     }
     assert metrics == want
+    # the totals over every commit, the bootstrap's included, are the full log's
+    totals = {o: n for o, n in engine.status()["outcome_totals"].items() if not o.startswith("_")}
+    assert totals == Counter(t[6] for t in sim.fetch_log)
     logged = sorted((r["round"], r["seq"], r["outcome"]) for r in store.read_log("fetch_log").collect())
     assert logged == sorted((t[0], t[1], t[6]) for t in sim.fetch_log if t[6] == "fetched")
 

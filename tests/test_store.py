@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 
@@ -76,6 +77,18 @@ def test_lineage_counts_match_rows(spark, tmp_store_dir):
         by_table[r["table"]] = by_table.get(r["table"], 0) + r["n_rows"]
     assert by_table["frontier"] == 100
     assert by_table["url_seen"] == 100
+
+    # each frontier version is one self-contained snapshot: no bucket
+    # dirs, no manifest, and no reference to an older version
+    store.commit_round(1, _seen(spark, list(range(50, 150))), _seen(spark, [100], rnd=1), {}, {})
+    assert not [d for d in os.listdir(store._state_path("frontier", 1)) if d.startswith("_fb=")]
+    assert set(store._marker(1)) == {
+        "round", "snapshot_id", "stats", "tables", "row_counts", "write_times"
+    }
+    before = sorted(r["fp"] for r in store.read_frontier(1).collect())
+    assert before == list(range(50, 150))
+    shutil.rmtree(store._state_path("frontier", 0))
+    assert sorted(r["fp"] for r in store.read_frontier(1).collect()) == before
 
 
 def test_multi_writer_commit_is_exclusive(spark, tmp_store_dir):
@@ -208,18 +221,9 @@ def test_concurrent_reader_snapshot_isolation(spark, tmp_store_dir):
     t.start()
     try:
         for r in range(1, 5):
-            # each round commits a different frontier size; the changed-
-            # bucket path exercises manifest-carried buckets too
+            # each round commits a different frontier size
             store.commit_round(
-                r,
-                frontier_df(30 + 10 * r),
-                _seen(spark, [r], rnd=r),
-                {},
-                {"phase": "t"},
-                # subset: buckets 8-15 carry over by manifest REFERENCE
-                # to round r-1's immutable dirs — the reader must stay
-                # consistent across referenced generations too
-                frontier_changed_buckets=list(range(8)),
+                r, frontier_df(30 + 10 * r), _seen(spark, [r], rnd=r), {}, {"phase": "t"}
             )
     finally:
         stop.set()
