@@ -26,10 +26,16 @@ class EngineConfig:
     # optimal m,k math ported from utils.go:78-87).
     bloom_n: int = 1_048_576
     bloom_p: float = 0.001
-    bloom_enabled: bool = True
-    # below this seen-set size the anti-join alone is cheaper than the
-    # bloom prefilter's cogroup (the prefilter only pays off once the
-    # join side is big)
+    # opt-in: the exact url_seen anti-join runs alone by default.  The
+    # prefilter's verdicts only shrink the join's candidate side; the
+    # url_seen side is still scanned and shuffled in full, so no url_seen
+    # size makes it pay in this plan — it only adds a distinct, a cogroup,
+    # two semi/anti splits and a merge per round, plus a first-use build
+    # from all of url_seen.  Paired perfbench runs (local[4]) that changed
+    # only this default: cpu_s_per_url fell 17.6 % on crawl_links and 17 %
+    # on crawl_images, with identical crawls.
+    bloom_enabled: bool = False
+    # when enabled, the prefilter gates once url_seen holds this many fps
     bloom_min_seen: int = 4096
     # bitmap shards: one bloom bitmap per pmod(fp, B) bucket, built and
     # merged on executors (never on the driver).  At the 10^10 design

@@ -15,10 +15,10 @@ has false positives, so ground truth is a left-anti join against the
 ``pmod(fp, B)`` bucket, merged on executors from each round's url_seen
 delta and held in engine memory only, since url_seen rebuilds it) splits
 candidates into
-"definitely-new" (skip the join entirely — at crawl steady state the
-overwhelming majority) and "maybe-seen" (the only rows that shuffle
-into the anti-join).  False positives therefore cost speed, never
-correctness.
+"definitely-new" (skip the join) and "maybe-seen" (the only rows that
+take the anti-join).  False positives therefore cost speed, never
+correctness.  The join still reads its url_seen side in full, so the
+engine runs the prefilter only on request (``EngineConfig.bloom_enabled``).
 
 Within-batch duplicates (two outlinks to the same URL in one round) are
 resolved keep-first-by-enqueue_seq, which is exactly what the

@@ -14,8 +14,7 @@ Deterministic FIFO sequencing: new requests are ordered by
 reference's enqueue order — and assigned
 ``enqueue_seq = round·stride + rank`` via range-partition +
 ``zipWithIndex`` (distributed: one count job + per-partition offsets; no
-single-task global window, no nondeterministic
-``monotonically_increasing_id``)."""
+single-task global window)."""
 
 from __future__ import annotations
 
@@ -161,50 +160,28 @@ def run_parsers(ok: DataFrame, links_from: DataFrame) -> tuple[DataFrame, DataFr
 
 def assign_enqueue_seq(links: DataFrame, round_no: int, cfg: EngineConfig, pin) -> DataFrame:
     """Deterministic distributed sequence assignment (zipWithIndex
-    semantics, Arrow-only implementation).
+    semantics, one Catalyst expression).
 
     Total order = (parent_seq, pos) — unique keys, so the rank is
     independent of where range partitioning draws its boundaries.  Two
     passes over the pinned partitioning: (1) per-partition row counts →
-    cumulative offsets (O(partitions) driver state), (2) a mapInPandas
-    that adds ``offset[pid] + running_index``.  No single-task global
-    window, no RDD/pickle round-trip, no nondeterministic
-    ``monotonically_increasing_id``."""
-    ordered = (
+    cumulative offsets (O(partitions) driver state), (2) ``offset[pid] +
+    row index``, where the row index is ``monotonically_increasing_id()``
+    minus its partition base ``pid << 33``.  Spark calls that id
+    nondeterministic, but over a checkpointed block with no exchange
+    above it the partition ids and row order are fixed."""
+    ordered = pin(
         links.repartitionByRange(cfg.shuffle_partitions, F.col("parent_seq"), F.col("pos"))
         .sortWithinPartitions("parent_seq", "pos")
-        .withColumn("_pid", F.spark_partition_id())
     )
-    # pin the partitioning so both passes see identical pids; the
-    # caller's `pin` (an eager localCheckpoint) registers the block for
-    # unpersist at round end
-    ordered = pin(ordered)
-    counts = {
-        r["_pid"]: r["count"] for r in ordered.groupBy("_pid").count().collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    base = round_no * cfg.seq_stride
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in links.schema.fields
-    ) + ", enqueue_seq bigint"
-
-    def add_seq(batches):
-        local = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if local is None:
-                local = base + offsets[int(pdf["_pid"].iloc[0])]
-            pdf = pdf.drop(columns=["_pid"])
-            pdf["enqueue_seq"] = range(local, local + len(pdf))
-            local += len(pdf)
-            yield pdf
-
-    return ordered.mapInPandas(add_seq, schema=out_schema)
+    pid = F.spark_partition_id()
+    counts = dict(ordered.groupBy(pid).count().collect())
+    offsets, acc = [], round_no * cfg.seq_stride
+    for p in range(max(counts, default=0) + 1):
+        offsets.append(F.lit(acc).cast("long"))
+        acc += counts.get(p, 0)
+    row_index = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    return ordered.withColumn("enqueue_seq", F.get(F.array(*offsets), pid) + row_index)
 
 
 def links_to_candidates(links_with_seq: DataFrame, round_no: int, next_fetch_time_col) -> DataFrame:

@@ -23,7 +23,7 @@ the previous round's pinned delta, and seeds pass the same gate
 
 The only wide exchanges per round: the per-domain budget window, the
 salted fetch repartition, the new-link seq range-partition, and the
-dedup anti-join (bloom-pruned).  Scheduling scans never touch the
+dedup anti-join.  Scheduling scans never touch the
 binary image payload (column pruning keeps `bytes` out of every
 frontier read).
 """
@@ -83,8 +83,8 @@ STATE_COLS = FRONTIER_COLS + ["canon_url", "domain", "fp"]
 
 
 def _pin(pins: list, df: DataFrame, disk: bool = False) -> DataFrame:
-    """Eager localCheckpoint registered in *pins* for unpersist once the
-    round is committed — leaked checkpoint blocks otherwise accumulate
+    """Eager localCheckpoint registered in *pins* for ``_release`` once
+    the round is committed — leaked checkpoint blocks otherwise accumulate
     across rounds until storage eviction + GC churn wreck throughput.
 
     ``disk=True`` stores the blocks DISK_ONLY: the fetch output carries
@@ -101,6 +101,15 @@ def _pin(pins: list, df: DataFrame, disk: bool = False) -> DataFrame:
     )
     pins.append(out)
     return out
+
+
+def _release(pins: list) -> None:
+    """Free pinned checkpoint blocks.  ``DataFrame.unpersist()`` is a
+    no-op on a localCheckpoint frame (its plan is in no cache), so this
+    unpersists the checkpointed RDD itself; a later read of a released
+    pin fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, never recomputes."""
+    for df in pins:
+        df._jdf.queryExecution().logical().rdd().unpersist(True)
 
 
 def _side_facts(side_df: DataFrame) -> tuple[dict, dict]:
@@ -254,9 +263,7 @@ class CrawlEngine:
                 [{**r, "next_fetch_time": ts0} for r in seed_rows], FRONTIER_SCHEMA
             )
         pins: list[DataFrame] = []
-        fresh, dups, invalid, seen = self._gate(
-            -1, seeds, self.store.read_url_seen(-1), partial(_pin, pins)
-        )
+        fresh, dups, invalid, seen = self._gate(-1, seeds, self.store.read_url_seen(-1), pins)
         # counted in full, logged per cfg.log_outcomes — as in a round;
         # the count job overlaps the commit's table writes
         outcomes = _log_rows(dups, 0, "dup_dropped").unionByName(
@@ -271,24 +278,26 @@ class CrawlEngine:
                 {"fetch_log": outcomes.filter(F.col("outcome").isin(*cfg.log_outcomes))},
                 lambda: {"phase": "bootstrap", "outcomes": side.result()[0]},
             )
-        for df in pins:
-            df.unpersist()
+        _release(pins)
 
     # ------------------------------------------------------------------
 
-    def _gate(self, r: int, cand: DataFrame, url_seen: DataFrame, pin):
+    def _gate(self, r: int, cand: DataFrame, url_seen: DataFrame, pins: list):
         """The one URL-seen gate: seeds (``bootstrap``, r = -1) and each
         round's outlinks pass it.  Canonicalize + fingerprint, split off
         invalid URLs, drop fps already in *url_seen* (and duplicates
         within *cand*), and build the url_seen rows that round r commits
         as store round r + 1.  Returns (fresh, dups, invalid, seen_delta).
+        Eager pins go to *pins*, released once the round is committed.
 
-        The per-bucket filter (A5) is engine memory, never persisted:
-        built from *url_seen* the first time the prefilter gates (a fresh
-        engine and a resume take the same path), then merged with every
-        delta this gate produces — so once it exists it holds every fp
-        in url_seen."""
+        By default the exact anti-join runs alone (config.py,
+        ``bloom_enabled``).  The opt-in per-bucket filter (A5) is engine
+        memory, never persisted: built from *url_seen* the first time the
+        prefilter gates (a fresh engine and a resume take the same path),
+        then merged with every delta this gate produces — so once it
+        exists it holds every fp in url_seen."""
         cfg = self.cfg
+        pin = partial(_pin, pins)
         # cand feeds invalid-log, dup-log and fresh, which race as
         # concurrent commit jobs — pin EAGERLY, or two jobs racing a lazy
         # checkpoint both recompute the canonicalize UDF
@@ -314,7 +323,9 @@ class CrawlEngine:
             self._bloom_state = filter_merge_state(
                 old, delta, self._bloom_load
             ).localCheckpoint(eager=True)
-            old.unpersist()
+            # the lazy dups still read the old state through the verdicts
+            # until the round's outcomes (or the bootstrap's commit) run
+            pins.append(old)
         return fresh, dups, invalid, seen_delta
 
     def _compute_round(self, r: int, frontier: DataFrame, url_seen: DataFrame) -> "_RoundWork":
@@ -384,7 +395,7 @@ class CrawlEngine:
         mark("parse_seq")
         next_ts = round_ts_expr(r + 1, cfg)
         fresh, dups, invalid, seen_delta = self._gate(
-            r, links_to_candidates(links_seq, r, next_ts), url_seen, pin
+            r, links_to_candidates(links_seq, r, next_ts), url_seen, pins
         )
         retries = retry_candidates(failed, r, cfg, next_ts)
         new_frontier = reduce(
@@ -463,7 +474,7 @@ class CrawlEngine:
     def _finalize_round(self, work: "_RoundWork", wall_s: float) -> RoundResult:
         """Phase C: wait for the commit, compact url_seen every
         ``seen_compact_every`` rounds, build the RoundResult.  Pins are
-        NOT unpersisted here — ``run()`` frees them once the NEXT
+        NOT released here — ``run()`` frees them once the NEXT
         round's pins exist."""
         snapshot_id, table_counts = work.commit_fut.result()
         work.timings["commit"] = round(time.time() - work.commit_t0, 3)
@@ -495,8 +506,7 @@ class CrawlEngine:
         resume makes the discard invisible to parity.  The side job
         reads the pins, so it ends before they are freed."""
         wait([work.side])
-        for df in work.pins:
-            df.unpersist()
+        _release(work.pins)
 
     def run(
         self,
@@ -553,8 +563,7 @@ class CrawlEngine:
             self.events.emit(ev.ROUND_END, round_no=result.round_no, result=result)
             # safe to free now: the commit is done and the NEXT round's
             # pins (if any) were materialized before this call
-            for df in pending.pins:
-                df.unpersist()
+            _release(pending.pins)
             pending = None
 
         try:

@@ -174,7 +174,7 @@ def test_resume_from_snapshot(spark, tmp_store_dir):
     seeds = seed_urls(site, n_seeds=6)
     cfg = EngineConfig(
         shuffle_partitions=4, bloom_n=100_000, fetch_partitions=4,
-        bloom_min_seen=1, seen_compact_every=1,
+        bloom_enabled=True, bloom_min_seen=1, seen_compact_every=1,
     )
 
     import os
@@ -223,6 +223,59 @@ def test_resume_from_snapshot(spark, tmp_store_dir):
         assert sorted(os.listdir(os.path.join(store.root, "state"))) == [
             "frontier", "url_seen", "url_seen_base",
         ]
+
+
+def test_prefilter_fork_crawls_identically(spark, tmp_store_dir):
+    """The URL-seen gate's two branches: the default exact anti-join
+    alone, and the opt-in bloom prefilter gating from the seeds on
+    (``bloom_min_seen=0``).  The prefilter is exact, so three rounds of
+    the same crawl must log, register and leave behind the same rows;
+    only the opt-in engine ever builds filter state."""
+    import dataclasses
+    import os
+
+    site = SiteConfig(n_domains=2, pages_per_domain=8)
+    seeds = seed_urls(site, n_seeds=10)
+    budgets = domain_budgets(site, 3)  # rounds defer, so three rounds stay busy
+
+    def crawl(name, cfg):
+        store = LocalSnapshotStore(os.path.join(tmp_store_dir, name), spark)
+        engine = CrawlEngine(spark, store, site, cfg, budget_rows=budgets)
+        assert len(engine.run(seeds, max_rounds=3).rounds) == 3
+        last = store.last_committed_round()
+        log = sorted(
+            (r["round"], r["seq"], r["url"], r["outcome"])
+            for r in store.read_log("fetch_log").collect()
+        )
+        seen = {r["fp"] for r in store.read_url_seen(last).collect()}
+        frontier = sorted((r["enqueue_seq"], r["url"]) for r in store.read_frontier(last).collect())
+        return engine, (log, seen, frontier)
+
+    assert CFG.bloom_enabled is False
+    exact, want = crawl("exact", CFG)
+    bloom, got = crawl("bloom", dataclasses.replace(CFG, bloom_enabled=True, bloom_min_seen=0))
+    assert exact._bloom_state is None
+    assert bloom._bloom_state is not None
+    assert got == want
+    assert want[2]  # the crawl was cut with work left in the frontier
+
+
+def test_run_releases_its_pins(spark, tmp_store_dir):
+    """Every checkpoint a run pins is freed once its round is committed:
+    after four rounds no RDD the run persisted is still registered.  (Ids,
+    not a count: the cleaner may free an earlier test's leftovers meanwhile.)"""
+    site = SiteConfig(n_domains=2, pages_per_domain=8)
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    engine = CrawlEngine(
+        spark, LocalSnapshotStore(tmp_store_dir, spark), site, CFG,
+        budget_rows=domain_budgets(site, 3),
+    )
+    assert len(engine.run(seed_urls(site, n_seeds=10), max_rounds=4).rounds) == 4
+    assert persisted() <= before
 
 
 def test_event_hooks_fire_in_order(spark, tmp_store_dir):
