@@ -964,7 +964,7 @@ def _crawl_resume_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _ensure_fixture("crawl_resume_parity", sf_dir, lambda: expected_crawl_resume())
     site = SiteConfig(n_domains=3, pages_per_domain=8)
-    cfg = EngineConfig(shuffle_partitions=2, bloom_enabled=False, fetch_partitions=2)
+    cfg = EngineConfig(shuffle_partitions=2, fetch_partitions=2)
     seeds = seed_urls(site, n_seeds=10)
     robots = robots_rules(site)
     budgets = domain_budgets(site, default_budget=4)

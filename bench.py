@@ -227,7 +227,6 @@ def run_ballast(master: str, cpus: int) -> None:
         domain_salt_width=2,
         fetch_partitions=256,
         default_budget_per_round=budget,
-        bloom_enabled=False,
         max_retries=0,
         log_outcomes=("fetched", "failed", "robots_blocked", "invalid"),
         extra_spark_conf={
@@ -325,7 +324,6 @@ def run_crawl(master: str, cpus: int) -> dict:
         # waves at BOTH levels (identical plan, only slot count differs)
         fetch_partitions=256,
         default_budget_per_round=budget,
-        bloom_enabled=False,  # bloom off for the bench: seen-set fits the anti-join
         max_retries=0,
         # production observability: aggregate metrics for every outcome,
         # per-row log rows only for real fetch attempts

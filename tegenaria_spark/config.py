@@ -4,7 +4,7 @@ Replaces the reference's viper YAML settings (settings.go:59-83) and the
 hard-coded component defaults (components.go:71-73) with a plain
 dataclass.  All scale knobs are parameterized so the same code runs at
 test scale (2k URLs / 20 domains) and at the 10^10-URL design point
-(bucket counts, salt width, bloom sizing all grow without code change).
+(bucket counts and salt width grow without code change).
 """
 
 from __future__ import annotations
@@ -22,26 +22,9 @@ class EngineConfig:
     max_redirects: int = 3          # request.go:259
     max_retries: int = 3            # error re-enqueue cap (engine.go:269-277 path)
 
-    # --- dedup / bloom (reference: components.go:71 n=1M p=0.001;
-    # optimal m,k math ported from utils.go:78-87).
-    bloom_n: int = 1_048_576
-    bloom_p: float = 0.001
-    # opt-in: the exact url_seen anti-join runs alone by default.  The
-    # prefilter's verdicts only shrink the join's candidate side; the
-    # url_seen side is still scanned and shuffled in full, so no url_seen
-    # size makes it pay in this plan — it only adds a distinct, a cogroup,
-    # two semi/anti splits and a merge per round, plus a first-use build
-    # from all of url_seen.  Paired perfbench runs (local[4]) that changed
-    # only this default: cpu_s_per_url fell 17.6 % on crawl_links and 17 %
-    # on crawl_images, with identical crawls.
-    bloom_enabled: bool = False
-    # when enabled, the prefilter gates once url_seen holds this many fps
-    bloom_min_seen: int = 4096
-    # bitmap shards: one bloom bitmap per pmod(fp, B) bucket, built and
-    # merged on executors (never on the driver).  At the 10^10 design
-    # point (m ≈ 17 GB total) B = 2^10 keeps each shard ~17 MB; the
-    # sandbox default keeps shards big enough to exercise multi-bucket
-    # paths without drowning tiny tests in empty buckets.
+    # --- inert: nothing reads bloom_buckets.  It stays only because the
+    # benchmark harness (perfbench/run.py) passes it; drop the field
+    # together with that entry of perfbench's ENGINE settings.
     bloom_buckets: int = 16
 
     # --- url_seen hygiene: every K rounds compact the url_seen delta

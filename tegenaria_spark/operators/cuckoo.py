@@ -12,8 +12,8 @@ Reference counterpart: the bloom TestOrAdd seen-set of
 /root/reference/dupefilters.go:131-141 — the reference offers no
 deletion, which is why its seen-set can only ever grow; partial-key
 cuckoo hashing stores a 16-bit tag whose alternate bucket is
-recoverable from (index, tag) alone, so the filter supports delete and
-merge without the original keys.
+recoverable from (index, tag) alone, so the filter supports delete
+without the original keys.
 
 Layout: ``nbuckets`` (power of two) buckets × 4 slots of uint16 tags,
 tag 0 = empty.  tag(fp) is drawn from fp bits 48-63 (never 0);
@@ -22,14 +22,14 @@ uses deterministic victim rotation — identical inputs build identical
 tables, which the store-state design requires (commits must be
 reproducible on replay).
 
-Like the bloom, the cuckoo is an ACCELERATOR: lookups have false
-positives (~2b/2^16 ≈ 0.012 % at b=4), so the gate post-corrects
-"maybe" verdicts with an exact semi-join; false positives cost speed,
-never correctness, and inserted fps are NEVER reported unseen.
+Like the bloom, the cuckoo answers "maybe seen", never "seen": lookups
+have false positives (~2b/2^16 ≈ 0.012 % at b=4), so exact dedup stays
+with the url_seen anti-join (operators/dedup.py ``dedup_gate``), and
+inserted fps are NEVER reported unseen.
 
 Scale shape (10^10 fps): one filter per ``pmod(fp, B)`` bucket —
 4 bytes/2 slots per fp ⇒ ~23 GB total at load 0.84, B = 2^10 gives
-~23 MB per bucket row, built/merged entirely on executors by the
+~23 MB per bucket row, built and probed entirely on executors by the
 shared per-bucket functions; no driver-side table ever materializes.
 """
 
@@ -197,7 +197,7 @@ class CuckooFilter:
                     out[j] = True
         return out
 
-    # -- state (de)serialization + merge -------------------------------
+    # -- state (de)serialization ---------------------------------------
     def to_bytes(self) -> bytes:
         stash = np.array(self.stash or [], dtype=np.int64).reshape(-1, 2)
         head = np.array([self.nbuckets, len(stash)], dtype=np.int64)
@@ -213,24 +213,6 @@ class CuckooFilter:
             st = np.frombuffer(raw[16 + nb * SLOTS * 2 :], dtype=np.int64).reshape(ns, 2)
             f.stash = [(int(a), int(b)) for a, b in st]
         return f
-
-    def merge(self, other: "CuckooFilter") -> None:
-        """Fold another filter's stored (index, tag) pairs in —
-        partial-key hashing makes re-insertion key-free."""
-        if other.nbuckets != self.nbuckets:
-            # a bare assert vanishes under python -O and mismatched
-            # tables would merge with wrong bucket indices, silently
-            # corrupting membership (r4 ADVICE)
-            raise ValueError(
-                f"cuckoo merge: nbuckets mismatch ({other.nbuckets} != "
-                f"{self.nbuckets}) — state rows built with a different "
-                "filter_buckets cannot fold together"
-            )
-        idxs, slots = np.nonzero(other.tags)
-        for idx, slot in zip(idxs, slots):
-            self._insert_tagged(int(idx), int(other.tags[idx, slot]))
-        for idx, tag in other.stash:
-            self._insert_tagged(int(idx), int(tag))
 
 
 def cuckoo_bucket_filter(

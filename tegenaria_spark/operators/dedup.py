@@ -1,4 +1,5 @@
-"""Dedup gate: exact anti-join ground truth + per-bucket filter prefilter.
+"""Dedup gate: the exact url_seen anti-join, plus the A5 bloom/cuckoo
+membership operators.
 
 Reference semantics (/root/reference/engine.go:346-377 writeCache +
 dupefilters.go:131-141 DoDupeFilter):
@@ -8,17 +9,15 @@ dupefilters.go:131-141 DoDupeFilter):
 - otherwise the fingerprint is tested-and-added against a bloom filter
   sized by the optimal m,k formulas (utils.go:78-87).
 
-The rebuild keeps the filter as an *accelerator only*: the north_rule
-demands the URL-seen set exactly, and a bloom or cuckoo filter alone
-has false positives, so ground truth is a left-anti join against the
-``url_seen`` table (hash-partitioned by fp).  The filter (one per
-``pmod(fp, B)`` bucket, merged on executors from each round's url_seen
-delta and held in engine memory only, since url_seen rebuilds it) splits
-candidates into
-"definitely-new" (skip the join) and "maybe-seen" (the only rows that
-take the anti-join).  False positives therefore cost speed, never
-correctness.  The join still reads its url_seen side in full, so the
-engine runs the prefilter only on request (``EngineConfig.bloom_enabled``).
+The north_rule demands the URL-seen set exactly, and a bloom or cuckoo
+filter alone has false positives, so the gate (``dedup_gate``) is a
+left-anti join against the ``url_seen`` table (hash-partitioned by fp)
+and nothing else.  The per-bucket filter functions below (one filter
+per ``pmod(fp, B)`` bucket, built on executors) are the A5 membership
+operators that the contract queries build and probe; the engine does
+not call them.  As a prefilter in front of the anti-join they could
+only trim the join's candidate side, while url_seen is still scanned
+and shuffled in full, so they never paid.
 
 Within-batch duplicates (two outlinks to the same URL in one round) are
 resolved keep-first-by-enqueue_seq, which is exactly what the
@@ -99,23 +98,16 @@ class Bloom:
         got = (self.bits[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
         return got.all(axis=0)
 
-    def merge(self, other: "Bloom") -> None:
-        # not in place: a loaded bitmap is a read-only view of its bytes
-        self.bits = np.bitwise_or(self.bits, other.bits)
-
 
 # ---------------------------------------------------------------------------
 # Per-bucket filter state (the 10^10 design), shared by Bloom and
 # CuckooFilter (operators/cuckoo.py): one filter per pmod(fp, B) bucket,
-# built and merged entirely on executors.  The engine builds the state
-# from url_seen once, on the first round that uses the prefilter, and
-# then updates it from each round's url_seen delta; nothing is written
-# to the store.  No driver-side filter ever materializes and no
-# O(|url_seen|) rebuild happens per round.
+# built and probed entirely on executors.  No driver-side filter ever
+# materializes.
 #
-# A filter type provides add_many / contains_many / merge / to_bytes;
-# callers pass a constructor of an empty, bucket-sized filter and a
-# loader from its bytes (bloom_bucket_filter / cuckoo_bucket_filter).
+# A filter type provides add_many / contains_many / to_bytes; callers
+# pass a constructor of an empty, bucket-sized filter and a loader from
+# its bytes (bloom_bucket_filter / cuckoo_bucket_filter).
 #
 # Sizing at the design point: n=10^10, p=0.001 ⇒ m ≈ 17 GB total; with
 # B = 2^10 buckets each bitmap is ~17 MB — an executor-comfortable
@@ -161,22 +153,6 @@ def filter_delta_state(fps: DataFrame, n_buckets: int, new: Callable) -> DataFra
     )
 
 
-def filter_merge_state(old: DataFrame, delta: DataFrame, load: Callable) -> DataFrame:
-    """Merge per-bucket filters (grouped-map over the union)."""
-
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for raw in pdf["bits"]:
-            f = load(raw)
-            if acc is None:
-                acc = f
-            else:
-                acc.merge(f)
-        return pd.DataFrame({"bucket": [int(key[0])], "bits": [acc.to_bytes()]})
-
-    return old.unionByName(delta).groupBy("bucket").applyInPandas(fold, FILTER_STATE_SCHEMA)
-
-
 def filter_fp_verdicts(
     candidates: DataFrame, state: DataFrame, n_buckets: int, load: Callable
 ) -> DataFrame:
@@ -219,17 +195,9 @@ def dedup_within_batch(candidates: DataFrame) -> tuple[DataFrame, DataFrame]:
     return kept, dropped
 
 
-def dedup_gate(
-    candidates: DataFrame,
-    url_seen: DataFrame,
-    verdicts: Optional[DataFrame] = None,
-) -> tuple[DataFrame, DataFrame]:
+def dedup_gate(candidates: DataFrame, url_seen: DataFrame) -> tuple[DataFrame, DataFrame]:
     """F1: drop candidates whose fp is already in url_seen (unless
     do_not_filter).  Returns (fresh, dup_dropped).
-
-    ``verdicts`` is the optional prefilter: a (fp, _maybe) DataFrame
-    from :func:`filter_fp_verdicts`.  Rows it marks definitely-new skip
-    the url_seen anti-join; every other row takes the exact check.
 
     Every split is a left_semi/left_anti join: Catalyst sizes those by
     their left side alone, where inner/outer joins and cogroups multiply
@@ -241,17 +209,8 @@ def dedup_gate(
     filt = kept.filter(~F.col("do_not_filter"))
     bypass = kept.filter(F.col("do_not_filter"))
     seen = url_seen.select("fp")
-
-    surely_new = None
-    if verdicts is not None:
-        new_fps = verdicts.filter(~F.col("_maybe")).select("fp")
-        surely_new = filt.join(new_fps, "fp", "left_semi")
-        filt = filt.join(new_fps, "fp", "left_anti")
-
     fresh = filt.join(seen, "fp", "left_anti")
     dup = filt.join(seen, "fp", "left_semi")
-    if surely_new is not None:
-        fresh = surely_new.unionByName(fresh)
     return fresh.unionByName(bypass), batch_dups.unionByName(dup)
 
 

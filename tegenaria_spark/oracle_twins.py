@@ -616,7 +616,7 @@ def expected_crawl_resume(n_seeds: int = 10) -> pd.DataFrame:
     )
 
     site = SiteConfig(n_domains=3, pages_per_domain=8)
-    cfg = EngineConfig(shuffle_partitions=8, bloom_enabled=False)
+    cfg = EngineConfig(shuffle_partitions=8)
     seeds = seed_urls(site, n_seeds=n_seeds)
     sim = simulate_crawl(
         seeds,

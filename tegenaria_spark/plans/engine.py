@@ -11,7 +11,7 @@ engine.go:217-335):
        │                retries (M5) ◀── failed ◀─────┘      ok    │
        │                                                parse (M3/M4)
        │                                              items──▶ store
-       └── union ◀── dedup gate (F1/A5/A6) ◀── seq ◀── outlinks
+       └── union ◀── dedup gate (F1/A6) ◀── seq ◀── outlinks
 
 committed as one snapshot per round; the loop re-reads the committed
 frontier until it is empty (Q6, engine.go:341-343) — which makes every
@@ -19,7 +19,10 @@ round restartable: kill the driver at any point and ``resume=True``
 continues from the last committed snapshot (Q7).  The store is the only
 copy of url_seen: a round reads it from the committed snapshots plus
 the previous round's pinned delta, and seeds pass the same gate
-(``_gate``) as every round's outlinks.
+(``_gate``) as every round's outlinks.  That gate is the exact url_seen
+anti-join (``dedup_gate``) and nothing else: the per-bucket bloom/cuckoo
+functions of operators/dedup.py are A5 membership operators that the
+engine does not call.
 
 The only wide exchanges per round: the per-domain budget window, the
 salted fetch repartition, the new-link seq range-partition, and the
@@ -43,14 +46,7 @@ from pyspark.storagelevel import StorageLevel
 
 from tegenaria_spark.config import DEFAULT_CONFIG, EngineConfig
 from tegenaria_spark.functions.canonical import with_canonical, with_fingerprint
-from tegenaria_spark.operators.dedup import (
-    bloom_bucket_filter,
-    dedup_gate,
-    filter_delta_state,
-    filter_fp_verdicts,
-    filter_merge_state,
-    url_seen_delta,
-)
+from tegenaria_spark.operators.dedup import dedup_gate, url_seen_delta
 from tegenaria_spark.plans import events as ev
 from tegenaria_spark.operators.fetch import check_status, fetch_stage
 from tegenaria_spark.operators.metrics import (
@@ -106,10 +102,13 @@ def _pin(pins: list, df: DataFrame, disk: bool = False) -> DataFrame:
 def _release(pins: list) -> None:
     """Free pinned checkpoint blocks.  ``DataFrame.unpersist()`` is a
     no-op on a localCheckpoint frame (its plan is in no cache), so this
-    unpersists the checkpointed RDD itself; a later read of a released
-    pin fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, never recomputes."""
+    unpersists the checkpointed RDD itself, through the SparkContext:
+    ``RDD.unpersist`` would log a "was locally checkpointed" WARN per
+    pin.  A later read of a released pin fails with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, never recomputes."""
     for df in pins:
-        df._jdf.queryExecution().logical().rdd().unpersist(True)
+        sc = df.sparkSession.sparkContext._jsc.sc()
+        sc.unpersistRDD(df._jdf.queryExecution().logical().rdd().id(), True)
 
 
 def _side_facts(side_df: DataFrame) -> tuple[dict, dict]:
@@ -227,10 +226,6 @@ class CrawlEngine:
         # two workers, live during run(): a round's side job and the
         # previous round's commit overlap; commits never overlap each other
         self._executor: Optional[ThreadPoolExecutor] = None
-        self._bloom_state = None  # per-bucket bitmap DF, pinned; built on first use
-        self._bloom_new, self._bloom_load = bloom_bucket_filter(
-            cfg.bloom_n, cfg.bloom_p, cfg.bloom_buckets
-        )
         # user extension points: lifecycle events (events.go:30-148) and
         # the middleware/pipeline chains (middlewares.go:27-42,
         # pipelines.go:28-33)
@@ -288,44 +283,17 @@ class CrawlEngine:
         invalid URLs, drop fps already in *url_seen* (and duplicates
         within *cand*), and build the url_seen rows that round r commits
         as store round r + 1.  Returns (fresh, dups, invalid, seen_delta).
-        Eager pins go to *pins*, released once the round is committed.
-
-        By default the exact anti-join runs alone (config.py,
-        ``bloom_enabled``).  The opt-in per-bucket filter (A5) is engine
-        memory, never persisted: built from *url_seen* the first time the
-        prefilter gates (a fresh engine and a resume take the same path),
-        then merged with every delta this gate produces — so once it
-        exists it holds every fp in url_seen."""
-        cfg = self.cfg
+        Eager pins go to *pins*, released once the round is committed."""
         pin = partial(_pin, pins)
         # cand feeds invalid-log, dup-log and fresh, which race as
         # concurrent commit jobs — pin EAGERLY, or two jobs racing a lazy
         # checkpoint both recompute the canonicalize UDF
         cand = pin(with_fingerprint(with_canonical(cand)))
         invalid = cand.filter(~F.col("valid"))
-        cand = cand.filter(F.col("valid"))
-        verdicts = None
-        if cfg.bloom_enabled and self.store.url_seen_total(r) >= cfg.bloom_min_seen:
-            if self._bloom_state is None:
-                self._bloom_state = filter_delta_state(
-                    url_seen, cfg.bloom_buckets, self._bloom_new
-                ).localCheckpoint(eager=True)
-            verdicts = filter_fp_verdicts(
-                cand, self._bloom_state, cfg.bloom_buckets, self._bloom_load
-            )
-        fresh, dups = dedup_gate(cand, url_seen, verdicts)
+        fresh, dups = dedup_gate(cand.filter(F.col("valid")), url_seen)
         # fresh feeds three sinks (frontier, url_seen, logs) — eager pin
         fresh = pin(fresh)
         seen_delta = url_seen_delta(fresh, r + 1)
-        if self._bloom_state is not None:
-            old = self._bloom_state
-            delta = filter_delta_state(seen_delta, cfg.bloom_buckets, self._bloom_new)
-            self._bloom_state = filter_merge_state(
-                old, delta, self._bloom_load
-            ).localCheckpoint(eager=True)
-            # the lazy dups still read the old state through the verdicts
-            # until the round's outcomes (or the bootstrap's commit) run
-            pins.append(old)
         return fresh, dups, invalid, seen_delta
 
     def _compute_round(self, r: int, frontier: DataFrame, url_seen: DataFrame) -> "_RoundWork":

@@ -1,7 +1,7 @@
 """Cuckoo-filter URL-seen membership: no false negatives, bounded FPR,
-TestOrAdd, deletion (the capability bloom lacks), deterministic state
-and merge.  The distributed per-bucket gate is covered with the bloom's
-in test_dedup.py.
+TestOrAdd, deletion (the capability bloom lacks) and deterministic
+state.  The distributed per-bucket membership is covered with the
+bloom's in test_dedup.py.
 """
 
 from __future__ import annotations
@@ -67,18 +67,3 @@ def test_high_load_eviction_chains_and_determinism():
     # round-trip through bytes
     c = CuckooFilter.from_bytes(a.to_bytes())
     assert c.contains_many(fps).all()
-
-
-def test_merge_equals_bulk_insert_membership():
-    x, y = _fps(4_000, 5), _fps(4_000, 6)
-    whole = CuckooFilter.for_capacity(10_000)
-    whole.add_many(np.concatenate([x, y]))
-    a = CuckooFilter.for_capacity(10_000)
-    a.add_many(x)
-    b = CuckooFilter.for_capacity(10_000)
-    b.add_many(y)
-    a.merge(b)
-    assert a.contains_many(np.concatenate([x, y])).all()
-    probe = _fps(6_000, 7)
-    # merged filter's false-positive surface stays bounded
-    assert a.contains_many(probe).mean() < 0.01

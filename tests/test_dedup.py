@@ -12,7 +12,6 @@ from tegenaria_spark.operators.dedup import (
     dedup_gate,
     filter_delta_state,
     filter_fp_verdicts,
-    filter_merge_state,
     optimal_num_of_bits,
     optimal_num_of_hash_functions,
     url_seen_delta,
@@ -80,8 +79,7 @@ def test_within_batch_keeps_first_by_seq(spark):
 
 B = 4
 # (new, load) per filter; the bloom is sized far below its load (~54 %
-# fill at p=0.3, k=1) so its verdicts carry false positives and the
-# gate's exact correction path runs
+# fill at p=0.3, k=1) so its verdicts carry false positives
 FILTERS = {
     "bloom": lambda: bloom_bucket_filter(256, 0.3, B),
     "cuckoo": lambda: cuckoo_bucket_filter(4_000, B),
@@ -93,9 +91,9 @@ def _rand_fps(n, seed):
     return [int(x) for x in rng.randint(-(2**62), 2**62, size=n, dtype=np.int64)]
 
 
-@pytest.mark.parametrize("prefilter", [None, "bloom", "cuckoo"])
-def test_gate_prefilter_same_result(spark, prefilter):
-    """fresh/dup are the exact set answer with or without a prefilter."""
+def _gate_case(spark):
+    """200 seen + 300 new candidates, a within-batch repeat and a
+    do_not_filter row whose fp is seen."""
     seen_fps = _rand_fps(500, 5)
     new_fps = _rand_fps(300, 6)
     cand_rows = (
@@ -103,20 +101,13 @@ def test_gate_prefilter_same_result(spark, prefilter):
         + [(f"n{i}", fp, False, 1000 + i) for i, fp in enumerate(new_fps)]
         + [("n0-again", new_fps[0], False, 5000), ("s0-bypass", seen_fps[0], True, 5001)]
     )
-    cands = _cands(spark, cand_rows)
-    seen = _seen(spark, seen_fps)
+    return seen_fps, new_fps, _cands(spark, cand_rows), _seen(spark, seen_fps)
 
-    verdicts = None
-    if prefilter is not None:
-        new, load = FILTERS[prefilter]()
-        verdicts = filter_fp_verdicts(cands, filter_delta_state(seen, B, new), B, load)
-        verdicts = verdicts.localCheckpoint(eager=True)  # read three times
-        maybe = {r["fp"]: r["_maybe"] for r in verdicts.collect()}
-        assert all(maybe[fp] for fp in seen_fps[:200])  # no false negatives
-        if prefilter == "bloom":
-            assert any(maybe[fp] for fp in new_fps)  # false positives to correct
 
-    fresh, dup = dedup_gate(cands, seen, verdicts)
+def test_gate_exact_result(spark):
+    """fresh/dup are the exact set answer."""
+    _seen_fps, _new_fps, cands, seen = _gate_case(spark)
+    fresh, dup = dedup_gate(cands, seen)
     assert sorted(r["ctx_id"] for r in fresh.collect()) == sorted(
         [f"n{i}" for i in range(300)] + ["s0-bypass"]
     )
@@ -126,35 +117,28 @@ def test_gate_prefilter_same_result(spark, prefilter):
 
 
 @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
-def test_merged_deltas_equal_union_state(spark, kind):
-    x, y = _rand_fps(300, 7), _rand_fps(300, 8)
-    probe_fps = x + y + _rand_fps(600, 9)
-    probe = _cands(spark, [(str(i), fp, False, i) for i, fp in enumerate(probe_fps)])
+def test_filter_verdicts_miss_no_seen_fp(spark, kind):
+    """Per-bucket filter membership (A5): every seen fp is "maybe";
+    the undersized bloom also says "maybe" to some new fps."""
+    seen_fps, new_fps, cands, seen = _gate_case(spark)
     new, load = FILTERS[kind]()
-
-    def delta(fps):
-        return filter_delta_state(_seen(spark, fps), B, new)
-
-    def membership(state):
-        return {r["fp"]: r["_maybe"] for r in filter_fp_verdicts(probe, state, B, load).collect()}
-
-    merged = membership(filter_merge_state(delta(x), delta(y), load))
-    assert merged == membership(delta(x + y))
-    assert all(merged[fp] for fp in x + y)
+    verdicts = filter_fp_verdicts(cands, filter_delta_state(seen, B, new), B, load)
+    maybe = {r["fp"]: r["_maybe"] for r in verdicts.collect()}
+    assert all(maybe[fp] for fp in seen_fps[:200])  # no false negatives
+    if kind == "bloom":
+        assert any(maybe[fp] for fp in new_fps)  # false positives
 
 
 def test_gate_size_estimate_stays_bounded(spark):
     """A pinned gate output fed back as the next batch's input (as the
     engine does round over round) must not compound Catalyst's size
-    estimate: a multiplying join or cogroup squares it per iteration."""
+    estimate: a multiplying join grows it by url_seen's estimate per
+    iteration."""
     seen = _seen(spark, list(range(0, 400, 2)))
     cands = _cands(spark, [(f"c{i}", i, False, i) for i in range(400)])
-    new, load = bloom_bucket_filter(1024, 0.01, B)
-    state = filter_delta_state(seen, B, new).localCheckpoint(eager=True)
     bits = []
     for _ in range(8):
-        verdicts = filter_fp_verdicts(cands, state, B, load)
-        fresh, _dup = dedup_gate(cands, seen, verdicts)
+        fresh, _dup = dedup_gate(cands, seen)
         cands = fresh.localCheckpoint(eager=True)
         size = cands._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         bits.append(int(size).bit_length())

@@ -11,7 +11,7 @@ from tegenaria_spark.plans.engine import CrawlEngine
 from tegenaria_spark.sources.store import LocalSnapshotStore
 from tegenaria_spark.sources.synth import SiteConfig, domain_budgets, robots_rules, seed_urls
 
-CFG = EngineConfig(shuffle_partitions=4, bloom_n=100_000, fetch_partitions=4)
+CFG = EngineConfig(shuffle_partitions=4, fetch_partitions=4)
 
 
 def _single_seed(site: SiteConfig, d: int, p: int) -> list[dict]:
@@ -166,16 +166,12 @@ def test_log_outcomes_keeps_every_counter(spark, tmp_store_dir):
 
 def test_resume_from_snapshot(spark, tmp_store_dir):
     """Q7/north_rule: kill after round k, resume, final state identical
-    to an uninterrupted run.  bloom_min_seen=1 makes the prefilter gate
-    every round on both sides of the split, so the resumed engine must
-    rebuild its filter from url_seen (compacted base plus deltas): the
-    store persists no filter state."""
+    to an uninterrupted run.  ``seen_compact_every=1`` compacts url_seen
+    at every commit, so the resumed engine gates against a compacted
+    url_seen base plus deltas read back from the store."""
     site = SiteConfig(n_domains=2, pages_per_domain=6)
     seeds = seed_urls(site, n_seeds=6)
-    cfg = EngineConfig(
-        shuffle_partitions=4, bloom_n=100_000, fetch_partitions=4,
-        bloom_enabled=True, bloom_min_seen=1, seen_compact_every=1,
-    )
+    cfg = EngineConfig(shuffle_partitions=4, fetch_partitions=4, seen_compact_every=1)
 
     import os
 
@@ -192,8 +188,6 @@ def test_resume_from_snapshot(spark, tmp_store_dir):
     engine2.run(seeds, max_rounds=1)  # "crash" after 1 round
     engine3 = engine(store2)
     engine3.run(resume=True, max_rounds=1)
-    # the prefilter gated before and after the split
-    assert all(e._bloom_state is not None for e in (engine1, engine2, engine3))
 
     def fetched_set(store):
         return {
@@ -213,8 +207,8 @@ def test_resume_from_snapshot(spark, tmp_store_dir):
     assert seen_set(store1) == seen_set(store2)
     last = store1.last_committed_round()
     assert store2.last_committed_round() == last
-    # no fp registered twice: a filter missing pre-split fps would pass
-    # seen URLs around the anti-join and re-enqueue them for refetch
+    # no fp registered twice: a gate missing pre-split fps would
+    # re-enqueue seen URLs for refetch
     assert store1.url_seen_total(last) == store2.url_seen_total(last) == len(seen_set(store1))
     assert sorted(r["url"] for r in store1.read_frontier(last).collect()) == sorted(
         r["url"] for r in store2.read_frontier(last).collect()
@@ -223,41 +217,6 @@ def test_resume_from_snapshot(spark, tmp_store_dir):
         assert sorted(os.listdir(os.path.join(store.root, "state"))) == [
             "frontier", "url_seen", "url_seen_base",
         ]
-
-
-def test_prefilter_fork_crawls_identically(spark, tmp_store_dir):
-    """The URL-seen gate's two branches: the default exact anti-join
-    alone, and the opt-in bloom prefilter gating from the seeds on
-    (``bloom_min_seen=0``).  The prefilter is exact, so three rounds of
-    the same crawl must log, register and leave behind the same rows;
-    only the opt-in engine ever builds filter state."""
-    import dataclasses
-    import os
-
-    site = SiteConfig(n_domains=2, pages_per_domain=8)
-    seeds = seed_urls(site, n_seeds=10)
-    budgets = domain_budgets(site, 3)  # rounds defer, so three rounds stay busy
-
-    def crawl(name, cfg):
-        store = LocalSnapshotStore(os.path.join(tmp_store_dir, name), spark)
-        engine = CrawlEngine(spark, store, site, cfg, budget_rows=budgets)
-        assert len(engine.run(seeds, max_rounds=3).rounds) == 3
-        last = store.last_committed_round()
-        log = sorted(
-            (r["round"], r["seq"], r["url"], r["outcome"])
-            for r in store.read_log("fetch_log").collect()
-        )
-        seen = {r["fp"] for r in store.read_url_seen(last).collect()}
-        frontier = sorted((r["enqueue_seq"], r["url"]) for r in store.read_frontier(last).collect())
-        return engine, (log, seen, frontier)
-
-    assert CFG.bloom_enabled is False
-    exact, want = crawl("exact", CFG)
-    bloom, got = crawl("bloom", dataclasses.replace(CFG, bloom_enabled=True, bloom_min_seen=0))
-    assert exact._bloom_state is None
-    assert bloom._bloom_state is not None
-    assert got == want
-    assert want[2]  # the crawl was cut with work left in the frontier
 
 
 def test_run_releases_its_pins(spark, tmp_store_dir):
@@ -276,6 +235,48 @@ def test_run_releases_its_pins(spark, tmp_store_dir):
     )
     assert len(engine.run(seed_urls(site, n_seeds=10), max_rounds=4).rounds) == 4
     assert persisted() <= before
+
+
+def test_round_size_estimate_stays_bounded(spark, tmp_store_dir):
+    """Each round's ``new_frontier`` is the next round's input lineage,
+    so Catalyst's size estimate must not compound round over round: a
+    multiplying join in the URL-seen gate squares it per round, until
+    planning alone stalls the crawl.  The estimate is read as the
+    benchmark harness reads round timings, by wrapping ``_compute_round``,
+    on a site that does not drain.
+
+    The bound is on each round's growth, not on the estimate itself: the
+    budget joins in ``schedule_round`` and ``salt_for_fetch`` are left
+    joins against a driver-built frame whose estimate is the 2^63 default,
+    so every round adds a constant ~126 bits.  A squaring gate doubles
+    the bit length instead."""
+    import dataclasses
+
+    site = SiteConfig(n_domains=2, pages_per_domain=40)
+    # few partitions, no salt: the check reads plans, and a tiny round
+    # costs its Spark job count, not its data
+    cfg = dataclasses.replace(
+        CFG, shuffle_partitions=2, fetch_partitions=2, fp_buckets=2,
+        domain_salt_width=1, log_outcomes=("fetched",),
+    )
+    engine = CrawlEngine(
+        spark, LocalSnapshotStore(tmp_store_dir, spark, fp_buckets=cfg.fp_buckets), site, cfg,
+        budget_rows=domain_budgets(site, 2),
+    )
+    bits = []
+    compute = engine._compute_round
+
+    def sized_compute(r, *a, **kw):
+        work = compute(r, *a, **kw)
+        plan = work.new_frontier._jdf.queryExecution().optimizedPlan()
+        bits.append(int(plan.stats().sizeInBytes()).bit_length())
+        return work
+
+    engine._compute_round = sized_compute
+    assert len(engine.run(seed_urls(site, n_seeds=6), max_rounds=4).rounds) == 4
+    steps = [b - a for a, b in zip(bits, bits[1:])]
+    assert len(steps) == 3
+    assert max(steps) <= steps[0] + 32, bits
 
 
 def test_event_hooks_fire_in_order(spark, tmp_store_dir):

@@ -6,7 +6,6 @@ under the same seed list and politeness budget')."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from tegenaria_spark.config import EngineConfig
 from tegenaria_spark.plans.engine import CrawlEngine
@@ -18,7 +17,7 @@ from tegenaria_spark.sources.synth import SiteConfig, domain_budgets, robots_rul
 # per fetch stage for ~50-row test rounds — pure scheduler constant
 # 4/4 partitions: ~3 s/engine-run cheaper than 8/8 at test scale
 # (pure scheduler constants; parity output is partition-invariant)
-CFG = EngineConfig(shuffle_partitions=4, bloom_enabled=True, bloom_min_seen=50, fetch_partitions=4)
+CFG = EngineConfig(shuffle_partitions=4, fetch_partitions=4)
 
 
 def test_spark_engine_matches_simulator(spark, tmp_store_dir):
@@ -46,11 +45,10 @@ def test_spark_engine_matches_simulator(spark, tmp_store_dir):
     sim_fetched = sorted((t[0], t[1], t[3]) for t in sim.fetch_log if t[6] == "fetched")
     assert spark_fetched == sim_fetched
 
-    # --- identical URL-seen set
-    spark_seen = {
-        r["fp"] for r in store.read_url_seen(store.last_committed_round()).collect()
-    }
-    assert spark_seen == sim.url_seen
+    # --- identical URL-seen set, each fp registered once
+    seen = store.read_url_seen(store.last_committed_round())
+    assert seen.count() == seen.select("fp").distinct().count()
+    assert {r["fp"] for r in seen.collect()} == sim.url_seen
 
     # --- identical outcome multiset for every outcome class
     spark_outcomes = sorted(
@@ -116,57 +114,6 @@ def test_parity_with_per_request_options(spark, tmp_store_dir):
         "GET", py_merge_params(s["url"], s["params"]), None, s["headers"]
     )
     assert fp_plain != fp_merged and fp_merged in sim.url_seen
-
-
-# both cases run three rounds after the prefilter starts gating
-@pytest.mark.parametrize(("min_seen", "rounds"), [(30, 5), (0, 3)], ids=["30", "0"])
-def test_bloom_threshold_crossed_mid_crawl(spark, tmp_store_dir, min_seen, rounds):
-    """Regression (r2 ADVICE high): when bloom_min_seen is crossed AFTER
-    round 0, the incremental bloom state must include every fp committed
-    before the threshold crossing (seeds included).  Pre-fix, the engine
-    merged round deltas onto an empty filter without loading the
-    existing url_seen, so once the prefilter activated it routed
-    already-seen URLs around the anti-join as 'surely_new' — refetches
-    and duplicate url_seen fps.
-
-    ``min_seen=0``: the seeds' gate in ``bootstrap`` already uses the
-    prefilter, so the filter is built there (from an empty url_seen) and
-    must take in the seeds' own delta."""
-    site = SiteConfig(n_domains=3, pages_per_domain=12)
-    seeds = seed_urls(site, n_seeds=10)
-    budgets = domain_budgets(site, default_budget=6)
-    # round 0 commits ~10 seed fps (< 30); discovered outlinks cross the
-    # threshold within a round or two, activating the prefilter mid-crawl
-    # 4 fp/bloom buckets: the prefilter's grouped-map jobs run every
-    # round of the min_seen=0 case; fewer buckets keep them cheap
-    cfg = EngineConfig(
-        shuffle_partitions=4, bloom_enabled=True, bloom_min_seen=min_seen, fetch_partitions=4,
-        fp_buckets=4, bloom_buckets=4,
-    )
-
-    # threshold crossing happens by round ~2; a few post-crossing
-    # rounds prove the prefilter routes nothing around the anti-join
-    sim = simulate_crawl(seeds, site, cfg, budgets=budgets, max_rounds=rounds)
-
-    store = LocalSnapshotStore(tmp_store_dir, spark, fp_buckets=cfg.fp_buckets)
-    engine = CrawlEngine(spark, store, site, cfg, budget_rows=budgets)
-    engine.bootstrap(seeds)
-    assert (engine._bloom_state is not None) == (min_seen == 0)
-    engine.run(resume=True, max_rounds=rounds)
-    last = store.last_committed_round()
-    assert store.url_seen_total(last) > 30  # the threshold WAS crossed
-
-    seen = store.read_url_seen(last)
-    assert seen.count() == seen.select("fp").distinct().count()  # no dup fps
-    assert {r["fp"] for r in seen.collect()} == sim.url_seen
-
-    log = store.read_log("fetch_log")
-    spark_fetched = sorted(
-        (r["round"], r["seq"], r["url"])
-        for r in log.filter(F.col("outcome") == "fetched").collect()
-    )
-    sim_fetched = sorted((t[0], t[1], t[3]) for t in sim.fetch_log if t[6] == "fetched")
-    assert spark_fetched == sim_fetched  # no refetch of pre-threshold URLs
 
 
 def test_post_content_distinct_from_get():

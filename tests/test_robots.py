@@ -272,7 +272,7 @@ def test_wildcard_residual_and_crawl_delay_drive_engine(spark, tmp_path):
     rows, residual, delays = robots_engine_inputs(txts)
     assert set(residual) == {d0} and all(r["domain"] == d1 for r in rows)
     assert delays == {d1: 1.0}
-    cfg = EngineConfig(shuffle_partitions=4, bloom_enabled=False, fetch_partitions=4)
+    cfg = EngineConfig(shuffle_partitions=4, fetch_partitions=4)
     budgets = crawl_delay_budget_rows(
         delays, cfg.round_interval_s, default_budget=cfg.default_budget_per_round
     )
