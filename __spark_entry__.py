@@ -285,48 +285,38 @@ def _a5_cuckoo_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _robots_txt_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # robots.txt TEXT → distributed gate (functions/robots.py): parse
-    # per-domain robots text (RFC 9309 group selection for the image
-    # crawler agent) and decide every (domain, path) with wildcard-
-    # capable longest-match — cogrouped per domain via applyInPandas,
-    # patterns compiled once per batch.  Twin: an independent parser +
-    # matcher in oracle_twins.expected_robots_gate.
-    import pandas as pd  # noqa: F401
-
-    from tegenaria_spark.functions.robots import parse_robots_txt, robots_gate_pandas
+    # robots.txt TEXT → the engine's robots gate: parse per-domain
+    # robots text (RFC 9309 group selection for the image crawler
+    # agent), lower every rule — `*`/`$` patterns included — to
+    # ROBOTS_SCHEMA rows, and decide every (domain, path) with the
+    # scheduler's one longest-match fold
+    # (operators/schedule.with_robots_allowed).  Twin: an independent
+    # parser + matcher in oracle_twins.expected_robots_gate.
+    from tegenaria_spark.functions.robots import robots_engine_inputs
+    from tegenaria_spark.operators.schedule import with_robots_allowed
     from tegenaria_spark.oracle_twins import expected_robots_gate
+    from tegenaria_spark.schemas import ROBOTS_SCHEMA
     from tegenaria_spark.sources.synth import ROBOTS_GATE_PATHS, robots_txt_corpus
 
     _ensure_fixture("robots_txt_gate", sf_dir, expected_robots_gate)
-    agent = "tegenaria-image/1.0"
-    rows = [
-        (domain, txt, path)
-        for domain, txt in sorted(robots_txt_corpus().items())
-        for path in ROBOTS_GATE_PATHS
-    ]
-    df = spark.createDataFrame(rows, "domain string, txt string, path string")
-
-    def gate(key, pdf):
-        rules = parse_robots_txt(pdf["txt"].iloc[0], agent)["rules"]
-        return pd.DataFrame(
-            {
-                "domain": pdf["domain"],
-                "path": pdf["path"],
-                "allowed": robots_gate_pandas(pdf["path"], rules),
-            }
-        )
-
-    return df.groupBy("domain").applyInPandas(
-        gate, "domain string, path string, allowed boolean"
+    corpus = robots_txt_corpus()
+    rows, _delays = robots_engine_inputs(corpus, "tegenaria-image/1.0")
+    robots = spark.createDataFrame(rows, ROBOTS_SCHEMA)
+    grid = spark.createDataFrame(
+        [(domain, path) for domain in sorted(corpus) for path in ROBOTS_GATE_PATHS],
+        "domain string, path string",
+    )
+    return with_robots_allowed(grid, robots, F.col("path")).select(
+        "domain", "path", F.col("_allowed").alias("allowed")
     )
 
 
 def _robots_residual_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r5 (verdict #3): the ENGINE's schedule_round with wildcard robots
-    # residuals + Crawl-delay-lowered budgets — `*`/`$` Disallows block
-    # through schedule._residual_allowed (map-only exact matcher for
-    # wildcard-bearing domains) and a domain's Crawl-delay caps its
-    # per-round budget via functions.robots.crawl_delay_budget_rows.
+    # the ENGINE's schedule_round over a robots.txt corpus with `*`/`$`
+    # rules and Crawl-delays: every lowered rule is one ROBOTS_SCHEMA
+    # row gated by the scheduler's one longest-match fold, and a
+    # domain's Crawl-delay caps its per-round budget via
+    # functions.robots.crawl_delay_budget_rows.
     # Twin: an independent parse+match+rank in
     # oracle_twins.expected_robots_residual_schedule.
     from tegenaria_spark.config import EngineConfig
@@ -345,7 +335,7 @@ def _robots_residual_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     agent, default_budget = "tegenaria", 3
     cfg = EngineConfig(shuffle_partitions=8, default_budget_per_round=default_budget)
     corpus = robots_txt_corpus()
-    prefix_rows, residual_map, delays = robots_engine_inputs(corpus, agent)
+    rows, delays = robots_engine_inputs(corpus, agent)
     budget_rows = crawl_delay_budget_rows(
         delays, cfg.round_interval_s, default_budget=default_budget
     )
@@ -362,21 +352,12 @@ def _robots_residual_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ctx_id string, canon_url string, domain string, path string, "
         "priority int, enqueue_seq bigint, next_fetch_time timestamp",
     ).withColumn("next_fetch_time", F.timestamp_millis(F.lit(cfg.epoch_ms)))
-    robots = (
-        spark.createDataFrame(
-            [(r["domain"], r["path_prefix"], r["allow"]) for r in prefix_rows],
-            ROBOTS_SCHEMA,
-        )
-        if prefix_rows
-        else None
-    )
+    robots = spark.createDataFrame(rows, ROBOTS_SCHEMA)
     budgets = spark.createDataFrame(
         [(r["domain"], r["budget_per_round"], r["max_conns"]) for r in budget_rows],
         DOMAIN_BUDGET_SCHEMA,
     )
-    decided = schedule_round(
-        frontier, robots, budgets, 0, cfg, robots_residual=residual_map
-    )
+    decided = schedule_round(frontier, robots, budgets, 0, cfg)
     return decided.select("domain", "path", "sched")
 
 

@@ -1,7 +1,7 @@
 """robots.txt parsing + matching (RFC 9309 / Google wildcard
 semantics).
 
-The engine's scheduler consumes structured per-domain prefix rules
+The engine's scheduler consumes structured per-domain rules
 (schemas.ROBOTS_SCHEMA, joined broadcast in operators/schedule.py);
 a porter crawling the real web starts from robots.txt BYTES.  This
 module closes that gap:
@@ -14,10 +14,13 @@ module closes that gap:
   group's rules with ``*`` (any sequence) and ``$`` (end anchor)
   wildcards; tie between Allow and Disallow of equal specificity →
   Allow wins (RFC 9309 §2.2.2).  Default allow.
-- :func:`robots_rows_from_txt` — lower wildcard-free rules into the
-  engine's broadcastable prefix-rule schema; wildcard rules stay on
-  the exact matcher via :func:`robots_gate_pandas`, the vectorized
-  per-domain gate for ``mapInPandas``/``applyInPandas`` use.
+- :func:`robots_engine_inputs` — lower a robots.txt corpus to the
+  engine's inputs: every rule, wildcards included, as a
+  ``schemas.ROBOTS_SCHEMA`` row, plus the ``Crawl-delay`` per domain
+  (:func:`crawl_delay_budget_rows` turns those into budgets).  The
+  engine decides with one Catalyst fold
+  (``operators.schedule.with_robots_allowed``); :func:`robots_allowed`
+  is the Python spec the tests compare it against.
 
 Reference counterpart: tegenaria (Go) ships no robots support at all —
 its politeness is the rate limiter only (limiter.go); robots handling
@@ -25,16 +28,15 @@ is part of this repo's north-rule surface ("joined against robots.txt
 rules and per-domain politeness budgets").
 
 Scale shape: robots rules are a per-domain dimension (a few KB per
-domain, millions of domains at most) — they broadcast or cogroup by
-domain; the frontier never shuffles for the gate.
+domain, millions of domains at most) — they collapse to one rule
+array per domain and broadcast; the frontier never shuffles for the
+gate.
 """
 
 from __future__ import annotations
 
 import re
 from typing import Iterable, Optional
-
-import pandas as pd
 
 _FIELD_RE = re.compile(r"^\s*([A-Za-z-]+)\s*:\s*(.*?)\s*$")
 
@@ -149,59 +151,30 @@ def robots_allowed(rules: Iterable[tuple[str, bool]], path: str) -> bool:
     return best_allow
 
 
-def robots_rows_from_txt(
-    txt_by_domain: dict[str, str], agent: str = "tegenaria"
-) -> tuple[list[dict], list[tuple[str, str, bool]]]:
-    """Lower parsed rules into the engine's prefix-rule rows
-    (ROBOTS_SCHEMA).  Returns ``(rows, residual)`` where *residual*
-    holds (domain, pattern, allow) rules that need wildcard matching —
-    route those through :func:`robots_gate_pandas`; a file with no
-    wildcards lowers completely."""
-    rows: list[dict] = []
-    residual: list[tuple[str, str, bool]] = []
-    for domain, txt in txt_by_domain.items():
-        parsed = parse_robots_txt(txt, agent)
-        for pattern, allow in parsed["rules"]:
-            if pattern == "":
-                continue  # allow-all idiom: the gate's default
-            if "*" in pattern or pattern.endswith("$"):
-                residual.append((domain, pattern, allow))
-            else:
-                rows.append({"domain": domain, "path_prefix": pattern, "allow": allow})
-    return rows, residual
-
-
 def robots_engine_inputs(
     txt_by_domain: dict[str, str], agent: str = "tegenaria"
-) -> tuple[list[dict], dict[str, list[tuple[str, bool]]], dict[str, float]]:
-    """Lower a robots.txt corpus to the ENGINE's three inputs:
-    ``(prefix_rows, residual_map, crawl_delays)``.
-
-    Longest-match precedence is only correct when ONE matcher sees a
-    domain's whole rule list — a prefix Disallow must lose to a longer
-    wildcard Allow.  So a domain with ANY wildcard/anchored rule routes
-    its ENTIRE group (prefix rules included) through the exact matcher
-    (``residual_map`` → schedule._residual_allowed) and contributes
-    no prefix rows; wildcard-free domains lower fully to the broadcast
-    prefix join.  ``crawl_delays`` feeds :func:`crawl_delay_budget_rows`.
+) -> tuple[list[dict], dict[str, float]]:
+    """Lower a robots.txt corpus to the ENGINE's inputs: ``(rows,
+    crawl_delays)``.  *rows* are ROBOTS_SCHEMA dicts holding every rule
+    of each domain's selected group — ``*``/``$`` patterns included, as
+    the scheduler's one matcher sees a domain's whole rule list — except
+    the empty allow-all pattern, which is the gate's default.
+    ``crawl_delays`` feeds :func:`crawl_delay_budget_rows`.
 
     Scale shape: both outputs are per-domain dimensions (a few rules
-    per domain); the frontier never shuffles for either gate."""
-    prefix_rows: list[dict] = []
-    residual_map: dict[str, list[tuple[str, bool]]] = {}
+    per domain); the frontier never shuffles for the gate."""
+    rows: list[dict] = []
     delays: dict[str, float] = {}
     for domain, txt in txt_by_domain.items():
         parsed = parse_robots_txt(txt, agent)
         if parsed["crawl_delay"] is not None:
             delays[domain] = parsed["crawl_delay"]
-        rules = [(p, a) for p, a in parsed["rules"] if p != ""]
-        if any("*" in p or p.endswith("$") for p, _a in rules):
-            residual_map[domain] = rules
-        else:
-            prefix_rows.extend(
-                {"domain": domain, "path_prefix": p, "allow": a} for p, a in rules
-            )
-    return prefix_rows, residual_map, delays
+        rows.extend(
+            {"domain": domain, "path_prefix": p, "allow": a}
+            for p, a in parsed["rules"]
+            if p != ""
+        )
+    return rows, delays
 
 
 def crawl_delay_budget_rows(
@@ -231,27 +204,3 @@ def crawl_delay_budget_rows(
         else:
             row["budget_per_round"] = min(int(row["budget_per_round"]), cap)
     return list(by_domain.values())
-
-
-def robots_gate_pandas(
-    paths: pd.Series, rules: list[tuple[str, bool]]
-) -> pd.Series:
-    """Vectorized allowed-mask for one domain's rule group — the
-    pandas-UDF body for a mapInPandas/applyInPandas robots gate over a
-    domain-cogrouped frontier (wildcard-capable, unlike the prefix
-    join).  Patterns compile once per batch, not per row."""
-    compiled = [
-        (len(p), _pattern_regex(p) if p else None, allow) for p, allow in rules
-    ]
-    out = []
-    for path in paths.fillna("/"):
-        best_len, best_allow = -1, True
-        for spec, rx, allow in compiled:
-            if rx is None:
-                matched, s = True, 0
-            else:
-                matched, s = rx.match(path) is not None, spec
-            if matched and (s > best_len or (s == best_len and allow and not best_allow)):
-                best_len, best_allow = s, allow
-        out.append(best_allow)
-    return pd.Series(out, dtype=bool)

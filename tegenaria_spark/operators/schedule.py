@@ -26,7 +26,7 @@ survives the fan-out while the hot domain spreads over S tasks.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 
 from tegenaria_spark.config import EngineConfig
 
@@ -37,27 +37,60 @@ def round_ts_expr(round_no: int, cfg: EngineConfig):
     return F.timestamp_millis(F.lit(ms))
 
 
-def _prefix_allowed(ready: DataFrame, robots: DataFrame) -> DataFrame:
-    """*ready* plus an ``_allowed`` column: longest-matching-prefix
-    robots decision per URL; default allow.  Called by
-    :func:`schedule_round` for domains without wildcard rules.
+def robots_path(url: Column) -> Column:
+    """The string robots rules match for *url*: its path (``/`` when
+    empty) plus ``?query`` when the query is non-empty, as
+    :func:`~tegenaria_spark.functions.robots.robots_allowed` sees it.
+    Canonical URLs always end in ``?``; an empty query adds nothing, so
+    ``$``-anchored rules still fire on them.  Split like ``urlsplit``
+    by regex: ``parse_url`` raises on characters such as ``|`` or a
+    space, which canonical paths keep."""
+    path = F.regexp_extract(url, r"^[^:/?#]+://[^/?#]*([^?#]*)", 1)
+    path = F.when(path == "", F.lit("/")).otherwise(path)
+    query = F.regexp_extract(url, r"^[^?#]*\?([^#]*)", 1)
+    return F.when(query == "", path).otherwise(F.concat(path, F.lit("?"), query))
+
+
+def _rule_regex(pattern: Column) -> Column:
+    """RFC 9309 pattern → anchored Java regex, or NULL for a plain
+    prefix (no ``*``, no trailing ``$``), which matches by
+    ``startswith``.  Every non-alphanumeric character is escaped, then
+    ``*`` becomes ``.*`` and a trailing ``$`` the end anchor; ``(?d)``
+    gives ``.``/``$`` Python's line-terminator rules."""
+    anchored = pattern.endswith("$")
+    body = F.when(anchored, pattern.substr(F.lit(1), F.length(pattern) - 1)).otherwise(pattern)
+    escaped = F.regexp_replace(body, r"([^A-Za-z0-9])", r"\\$1")
+    rx = F.concat(
+        F.lit("(?d)^"),
+        F.replace(escaped, F.lit("\\*"), F.lit(".*")),
+        F.when(anchored, F.lit("$")).otherwise(F.lit("")),
+    )
+    return F.when(pattern.contains("*") | anchored, rx)
+
+
+def with_robots_allowed(df: DataFrame, robots: DataFrame, path: Column) -> DataFrame:
+    """*df* plus an ``_allowed`` column: the longest-match robots
+    decision for *path* over the row's domain's rules in *robots*
+    (ROBOTS_SCHEMA; ``path_prefix`` holds an RFC 9309 pattern).  Equal
+    length Allow beats Disallow (§2.2.2); no match ⇒ allow; specificity
+    is ``length(pattern)``, as in ``robots_allowed``.
 
     MAP-ONLY: rules collapse to ONE array row per domain (the robots
     dim is tiny — that groupBy shuffles a few rules per domain, not
-    the frontier), broadcast-join on ``domain``, and the longest-match
-    fold (equal-length Allow beats Disallow, RFC 9309 §2.2.2; no match
-    ⇒ allow) runs as a Catalyst ``aggregate`` over the row's rule
-    array, deciding in place without a second frontier exchange."""
-    path = F.coalesce(F.parse_url(F.col("canon_url"), F.lit("PATH")), F.lit("/"))
+    *df*), each rule carrying its regex (built once per rule, NULL for
+    a plain prefix), broadcast-join on ``domain``, and the fold runs as
+    a Catalyst ``aggregate`` over the row's whole rule list."""
     rules_by_domain = F.broadcast(
-        robots.groupBy("domain").agg(
+        robots.withColumnRenamed("path_prefix", "p")
+        .groupBy("domain")
+        .agg(
             F.collect_list(
-                F.struct(F.col("path_prefix").alias("p"), F.col("allow").alias("a"))
+                F.struct("p", F.col("allow").alias("a"), _rule_regex(F.col("p")).alias("rx"))
             ).alias("_rules")
         )
     )
     return (
-        ready.withColumn("_path", path)
+        df.withColumn("_path", path)
         .join(rules_by_domain, "domain", "left")
         .withColumn(
             "_allowed",
@@ -65,7 +98,8 @@ def _prefix_allowed(ready: DataFrame, robots: DataFrame) -> DataFrame:
                 F.expr(
                     """
                     aggregate(
-                      filter(_rules, r -> startswith(_path, r.p)),
+                      filter(_rules, r -> if(r.rx is null, startswith(_path, r.p),
+                                             _path rlike r.rx)),
                       named_struct('len', -1, 'allow', true),
                       (acc, r) -> if(length(r.p) > acc.len
                                      or (length(r.p) = acc.len and r.a and not acc.allow),
@@ -82,53 +116,12 @@ def _prefix_allowed(ready: DataFrame, robots: DataFrame) -> DataFrame:
     )
 
 
-def _residual_allowed(
-    ready: DataFrame, residual_map: dict[str, list[tuple[str, bool]]]
-) -> DataFrame:
-    """*ready* plus an ``_allowed`` column from the wildcard-exact
-    matcher, for domains whose rule group contains ``*``/``$`` patterns
-    (RFC 9309) — the prefix join can't express those, and longest-match
-    is only correct when one matcher sees the domain's WHOLE rule list
-    (functions/robots.py lowering).
-
-    Zero-shuffle: ``mapInPandas`` with the residual rule map in the
-    task closure — rules are a per-domain dimension (a few KB/domain,
-    wildcard-bearing domains a subset of that), the batch groups by
-    domain locally and patterns compile once per (domain, batch)."""
-    import pandas as pd
-
-    from tegenaria_spark.functions.robots import robots_gate_pandas
-
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    # copy: StructType.add mutates in place and ready.schema is cached
-    out_schema = StructType(
-        list(ready.schema.fields) + [StructField("_allowed", BooleanType(), False)]
-    )
-
-    def gate(batches):
-        from urllib.parse import urlsplit
-
-        for pdf in batches:
-            allowed = pd.Series(True, index=pdf.index)
-            for domain, grp in pdf.groupby("domain", sort=False):
-                rules = residual_map.get(domain)
-                if not rules:
-                    continue
-                paths = grp["canon_url"].map(lambda u: urlsplit(u or "").path or "/")
-                allowed.loc[grp.index] = robots_gate_pandas(paths, rules).to_numpy()
-            yield pdf.assign(_allowed=allowed)
-
-    return ready.mapInPandas(gate, out_schema)
-
-
 def schedule_round(
     frontier: DataFrame,
     robots: DataFrame,
     domain_budget: DataFrame,
     round_no: int,
     cfg: EngineConfig,
-    robots_residual: dict[str, list[tuple[str, bool]]] = None,
 ) -> DataFrame:
     """The whole scheduling decision as ONE pass over the frontier.
 
@@ -138,35 +131,22 @@ def schedule_round(
     budget window (the round's main shuffle) runs exactly once instead
     of once per consumer (selected/deferred/frontier-rewrite).
 
-    ``robots_residual``: wildcard-bearing domains' full rule lists —
-    those domains gate through the wildcard-exact matcher (map-only)
-    instead of the prefix join, so `*`/`$` Disallows actually block
-    (RFC 9309; no reference counterpart — north-rule surface).
+    ``robots``: ROBOTS_SCHEMA rules, ``*``/``$`` patterns included, all
+    gated by :func:`with_robots_allowed` on each URL's path and query;
+    ``None`` means no rules (every row allowed, no join).
 
     ONE LINEAR PASS: the decision is three COLUMNS (``_ready``,
     ``_allowed``, ``_rank``) computed once on a single stream, and
     ``sched`` is a CASE over them.  Splitting the frontier into slices
-    and unioning them back would re-derive the robots gates and the
-    budget window once per union branch.  The only split is the
-    disjoint residual-vs-prefix robots routing.  The budget window
-    ranks within ``(domain, _ready AND _allowed)``, so sleeping and
-    blocked rows never take a budget slot."""
+    and unioning them back would re-derive the robots gate and the
+    budget window once per union branch.  The budget window ranks
+    within ``(domain, _ready AND _allowed)``, so sleeping and blocked
+    rows never take a budget slot."""
     ts_now = round_ts_expr(round_no, cfg)
-    if robots_residual:
-        res_domains = sorted(robots_residual)
-        res = frontier.filter(F.col("domain").isin(res_domains))
-        rest = frontier.filter(~F.col("domain").isin(res_domains))
-        res_dec = _residual_allowed(res, robots_residual)
-        rest_dec = (
-            rest.withColumn("_allowed", F.lit(True))
-            if robots is None
-            else _prefix_allowed(rest, robots)
-        )
-        decided = rest_dec.unionByName(res_dec)
-    elif robots is None:
+    if robots is None:
         decided = frontier.withColumn("_allowed", F.lit(True))
     else:
-        decided = _prefix_allowed(frontier, robots)
+        decided = with_robots_allowed(frontier, robots, robots_path(F.col("canon_url")))
 
     budgets = F.broadcast(
         domain_budget.select(

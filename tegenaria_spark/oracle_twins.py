@@ -404,8 +404,8 @@ def expected_crawl_round_schedule(
             fresh.append(s)
 
     # robots: longest matching prefix wins, equal-length Allow beats
-    # Disallow (RFC 9309 tie rule, mirrored by schedule._prefix_allowed and
-    # the simulator), default allow
+    # Disallow (RFC 9309 tie rule, mirrored by schedule.with_robots_allowed
+    # and the simulator), default allow
     def allowed(s) -> bool:
         path = urlsplit(s["canon_url"]).path or "/"
         best = None

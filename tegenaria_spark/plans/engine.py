@@ -191,7 +191,11 @@ class CrawlSummary:
 class CrawlEngine:
     """Engine lifecycle (engine.go:149-194 Execute/start/stop) as a
     driver class; components (queue/dupefilter/limiter/stats,
-    components.go:62-79) are the operator modules wired below."""
+    components.go:62-79) are the operator modules wired below.
+
+    ``robots_rows`` (ROBOTS_SCHEMA dicts, wildcard patterns included)
+    and ``budget_rows`` are the politeness dimensions every round's
+    ``schedule_round`` joins; ``status()`` reads one commit marker."""
 
     def __init__(
         self,
@@ -202,7 +206,6 @@ class CrawlEngine:
         robots_rows: Optional[list[dict]] = None,
         budget_rows: Optional[list[dict]] = None,
         plugins=None,
-        robots_residual: Optional[dict] = None,
     ):
         from tegenaria_spark.operators.plugins import PluginSet
 
@@ -210,14 +213,12 @@ class CrawlEngine:
         self.store = store
         self.site = site
         self.cfg = cfg
-        # None ⇒ schedule_round skips the robots join (no rules at all)
+        # ROBOTS_SCHEMA rows, `*`/`$` patterns included (lower a robots.txt
+        # corpus with functions.robots.robots_engine_inputs); None ⇒
+        # schedule_round skips the robots join (no rules at all)
         self.robots = (
             spark.createDataFrame(robots_rows, ROBOTS_SCHEMA) if robots_rows else None
         )
-        # wildcard-bearing domains' full rule lists (RFC 9309 `*`/`$`):
-        # routed through the exact matcher in schedule_round; lower a
-        # robots.txt corpus with functions.robots.robots_engine_inputs
-        self.robots_residual = robots_residual or None
         self.budgets = (
             spark.createDataFrame(budget_rows, DOMAIN_BUDGET_SCHEMA)
             if budget_rows
@@ -316,10 +317,7 @@ class CrawlEngine:
             now = time.time()
             timings[name] = round(now - (t0 + sum(timings.values())), 3)
 
-        decided = schedule_round(
-            frontier, self.robots, self.budgets, r, cfg,
-            robots_residual=self.robots_residual,
-        )
+        decided = schedule_round(frontier, self.robots, self.budgets, r, cfg)
         decided = pin(decided)  # budget window runs once
         selected = decided.filter(F.col("sched") == "selected").drop("sched")
         deferred = decided.filter(F.col("sched") == "deferred").drop("sched")
@@ -605,7 +603,8 @@ class CrawlEngine:
 
     def status(self) -> dict:
         """Live crawl status from commit metadata — zero Spark jobs
-        (GetStatus analog; everything comes from the markers)."""
+        (GetStatus analog): the last marker alone, whose ``stats``
+        carry the running totals."""
         last = self.store.last_committed_round()
         if last is None:
             return {
@@ -613,19 +612,14 @@ class CrawlEngine:
                 "pause_requested": self._pause_requested,
                 "last_committed_round": None,
             }
-        counts = self.store.committed_row_counts(last)
-        marker = self.store._marker(last) or {}
-        outcomes: dict[str, int] = {}
-        for i in range(last + 1):
-            m = self.store._marker(i) or {}
-            for k, v in (m.get("stats", {}).get("outcomes") or {}).items():
-                outcomes[k] = outcomes.get(k, 0) + v
+        marker = self.store._marker(last)
+        totals = marker["stats"]["totals"]
         return {
             "state": self._lifecycle,
             "pause_requested": self._pause_requested,
             "last_committed_round": last,
-            "snapshot_id": marker.get("snapshot_id"),
-            "frontier_size": counts.get("frontier", 0),
-            "url_seen_total": self.store.url_seen_total(last),
-            "outcome_totals": outcomes,
+            "snapshot_id": marker["snapshot_id"],
+            "frontier_size": marker["row_counts"].get("frontier", 0),
+            "url_seen_total": totals["url_seen"],
+            "outcome_totals": totals["outcomes"],
         }

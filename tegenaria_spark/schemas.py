@@ -73,7 +73,9 @@ URL_SEEN_SCHEMA = StructType(
     ]
 )
 
-# robots — per-domain path rules (north_rule; no reference counterpart)
+# robots — per-domain rules (north_rule; no reference counterpart);
+# path_prefix holds an RFC 9309 pattern: a plain prefix, or one with
+# `*` (any sequence) and a trailing `$` (end anchor)
 ROBOTS_SCHEMA = StructType(
     [
         StructField("domain", StringType(), False),

@@ -21,7 +21,8 @@ Iceberg writer and nothing above this module changes):
                                     (read = newest base + later deltas)
       logs/{items,fetch_log,metrics,lineage}/r{r}/
       commits/round-{r}.json        written LAST — the atomic commit
-                                    marker (stats, row counts, paths)
+                                    marker (stats with running totals,
+                                    row counts, paths)
 
 A round is visible iff its marker exists; crash mid-round leaves
 orphan data dirs that the next run ignores and overwrites.  With real
@@ -108,18 +109,27 @@ class LocalSnapshotStore:
         ]
         return max(rounds) if rounds else None
 
-    def committed_row_counts(self, r: int) -> dict[str, int]:
+    def _marker(self, r: int) -> Optional[dict]:
+        """The commit marker of round *r* (None if not committed) — the
+        one reader of commit metadata."""
         path = os.path.join(self.root, "commits", f"round-{r}.json")
         if not os.path.exists(path):
-            return {}
+            return None
         with open(path) as fh:
-            return json.load(fh).get("row_counts", {})
+            return json.load(fh)
+
+    def _totals(self, r: int) -> dict:
+        """Running totals through committed round *r*, from its marker
+        alone: ``{"outcomes": {name: n}, "url_seen": rows}`` — no Spark
+        job, and no read of earlier markers."""
+        m = self._marker(r)
+        if m is None:
+            raise FileNotFoundError(f"round {r} is not committed")
+        return m["stats"]["totals"]
 
     def url_seen_total(self, upto_round: int) -> int:
-        """Cumulative seen-set size from commit metadata — no Spark job."""
-        return sum(
-            self.committed_row_counts(i).get("url_seen", 0) for i in range(upto_round + 1)
-        )
+        """Cumulative seen-set size through *upto_round*."""
+        return self._totals(upto_round)["url_seen"]
 
     def _state_path(self, table: str, r: int) -> str:
         return os.path.join(self.root, "state", table, f"v{r}")
@@ -128,13 +138,6 @@ class LocalSnapshotStore:
         # rows carry their own `round` column; dir name is plain (not
         # partition-style) so parquet partition inference can't collide
         return os.path.join(self.root, "logs", table, f"r{r}")
-
-    def _marker(self, r: int) -> Optional[dict]:
-        path = os.path.join(self.root, "commits", f"round-{r}.json")
-        if not os.path.exists(path):
-            return None
-        with open(path) as fh:
-            return json.load(fh)
 
     @staticmethod
     def _write_local_parquet(rows: list[tuple], schema, path: str) -> int:
@@ -218,10 +221,15 @@ class LocalSnapshotStore:
         Returns ``(snapshot_id, row_counts_per_table)`` — counts fall out
         of the footer pass, so callers never need a count job.
 
+        The marker's ``stats`` gains ``totals``: round *r - 1*'s totals
+        plus this commit's ``stats["outcomes"]`` and url_seen rows, so
+        rounds commit in order (round *r - 1* must be committed).
+
         Raises :class:`CommitConflictError` if another live writer has
         claimed round *r* or a marker for it already exists — before
         any data dir is touched (multi-writer safety; module docstring).
         """
+        prev = self._totals(r - 1) if r else {"outcomes": {}, "url_seen": 0}
         snapshot_id = f"snap-{r}-{uuid.uuid4().hex[:12]}"
         self._claim_round(r, snapshot_id)
         try:
@@ -232,6 +240,7 @@ class LocalSnapshotStore:
                 url_seen_delta,
                 logs,
                 stats,
+                prev,
                 deferred_logs,
             )
         finally:
@@ -309,6 +318,7 @@ class LocalSnapshotStore:
         url_seen_delta: DataFrame,
         logs: dict[str, DataFrame],
         stats: dict,
+        prev_totals: dict,
         deferred_logs: Optional[dict] = None,
     ) -> tuple[str, dict[str, int]]:
         lineage_rows = []
@@ -384,20 +394,27 @@ class LocalSnapshotStore:
 
         if callable(stats):  # resolved late: may depend on side jobs that
             stats = stats()  # overlapped with the table writes above
+        table_counts: dict[str, int] = {}
+        for _, table, _, _, n in lineage_rows:
+            table_counts[table] = table_counts.get(table, 0) + n
+        outcomes = dict(prev_totals["outcomes"])
+        for k, v in (stats.get("outcomes") or {}).items():
+            outcomes[k] = outcomes.get(k, 0) + v
+        totals = {
+            "outcomes": outcomes,
+            "url_seen": prev_totals["url_seen"] + table_counts.get("url_seen", 0),
+        }
         marker = {
             "round": r,
             "snapshot_id": snapshot_id,
-            "stats": stats,
+            "stats": {**stats, "totals": totals},
             "tables": {t: self._log_path(t, r) for t in logs} | {
                 "frontier": self._state_path("frontier", r),
                 "url_seen_delta": self._state_path("url_seen", r),
             },
+            "row_counts": table_counts,
+            "write_times": write_times,
         }
-        table_counts: dict[str, int] = {}
-        for _, table, _, _, n in lineage_rows:
-            table_counts[table] = table_counts.get(table, 0) + n
-        marker["row_counts"] = table_counts
-        marker["write_times"] = write_times
 
         tmp = os.path.join(self.root, "commits", f".round-{r}.{snapshot_id}.tmp")
         final = os.path.join(self.root, "commits", f"round-{r}.json")

@@ -104,3 +104,17 @@ def test_cc_string_nodes(spark):
             "img-a": "img-a", "img-b": "img-a", "img-c": "img-a",
             "img-x": "img-x", "img-y": "img-x",
         }
+
+
+def test_cc_v_shape_needs_small_star(spark):
+    # Two ends joined through a middle node that is the LARGEST id:
+    # canonical edges {(9, 2), (9, 5)} are a large-star fixed point (no
+    # node has a larger neighbour to re-point), so a loop without
+    # small-star would stop with node 9 in two components.  A second such
+    # V and a plain edge ride along, ids shuffled.
+    edges = [(5, 9), (4, 8), (9, 2), (3, 0), (8, 1)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    loop = connected_components(pairs, "doc_a", "doc_b", driver_max_edges=0)
+    assert sorted((r.node, r.component) for r in loop.collect()) == [
+        (0, 0), (1, 1), (2, 2), (3, 0), (4, 1), (5, 2), (8, 1), (9, 2),
+    ]

@@ -3,6 +3,8 @@ Spark engine, plus resume-from-snapshot."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -121,7 +123,6 @@ def test_log_outcomes_keeps_every_counter(spark, tmp_store_dir):
     the default config writes (test_parity) — in its markers, its
     metrics table and RoundResult."""
     import dataclasses
-    from collections import Counter
 
     from tegenaria_spark.plans.simulator import simulate_crawl
 
@@ -368,11 +369,11 @@ def test_plugin_chains_run_in_priority_order(spark):
     assert resp.apply(probe).collect()[0]["_rt"] == "low"  # descending: high first
 
 
-def test_pause_resume_and_status(spark, tmp_store_dir):
+def test_pause_resume_and_status(spark, tmp_store_dir, monkeypatch):
     """Control plane (service.go:64-147 analog): request_pause() stops
     at the next round boundary with a PAUSE event; resume continues to
     the same final state a straight-through run reaches; status() reads
-    only commit metadata."""
+    only commit metadata, and only the last marker of it."""
     from tegenaria_spark.plans import events as ev
     from tegenaria_spark.plans.engine import CrawlEngine
     from tegenaria_spark.sources.store import LocalSnapshotStore
@@ -403,6 +404,22 @@ def test_pause_resume_and_status(spark, tmp_store_dir):
     assert engine.status()["state"] == "idle"  # back to idle after the run
     assert store.last_committed_round() == 1 + len(rest.rounds)
     assert rest.total_fetched > 0  # the resumed run made real progress
+
+    # after three rounds, status() opens at most two markers, and the
+    # running totals it reports are the per-marker sums
+    last = store.last_committed_round()
+    assert last == 3
+    markers = [store._marker(i) for i in range(last + 1)]
+    want = Counter()
+    for m in markers:
+        want.update(m["stats"]["outcomes"])
+    reads = []
+    read_marker = store._marker
+    monkeypatch.setattr(store, "_marker", lambda r: reads.append(r) or read_marker(r))
+    st = engine.status()
+    assert len(reads) <= 2, reads
+    assert st["outcome_totals"] == dict(want)
+    assert st["url_seen_total"] == sum(m["row_counts"]["url_seen"] for m in markers)
     # interrupted-run == straight-through-run equality is certified by
     # test_resume_from_snapshot AND the crawl_resume_parity contract
     # query (simulator twin); re-running a third engine here only

@@ -1,20 +1,20 @@
 """robots.txt parsing/matching: stdlib-oracle agreement on
 wildcard-free files, Google-documented wildcard cases, group
-selection, engine-schema lowering, and the vectorized pandas gate."""
+selection, engine-schema lowering, and the engine's one Catalyst
+matcher against the Python spec ``robots_allowed``."""
 
 from __future__ import annotations
 
+import random
 import urllib.robotparser
 from datetime import datetime, timezone
 
-import pandas as pd
 import pytest
 
 from tegenaria_spark.functions.robots import (
     parse_robots_txt,
     robots_allowed,
-    robots_gate_pandas,
-    robots_rows_from_txt,
+    robots_engine_inputs,
 )
 
 PATHS = [
@@ -137,36 +137,87 @@ def test_split_groups_merge_per_rfc9309():
     assert sorted(g3["rules"]) == [("/a/", False), ("/b/", False)]
 
 
-def test_lowering_to_engine_rows_and_residual():
-    rows, residual = robots_rows_from_txt(
+def test_lowering_to_engine_rows():
+    rows, delays = robots_engine_inputs(
         {
             "d0.example": "User-agent: *\nDisallow: /admin/\nAllow: /admin/help\n",
-            "d1.example": "User-agent: *\nDisallow: /*.php$\n",
+            "d1.example": "User-agent: *\nDisallow: /*.php$\nCrawl-delay: 2\n",
+            "d2.example": "User-agent: *\nDisallow:\n",  # allow-all: no row
         }
     )
     assert {(r["domain"], r["path_prefix"], r["allow"]) for r in rows} == {
         ("d0.example", "/admin/", False),
         ("d0.example", "/admin/help", True),
+        ("d1.example", "/*.php$", False),
     }
-    assert residual == [("d1.example", "/*.php$", False)]
+    assert delays == {"d1.example": 2.0}
 
 
-def test_pandas_gate_matches_scalar():
-    txt = "User-agent: *\nDisallow: /fish*\nAllow: /fish/safe$\nDisallow: /admin/\n"
-    rules = parse_robots_txt(txt)["rules"]
-    s = pd.Series(PATHS + ["/fish/safe", None])
-    got = robots_gate_pandas(s, rules)
-    want = [robots_allowed(rules, p if p is not None else "/") for p in s]
-    assert list(got) == want
-    assert bool(got.iloc[-2])  # the $-anchored Allow fires
+# Pattern and path alphabet of the differential test: the RFC 9309
+# wildcards, the query marker, and every regex metacharacter a pattern
+# must match literally.
+_CHARS = list("/ab.=?*$+()[]{}|^\\") + ["a", "b", "/"] * 3
 
 
-# wildcard-free files lower to prefix rows, wildcard files to the
-# residual map; each shape below hands schedule_round a subset
+def _random_case(rng: random.Random) -> tuple[list[tuple[str, bool]], str]:
+    """One (rule list, path) case; half the patterns grow out of the
+    path so that matches, ties and anchors actually occur."""
+    path = "/" + "".join(rng.choice(_CHARS) for _ in range(rng.randint(0, 8)))
+    rules = []
+    for _ in range(rng.randint(1, 4)):
+        if rng.random() < 0.5:
+            chars = list(path[: rng.randint(0, len(path))])
+            for _ in range(rng.randint(0, 2)):
+                chars.insert(rng.randint(0, len(chars)), rng.choice("*$"))
+            pattern = "".join(chars) + ("$" if rng.random() < 0.3 else "")
+        else:
+            pattern = "/" + "".join(rng.choice(_CHARS) for _ in range(rng.randint(0, 5)))
+        rules.append((pattern, rng.random() < 0.5))
+        if rng.random() < 0.2:  # equal-length Allow/Disallow conflict
+            rules.append((pattern, not rules[-1][1]))
+    return rules, path
+
+
+def test_catalyst_matcher_matches_rfc_matcher_on_random_rules(spark):
+    """Differential test of the engine's one robots matcher: 500 seeded
+    random (rule list, path) cases, one domain each, decided in one
+    DataFrame and one collect, must equal ``robots_allowed``."""
+    import pyspark.sql.functions as F
+
+    from tegenaria_spark.operators.schedule import with_robots_allowed
+    from tegenaria_spark.schemas import ROBOTS_SCHEMA
+
+    rng = random.Random(1809)
+    cases = [_random_case(rng) for _ in range(500)]
+    robots = spark.createDataFrame(
+        [(f"k{i}", p, a) for i, (rules, _path) in enumerate(cases) for p, a in rules],
+        ROBOTS_SCHEMA,
+    )
+    grid = spark.createDataFrame(
+        [(f"k{i}", path) for i, (_rules, path) in enumerate(cases)],
+        "domain string, path string",
+    )
+    got = {
+        r["domain"]: r["_allowed"]
+        for r in with_robots_allowed(grid, robots, F.col("path")).collect()
+    }
+    want = {f"k{i}": robots_allowed(rules, path) for i, (rules, path) in enumerate(cases)}
+    assert got == want
+    # the draw exercises both decisions, wildcards and anchors
+    assert set(want.values()) == {True, False}
+    patterns = [p for rules, _path in cases for p, _a in rules]
+    assert any(p.endswith("$") for p in patterns) and any("*" in p for p in patterns)
+
+
+# each shape below hands schedule_round a subset of these files: none,
+# wildcard-free ("prefix"), wildcard ("residual") and mixed; all run
+# through the one matcher
 _PREFIX_TXTS = {
     "d0.io": (
         "User-agent: *\nDisallow: /admin/\nAllow: /admin/help\n"
         "Disallow: /private\nAllow: /private/public\n"
+        # a plain prefix that only a query can match
+        "Disallow: /admin/help?edit\n"
     ),
     # equal-length conflicting pair: Allow must win the tie
     "d1.io": "User-agent: *\nAllow: /folder\nDisallow: /folder\n",
@@ -174,43 +225,45 @@ _PREFIX_TXTS = {
     # nested prefixes: the longest match decides
     "d3.io": "User-agent: *\nAllow: /\nDisallow: /private\nAllow: /private/open\n",
 }
-_RESIDUAL_TXTS = {
-    # a prefix Disallow beside wildcards: the whole group stays residual
-    "w0.io": "User-agent: *\nDisallow: /fish*\nAllow: /fish/safe$\nDisallow: /admin/\n",
+_WILDCARD_TXTS = {
+    # prefix rules beside wildcards, and a rule that blocks any query
+    "w0.io": (
+        "User-agent: *\nDisallow: /fish*\nAllow: /fish/safe$\nDisallow: /admin/\n"
+        "Disallow: /*?\n"
+    ),
     "w1.io": "User-agent: *\nDisallow: /*.php$\nAllow: /folder\nDisallow: /private\n",
 }
 _ROBOTS_SHAPES = {
     "none": {},
     "prefix": _PREFIX_TXTS,
-    "residual": _RESIDUAL_TXTS,
-    "residual_prefix": {**_PREFIX_TXTS, **_RESIDUAL_TXTS},
+    "residual": _WILDCARD_TXTS,
+    "residual_prefix": {**_PREFIX_TXTS, **_WILDCARD_TXTS},
 }
 
 
 @pytest.mark.parametrize("shape", list(_ROBOTS_SHAPES))
 def test_schedule_round_robots_shapes_match_rfc_matcher(spark, shape):
     """robots.txt → robots_engine_inputs → the ENGINE's schedule_round
-    decides every URL exactly like parse_robots_txt + robots_allowed,
-    for each robots input shape it takes: no rules, prefix rows only,
-    residual map only (``robots=None``), and both.  Covers the
-    equal-length Allow/Disallow tie (RFC 9309 §2.2.2), nested
-    longest-prefix wins, `*`/`$` patterns, and domains without a file
-    (default allow)."""
+    decides every URL exactly like parse_robots_txt + robots_allowed on
+    its path and query, for each robots data shape: no rules
+    (``robots=None``), wildcard-free rules, wildcard rules, and both.
+    Covers the equal-length Allow/Disallow tie (RFC 9309 §2.2.2),
+    nested longest-prefix wins, `*`/`$` patterns, query strings, and
+    domains without a file (default allow)."""
     from tegenaria_spark.config import EngineConfig
-    from tegenaria_spark.functions.robots import robots_engine_inputs
     from tegenaria_spark.operators.schedule import schedule_round
     from tegenaria_spark.schemas import DOMAIN_BUDGET_SCHEMA, ROBOTS_SCHEMA
 
     txts = _ROBOTS_SHAPES[shape]
-    rows, residual, _delays = robots_engine_inputs(txts)
+    rows, _delays = robots_engine_inputs(txts)
     # the lowering produced exactly the shape under test
-    assert bool(rows) == (shape in ("prefix", "residual_prefix"))
-    assert bool(residual) == (shape in ("residual", "residual_prefix"))
+    assert bool(rows) == (shape != "none")
+    assert any("*" in r["path_prefix"] or r["path_prefix"].endswith("$") for r in rows) == (
+        shape in ("residual", "residual_prefix")
+    )
     # as CrawlEngine builds its inputs: no rows ⇒ no robots frame
     robots = (
-        spark.createDataFrame(
-            [(r["domain"], r["path_prefix"], r["allow"]) for r in rows], ROBOTS_SCHEMA
-        )
+        spark.createDataFrame(rows, ROBOTS_SCHEMA)
         if rows
         else None
     )
@@ -218,11 +271,16 @@ def test_schedule_round_robots_shapes_match_rfc_matcher(spark, shape):
     cfg = EngineConfig(shuffle_partitions=4)
     paths = ["/", "/admin/", "/admin/help/x", "/private/public/y", "/private/z",
              "/private/open/x", "/folder/page", "/folder", "/fish", "/fish/safe",
-             "/fish/safe/x", "/a.php", "/a.php/x", "/else"]
-    domains = sorted({**_PREFIX_TXTS, **_RESIDUAL_TXTS}) + ["nofile.io"]
+             "/fish/safe/x", "/a.php", "/a.php/x", "/else",
+             # the query is part of what robots rules match
+             "/a.php?x=1", "/else?x=1", "/admin/help?edit=1", "/fish/safe?x",
+             # canonical paths may keep characters java.net.URI rejects
+             "/admin/a b|c^d", "/fish|x.php"]
+    domains = sorted({**_PREFIX_TXTS, **_WILDCARD_TXTS}) + ["nofile.io"]
     ts0 = datetime.fromtimestamp(cfg.epoch_ms / 1000, tz=timezone.utc)
     frontier_rows = [
-        (f"c{i}", f"http://{domain}{p}?", domain, 0, i, ts0)
+        # canonical URLs end in "?" when they carry no query
+        (f"c{i}", f"http://{domain}{p}" + ("" if "?" in p else "?"), domain, 0, i, ts0)
         for i, (domain, p) in enumerate((d, p) for d in domains for p in paths)
     ]
     frontier = spark.createDataFrame(
@@ -234,7 +292,7 @@ def test_schedule_round_robots_shapes_match_rfc_matcher(spark, shape):
     budgets = spark.createDataFrame(
         [(d, len(paths), 128) for d in domains], DOMAIN_BUDGET_SCHEMA
     )
-    decided = schedule_round(frontier, robots, budgets, 0, cfg, residual or None)
+    decided = schedule_round(frontier, robots, budgets, 0, cfg)
     got = {r["ctx_id"]: r["sched"] for r in decided.collect()}
 
     assert len(got) == len(frontier_rows)
@@ -246,14 +304,11 @@ def test_schedule_round_robots_shapes_match_rfc_matcher(spark, shape):
 
 
 def test_wildcard_residual_and_crawl_delay_drive_engine(spark, tmp_path):
-    """r4 verdict #3: a `*`/`$` Disallow must actually BLOCK a fetch on
-    the engine path (schedule_round's residual matcher), and a Crawl-delay
-    must shrink the domain's per-round politeness budget."""
+    """A `*`/`$` Disallow must actually BLOCK a fetch on the engine path
+    (schedule_round's robots matcher), and a Crawl-delay must shrink the
+    domain's per-round politeness budget."""
     from tegenaria_spark.config import EngineConfig
-    from tegenaria_spark.functions.robots import (
-        crawl_delay_budget_rows,
-        robots_engine_inputs,
-    )
+    from tegenaria_spark.functions.robots import crawl_delay_budget_rows
     from tegenaria_spark.plans.engine import CrawlEngine
     from tegenaria_spark.sources.store import LocalSnapshotStore
     from tegenaria_spark.sources.synth import SiteConfig
@@ -263,14 +318,15 @@ def test_wildcard_residual_and_crawl_delay_drive_engine(spark, tmp_path):
     d0, d1 = site.domain(0), site.domain(1)
     txts = {
         # wildcard + anchored carve-out: blocks /p/1, /p/10, /p/11 —
-        # except /p/10 exactly (Allow "/p/10$" is longer than "/p/1*")
-        d0: "User-agent: *\nDisallow: /p/1*\nAllow: /p/10$\n",
-        # wildcard-free: lowers to the broadcast prefix join; the
-        # Crawl-delay caps the round budget at interval/delay = 1
+        # except /p/10 (Allow "/p/10?*v=1$" is longer than "/p/1*");
+        # page URLs carry a query, and rules match path plus query
+        d0: "User-agent: *\nDisallow: /p/1*\nAllow: /p/10?*v=1$\n",
+        # wildcard-free; the Crawl-delay caps the round budget at
+        # interval/delay = 1
         d1: "User-agent: *\nDisallow: /p/3\nCrawl-delay: 1\n",
     }
-    rows, residual, delays = robots_engine_inputs(txts)
-    assert set(residual) == {d0} and all(r["domain"] == d1 for r in rows)
+    rows, delays = robots_engine_inputs(txts)
+    assert {r["domain"] for r in rows} == {d0, d1}
     assert delays == {d1: 1.0}
     cfg = EngineConfig(shuffle_partitions=4, fetch_partitions=4)
     budgets = crawl_delay_budget_rows(
@@ -293,7 +349,7 @@ def test_wildcard_residual_and_crawl_delay_drive_engine(spark, tmp_path):
                                fp_buckets=cfg.fp_buckets)
     engine = CrawlEngine(
         spark, store, site, cfg,
-        robots_rows=rows, budget_rows=budgets, robots_residual=residual,
+        robots_rows=rows, budget_rows=budgets,
     )
     engine.run(seeds, max_rounds=2)
 
@@ -311,7 +367,7 @@ def test_wildcard_residual_and_crawl_delay_drive_engine(spark, tmp_path):
     assert not any(f"{d0}/p/10?" in u for u in blocked_urls)
     assert any(f"{d0}/p/10?" in u for u, _rnd in fetched)
     assert not any(f"{d0}/p/11?" in u for u, _rnd in fetched)
-    # d1: prefix Disallow still blocks via the broadcast join
+    # d1: the prefix Disallow blocks through the same matcher
     assert any(f"{d1}/p/3?" in u for u in blocked_urls)
     # Crawl-delay lowered the budget: exactly ONE d1 fetch per round
     d1_rounds = [rnd for u, rnd in fetched if d1 in u]
