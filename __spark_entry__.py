@@ -287,36 +287,35 @@ def _a5_cuckoo_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _robots_txt_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # robots.txt TEXT → the engine's robots gate: parse per-domain
     # robots text (RFC 9309 group selection for the image crawler
-    # agent), lower every rule — `*`/`$` patterns included — to
-    # ROBOTS_SCHEMA rows, and decide every (domain, path) with the
-    # scheduler's one longest-match fold
-    # (operators/schedule.with_robots_allowed).  Twin: an independent
-    # parser + matcher in oracle_twins.expected_robots_gate.
+    # agent), lower every rule — `*`/`$` patterns included — into the
+    # scheduler's politeness dim, and decide every (domain, path) with
+    # its one longest-match fold (operators/schedule.with_robots_allowed).
+    # Twin: an independent parser + matcher in
+    # oracle_twins.expected_robots_gate.
     from tegenaria_spark.functions.robots import robots_engine_inputs
-    from tegenaria_spark.operators.schedule import with_robots_allowed
+    from tegenaria_spark.operators.schedule import politeness_dim, with_robots_allowed
     from tegenaria_spark.oracle_twins import expected_robots_gate
-    from tegenaria_spark.schemas import ROBOTS_SCHEMA
     from tegenaria_spark.sources.synth import ROBOTS_GATE_PATHS, robots_txt_corpus
 
     _ensure_fixture("robots_txt_gate", sf_dir, expected_robots_gate)
     corpus = robots_txt_corpus()
     rows, _delays = robots_engine_inputs(corpus, "tegenaria-image/1.0")
-    robots = spark.createDataFrame(rows, ROBOTS_SCHEMA)
     grid = spark.createDataFrame(
         [(domain, path) for domain in sorted(corpus) for path in ROBOTS_GATE_PATHS],
         "domain string, path string",
     )
-    return with_robots_allowed(grid, robots, F.col("path")).select(
+    politeness = politeness_dim(spark, rows, None)
+    return with_robots_allowed(grid, politeness, F.col("path")).select(
         "domain", "path", F.col("_allowed").alias("allowed")
     )
 
 
 def _robots_residual_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ENGINE's schedule_round over a robots.txt corpus with `*`/`$`
-    # rules and Crawl-delays: every lowered rule is one ROBOTS_SCHEMA
-    # row gated by the scheduler's one longest-match fold, and a
-    # domain's Crawl-delay caps its per-round budget via
-    # functions.robots.crawl_delay_budget_rows.
+    # rules and Crawl-delays: the lowered rules and the Crawl-delay
+    # budget rows (functions.robots.crawl_delay_budget_rows) form one
+    # politeness dim, so one join gives each URL its robots decision
+    # and its domain's per-round budget.
     # Twin: an independent parse+match+rank in
     # oracle_twins.expected_robots_residual_schedule.
     from tegenaria_spark.config import EngineConfig
@@ -324,9 +323,8 @@ def _robots_residual_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         crawl_delay_budget_rows,
         robots_engine_inputs,
     )
-    from tegenaria_spark.operators.schedule import schedule_round
+    from tegenaria_spark.operators.schedule import politeness_dim, schedule_round
     from tegenaria_spark.oracle_twins import expected_robots_residual_schedule
-    from tegenaria_spark.schemas import DOMAIN_BUDGET_SCHEMA, ROBOTS_SCHEMA
     from tegenaria_spark.sources.synth import ROBOTS_GATE_PATHS, robots_txt_corpus
 
     _ensure_fixture(
@@ -352,12 +350,7 @@ def _robots_residual_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ctx_id string, canon_url string, domain string, path string, "
         "priority int, enqueue_seq bigint, next_fetch_time timestamp",
     ).withColumn("next_fetch_time", F.timestamp_millis(F.lit(cfg.epoch_ms)))
-    robots = spark.createDataFrame(rows, ROBOTS_SCHEMA)
-    budgets = spark.createDataFrame(
-        [(r["domain"], r["budget_per_round"], r["max_conns"]) for r in budget_rows],
-        DOMAIN_BUDGET_SCHEMA,
-    )
-    decided = schedule_round(frontier, robots, budgets, 0, cfg)
+    decided = schedule_round(frontier, politeness_dim(spark, rows, budget_rows), 0, cfg)
     return decided.select("domain", "path", "sched")
 
 
@@ -646,13 +639,8 @@ def _crawl_round_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tegenaria_spark.config import EngineConfig
     from tegenaria_spark.functions.canonical import with_canonical, with_fingerprint
     from tegenaria_spark.operators.dedup import dedup_gate
-    from tegenaria_spark.operators.schedule import schedule_round
-    from tegenaria_spark.schemas import (
-        DOMAIN_BUDGET_SCHEMA,
-        FRONTIER_SCHEMA,
-        ROBOTS_SCHEMA,
-        URL_SEEN_SCHEMA,
-    )
+    from tegenaria_spark.operators.schedule import politeness_dim, schedule_round
+    from tegenaria_spark.schemas import FRONTIER_SCHEMA, URL_SEEN_SCHEMA
     from tegenaria_spark.oracle_twins import expected_crawl_round_schedule
     from tegenaria_spark.sources.synth import SiteConfig, domain_budgets, robots_rules, seed_urls
 
@@ -672,10 +660,9 @@ def _crawl_round_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier = frontier.filter(F.col("valid")).localCheckpoint(eager=True)
     fresh, dups = dedup_gate(frontier, spark.createDataFrame([], URL_SEEN_SCHEMA))
     fresh = fresh.localCheckpoint(eager=True)
-    robots = spark.createDataFrame(robots_rules(site), ROBOTS_SCHEMA)
-    budgets = spark.createDataFrame(domain_budgets(site, 8), DOMAIN_BUDGET_SCHEMA)
+    politeness = politeness_dim(spark, robots_rules(site), domain_budgets(site, 8))
     # the engine's own scheduler; sleeping rows are not an outcome
-    decided = schedule_round(fresh, robots, budgets, 0, cfg)
+    decided = schedule_round(fresh, politeness, 0, cfg)
     return (
         decided.filter(F.col("sched") != "sleeping")
         .select("ctx_id", "domain", F.col("sched").alias("outcome"))

@@ -64,9 +64,9 @@ SMJ_EXPECTED = {
     "dedup_cluster_canonical",
     "image_caption_dedup",
     # frontier ⋈ url_seen dedup gate: fact ⋈ fact at 10^10 URLs (the
-    # politeness/robots DIMS in the same plan broadcast explicitly —
-    # schedule.py:55,90,158; AQE re-plans the small cases at runtime,
-    # which a static explain cannot show)
+    # one politeness dim in the same plan broadcasts explicitly —
+    # schedule.with_robots_allowed; AQE re-plans the small cases at
+    # runtime, which a static explain cannot show)
     "crawl_round_schedule",
 }
 

@@ -3,9 +3,10 @@
 Reimplements the *semantics* of the reference dedup identity
 (/root/reference/dupefilters.go:68-128):
 
-- canonicalize (dupefilters.go:68-76): parse the URL, re-encode the
-  query string sorted by key, force a trailing ``?`` even when the
-  query is empty (Go ``ForceQuery=true``), drop the fragment.
+- canonicalize (dupefilters.go:68-76): parse the URL, write the path
+  as Go's ``URL.EscapedPath()`` does, re-encode the query string
+  sorted by key, force a trailing ``?`` even when the query is empty
+  (Go ``ForceQuery=true``), drop the fragment.
 - header encoding (dupefilters.go:79-96): sort by original header key,
   emit ``UPPER(k):UPPER(v);\\n`` per pair, empty string for no headers.
 - fingerprint (dupefilters.go:99-128): hash of
@@ -23,8 +24,16 @@ tests assert Spark's JVM hash equals the Python hash bit-for-bit.
 
 from __future__ import annotations
 
+import re
 from typing import Iterable, Optional
-from urllib.parse import parse_qsl, quote_plus, urlencode, urlsplit
+from urllib.parse import (
+    parse_qsl,
+    quote_from_bytes,
+    quote_plus,
+    unquote_to_bytes,
+    urlencode,
+    urlsplit,
+)
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -41,11 +50,32 @@ FP_SEED = 42
 # ---------------------------------------------------------------------------
 
 
+# Go's validEncoded(path, encodePath): the bytes a raw path may hold and
+# still be written as given
+_GO_VALID_PATH = re.compile(r"[A-Za-z0-9\-._~$&+,/:;=@!'()*\[\]%]*")
+_BAD_ESCAPE = re.compile(r"%(?![0-9A-Fa-f]{2})")
+
+
+def _go_escaped_path(path: str) -> str:
+    """*path* as Go's ``URL.EscapedPath()`` writes it after
+    ``url.Parse``: kept as given when every byte is one Go's
+    ``validEncoded`` accepts, else percent-decoded and escaped again —
+    letters, digits and ``-._~$&+,/:;=@`` stay, every other UTF-8 byte
+    becomes upper-case ``%XX``.  So ``/a b`` and ``/a%20b`` are one
+    path, while ``/a(b)`` and ``/a%28b%29`` each stay as given.  A
+    malformed ``%`` escape (which ``url.Parse`` rejects) keeps the path
+    as given."""
+    if _GO_VALID_PATH.fullmatch(path) or _BAD_ESCAPE.search(path):
+        return path
+    return quote_from_bytes(unquote_to_bytes(path), safe="$&+,/:;=@")
+
+
 def py_canonicalize(url: str, keep_fragment: bool = False) -> tuple[str, str, bool]:
     """Return ``(canonical_url, domain, valid)``.
 
-    Mirrors dupefilters.go:68-76: sorted query (stable for repeated
-    keys), forced ``?``, fragment stripped unless *keep_fragment*.
+    Mirrors dupefilters.go:68-76: Go-escaped path
+    (:func:`_go_escaped_path`), sorted query (stable for repeated keys),
+    forced ``?``, fragment stripped unless *keep_fragment*.
     Invalid/relative URLs (no scheme or netloc) return valid=False —
     the downloader's ParseRequestURI gate (downloader.go:229-233).
     """
@@ -61,7 +91,7 @@ def py_canonicalize(url: str, keep_fragment: bool = False) -> tuple[str, str, bo
     # Go's url.Values.Encode(): keys sorted, insertion order kept per key.
     pairs.sort(key=lambda kv: kv[0])
     query = urlencode(pairs, quote_via=quote_plus)
-    path = parts.path or ""
+    path = _go_escaped_path(parts.path)
     frag = f"#{parts.fragment}" if (keep_fragment and parts.fragment) else ""
     host = parts.netloc.lower()
     canon = f"{parts.scheme.lower()}://{host}{path}?{query}{frag}"

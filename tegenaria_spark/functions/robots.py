@@ -17,8 +17,9 @@ module closes that gap:
 - :func:`robots_engine_inputs` — lower a robots.txt corpus to the
   engine's inputs: every rule, wildcards included, as a
   ``schemas.ROBOTS_SCHEMA`` row, plus the ``Crawl-delay`` per domain
-  (:func:`crawl_delay_budget_rows` turns those into budgets).  The
-  engine decides with one Catalyst fold
+  (:func:`crawl_delay_budget_rows` turns those into budgets).  Both
+  become one ``operators.schedule.politeness_dim``, and the engine
+  decides with one Catalyst fold over it
   (``operators.schedule.with_robots_allowed``); :func:`robots_allowed`
   is the Python spec the tests compare it against.
 

@@ -142,26 +142,15 @@ def word_ngram_hash_stream(
     the repo-wide 2^-64 fingerprint convention (and the r5 verdict's
     prescribed swap for the petabyte design point).
 
-    Falls back to the expression path for non-integral id columns
-    (the Arrow pass pins the id dtype)."""
+    The Arrow pass pins the id dtype: a non-integral *id_col* raises
+    ``TypeError``."""
     import pyarrow as pa
     import pandas as pd
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+    from pyspark.sql.types import IntegralType
 
-    if not isinstance(
-        docs.schema[id_col].dataType, (ByteType, ShortType, IntegerType, LongType)
-    ):
-        grams = (
-            F.posexplode(word_ngrams_col(text_col, n))
-            if positional
-            else F.explode(F.array_distinct(word_ngrams_col(text_col, n)))
-        )
-        alias = ("pos", "g") if positional else ("g",)
-        base = docs.select(F.col(id_col).alias("_id"), grams.alias(*alias))
-        cols = [F.col("_id").alias(id_col)] + (
-            [F.col("pos")] if positional else []
-        )
-        return base.select(*cols, F.xxhash64("g").alias("gh"))
+    id_type = docs.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(f"{id_col} must be an integral column, got {id_type.simpleString()}")
 
     def gen(batches):
         for batch in batches:
@@ -196,23 +185,6 @@ def word_ngram_hash_stream(
     ).mapInArrow(gen, schema)
     cols = [F.col("_id").alias(id_col)] + ([F.col("pos")] if positional else [])
     return stream.select(*cols, F.xxhash64("g").alias("gh"))
-
-
-def word_ngrams_col(text_col, n: int):
-    """Word *n*-gram array, entirely JVM-side: lowercase, split on
-    single space, drop empties, then one ``transform`` over the window
-    start offsets joining each *n*-token slice.  Guards ``size < n``
-    explicitly — Spark's ``sequence(1, 0)`` DESCENDS (yields [1, 0]),
-    which would fabricate phantom windows on short docs."""
-    t = F.lower(F.coalesce(text_col if not isinstance(text_col, str) else F.col(text_col), F.lit("")))
-    ws = F.filter(F.split(t, " "), lambda w: w != "")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(ws) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(ws, i, F.lit(n))),
-    )
-    return F.when(F.size(ws) >= n, grams).otherwise(
-        F.expr("cast(array() as array<string>)")
-    )
 
 
 def ngram_decontaminate(

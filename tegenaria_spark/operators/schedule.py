@@ -1,5 +1,5 @@
-"""Round scheduler: robots gate, politeness budgets, priority ranking,
-domain-salted repartition.
+"""Round scheduler: one politeness join (robots gate, per-domain
+budget, connection cap), priority ranking, domain-salted repartition.
 
 The reference throttles with wall-clock token/leaky buckets
 (/root/reference/limiter.go:46-57 local, distributed/limiter.go:36-74
@@ -12,21 +12,28 @@ Batch semantics turn both into *set* operators:
 - FIFO ⇒ total order by (priority, next_fetch_time, enqueue_seq);
   ranking is a window ``row_number`` per domain (Q1).
 
+Every per-domain fact — robots rules, budget, MaxConnsPerHost cap —
+lives in one :func:`politeness_dim` row, built once per engine and
+broadcast-joined once per round by :func:`schedule_round`.
+
 Rows over budget are deferred: ``next_fetch_time`` moves to the next
 round and they stay in the frontier (the reference blocks the goroutine
 instead — same effective schedule, provably: both fetch exactly the
 first ``budget`` eligible requests per domain per interval).
 
 Skew (north_rule): one hot domain would otherwise pin a single task, so
-the *fetch* stage repartitions by ``hash(domain) % P * S + hash(url) % S``
-— the per-domain budget was already enforced pre-split, so politeness
-survives the fan-out while the hot domain spreads over S tasks.
+the *fetch* stage repartitions by ``hash(domain) % 8P * S + hash(url) %
+fetch_slots`` — the per-domain budget was already enforced pre-split,
+so politeness survives the fan-out while the hot domain spreads over
+up to S tasks (fewer when its connection cap is lower).
 """
 
 from __future__ import annotations
 
+from typing import Optional
+
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from tegenaria_spark.config import EngineConfig
 
@@ -43,8 +50,9 @@ def robots_path(url: Column) -> Column:
     :func:`~tegenaria_spark.functions.robots.robots_allowed` sees it.
     Canonical URLs always end in ``?``; an empty query adds nothing, so
     ``$``-anchored rules still fire on them.  Split like ``urlsplit``
-    by regex: ``parse_url`` raises on characters such as ``|`` or a
-    space, which canonical paths keep."""
+    by regex: ``parse_url`` raises on characters such as ``[`` or
+    ``]``, which canonical paths keep (Go's ``EscapedPath`` leaves them;
+    ``|`` and spaces it escapes)."""
     path = F.regexp_extract(url, r"^[^:/?#]+://[^/?#]*([^?#]*)", 1)
     path = F.when(path == "", F.lit("/")).otherwise(path)
     query = F.regexp_extract(url, r"^[^?#]*\?([^#]*)", 1)
@@ -68,38 +76,62 @@ def _rule_regex(pattern: Column) -> Column:
     return F.when(pattern.contains("*") | anchored, rx)
 
 
-def with_robots_allowed(df: DataFrame, robots: DataFrame, path: Column) -> DataFrame:
-    """*df* plus an ``_allowed`` column: the longest-match robots
-    decision for *path* over the row's domain's rules in *robots*
-    (ROBOTS_SCHEMA; ``path_prefix`` holds an RFC 9309 pattern).  Equal
-    length Allow beats Disallow (§2.2.2); no match ⇒ allow; specificity
-    is ``length(pattern)``, as in ``robots_allowed``.
-
-    MAP-ONLY: rules collapse to ONE array row per domain (the robots
-    dim is tiny — that groupBy shuffles a few rules per domain, not
-    *df*), each rule carrying its regex (built once per rule, NULL for
-    a plain prefix), broadcast-join on ``domain``, and the fold runs as
-    a Catalyst ``aggregate`` over the row's whole rule list."""
-    rules_by_domain = F.broadcast(
-        robots.withColumnRenamed("path_prefix", "p")
-        .groupBy("domain")
-        .agg(
-            F.collect_list(
-                F.struct("p", F.col("allow").alias("a"), _rule_regex(F.col("p")).alias("rx"))
-            ).alias("_rules")
-        )
+def politeness_dim(
+    spark: SparkSession, robots_rows: Optional[list], budget_rows: Optional[list]
+) -> DataFrame:
+    """The per-domain politeness facts as ONE small frame, built once
+    per engine from ROBOTS_SCHEMA / DOMAIN_BUDGET_SCHEMA dicts: a row per
+    domain with rules or a budget row, holding ``domain``,
+    ``budget_per_round``, ``max_conns`` and ``rules``, an array of
+    ``(p, a, rx)`` (RFC 9309 pattern, allow flag, :func:`_rule_regex`).
+    A missing part is NULL: no rules ⇒ allow, no budget ⇒
+    ``default_budget_per_round``, no cap ⇒ the full salt width.  Rules
+    group per domain here, on the driver, so no round regroups them."""
+    rules: dict[str, list] = {}
+    for r in robots_rows or ():
+        rules.setdefault(r["domain"], []).append((r["path_prefix"], r["allow"]))
+    budgets = {r["domain"]: (r["budget_per_round"], r["max_conns"]) for r in budget_rows or ()}
+    dim = spark.createDataFrame(
+        [
+            (d, *budgets.get(d, (None, None)), rules.get(d))
+            for d in sorted(rules.keys() | budgets.keys())
+        ],
+        "domain string, budget_per_round int, max_conns int, "
+        "rules array<struct<p: string, a: boolean>>",
     )
+    return dim.withColumn(
+        "rules",
+        F.transform(
+            "rules",
+            lambda r: F.struct(
+                r["p"].alias("p"), r["a"].alias("a"), _rule_regex(r["p"]).alias("rx")
+            ),
+        ),
+    )
+
+
+def with_robots_allowed(df: DataFrame, politeness: DataFrame, path: Column) -> DataFrame:
+    """*df* broadcast-joined ONCE to the :func:`politeness_dim` row of
+    its domain, plus an ``_allowed`` column: the longest-match robots
+    decision for *path* over that domain's ``rules``.  Equal length
+    Allow beats Disallow (§2.2.2); no match or no rules ⇒ allow;
+    specificity is ``length(pattern)``, as in ``robots_allowed``.  The
+    dim's ``budget_per_round`` and ``max_conns`` ride along (NULL for a
+    domain without a dim row) for :func:`schedule_round`.
+
+    MAP-ONLY: the fold is a Catalyst ``aggregate`` over the row's whole
+    rule list; the dim is grouped already, so nothing here shuffles."""
     return (
         df.withColumn("_path", path)
-        .join(rules_by_domain, "domain", "left")
+        .join(F.broadcast(politeness), "domain", "left")
         .withColumn(
             "_allowed",
             F.coalesce(
                 F.expr(
                     """
                     aggregate(
-                      filter(_rules, r -> if(r.rx is null, startswith(_path, r.p),
-                                             _path rlike r.rx)),
+                      filter(rules, r -> if(r.rx is null, startswith(_path, r.p),
+                                            _path rlike r.rx)),
                       named_struct('len', -1, 'allow', true),
                       (acc, r) -> if(length(r.p) > acc.len
                                      or (length(r.p) = acc.len and r.a and not acc.allow),
@@ -112,28 +144,28 @@ def with_robots_allowed(df: DataFrame, robots: DataFrame, path: Column) -> DataF
                 F.lit(True),
             ),
         )
-        .drop("_rules", "_path")
+        .drop("rules", "_path")
     )
 
 
 def schedule_round(
-    frontier: DataFrame,
-    robots: DataFrame,
-    domain_budget: DataFrame,
-    round_no: int,
-    cfg: EngineConfig,
+    frontier: DataFrame, politeness: DataFrame, round_no: int, cfg: EngineConfig
 ) -> DataFrame:
     """The whole scheduling decision as ONE pass over the frontier.
 
     Adds a ``sched`` column ∈ {selected, deferred, robots_blocked,
-    sleeping} and advances ``next_fetch_time`` for deferred rows.  The
-    caller checkpoints the result once and slices by ``sched`` — the
-    budget window (the round's main shuffle) runs exactly once instead
-    of once per consumer (selected/deferred/frontier-rewrite).
+    sleeping} and ``fetch_slots``, and advances ``next_fetch_time`` for
+    deferred rows.  The caller checkpoints the result once and slices
+    by ``sched`` — the budget window (the round's main shuffle) runs
+    exactly once instead of once per consumer
+    (selected/deferred/frontier-rewrite).
 
-    ``robots``: ROBOTS_SCHEMA rules, ``*``/``$`` patterns included, all
-    gated by :func:`with_robots_allowed` on each URL's path and query;
-    ``None`` means no rules (every row allowed, no join).
+    ONE JOIN: :func:`with_robots_allowed` joins *politeness* (a
+    :func:`politeness_dim`) once, and that one row per domain gives the
+    robots decision, the round budget and the connection cap
+    (request.go:71 MaxConnsPerHost).  The cap becomes ``fetch_slots``,
+    ``min(S, max_conns)`` (at least 1) for salt width S, which
+    :func:`salt_for_fetch` reads off the row.
 
     ONE LINEAR PASS: the decision is three COLUMNS (``_ready``,
     ``_allowed``, ``_rank``) computed once on a single stream, and
@@ -143,25 +175,21 @@ def schedule_round(
     within ``(domain, _ready AND _allowed)``, so sleeping and blocked
     rows never take a budget slot."""
     ts_now = round_ts_expr(round_no, cfg)
-    if robots is None:
-        decided = frontier.withColumn("_allowed", F.lit(True))
-    else:
-        decided = with_robots_allowed(frontier, robots, robots_path(F.col("canon_url")))
-
-    budgets = F.broadcast(
-        domain_budget.select(
-            F.col("domain").alias("_b_domain"), F.col("budget_per_round").alias("_budget")
-        )
-    )
+    s = cfg.domain_salt_width
     w = Window.partitionBy("domain", "_contend").orderBy(
         F.col("priority").asc(), F.col("next_fetch_time").asc(), F.col("enqueue_seq").asc()
     )
     ranked = (
-        decided.withColumn("_ready", F.col("next_fetch_time") <= ts_now)
+        with_robots_allowed(frontier, politeness, robots_path(F.col("canon_url")))
+        .withColumn("_ready", F.col("next_fetch_time") <= ts_now)
         .withColumn("_contend", F.col("_ready") & F.col("_allowed"))
-        .join(budgets, F.col("domain") == F.col("_b_domain"), "left")
         .withColumn(
-            "_budget", F.coalesce(F.col("_budget"), F.lit(cfg.default_budget_per_round))
+            "_budget",
+            F.coalesce(F.col("budget_per_round"), F.lit(cfg.default_budget_per_round)),
+        )
+        .withColumn(
+            "fetch_slots",
+            F.greatest(F.lit(1), F.least(F.lit(s), F.coalesce(F.col("max_conns"), F.lit(s)))),
         )
         .withColumn("_rank", F.row_number().over(w))
     )
@@ -180,45 +208,27 @@ def schedule_round(
                 F.col("sched") == "deferred", round_ts_expr(round_no + 1, cfg)
             ).otherwise(F.col("next_fetch_time")),
         )
-        .select(*out_cols, "sched")
+        .select(*out_cols, "sched", "fetch_slots")
     )
 
 
-def salt_for_fetch(
-    selected: DataFrame, cfg: EngineConfig, domain_budget: DataFrame = None
-) -> DataFrame:
-    """Explicit hot-domain kill: spread each domain over S fetch tasks.
+def salt_for_fetch(selected: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Explicit hot-domain kill: spread each domain over its
+    ``fetch_slots`` (carried by :func:`schedule_round`) fetch tasks.
 
-    ``salt = pmod(hash(domain), P)·S + pmod(hash(url), width)`` — same
-    domain stays within an S-slot band (politeness already applied), a
-    hot domain no longer serializes a round.
-
-    Q4 (request.go:71 MaxConnsPerHost): with a budget dim, a domain's
-    slot width is ``min(S, max_conns)`` — a domain never occupies more
-    concurrent fetch tasks than its connection cap, which is exactly
-    what the reference's per-host transport limit enforces."""
+    ``salt = pmod(hash(domain), 8P)·S + pmod(hash(url), fetch_slots)``
+    — same domain stays within an S-slot band (politeness already
+    applied), a hot domain no longer serializes a round, and a domain
+    never occupies more concurrent fetch tasks than its connection cap.
+    No join: the cap came with the round's one politeness join."""
     p = cfg.fetch_partitions or cfg.shuffle_partitions * cfg.domain_salt_width
-    s = cfg.domain_salt_width
-    if domain_budget is not None and "max_conns" in domain_budget.columns:
-        dim = F.broadcast(
-            domain_budget.select(
-                F.col("domain").alias("_mc_domain"), F.col("max_conns").alias("_max_conns")
-            )
-        )
-        sel = selected.join(dim, F.col("domain") == F.col("_mc_domain"), "left").drop(
-            "_mc_domain"
-        )
-        width = F.greatest(
-            F.lit(1), F.least(F.lit(s), F.coalesce(F.col("_max_conns"), F.lit(s)))
-        )
-    else:
-        sel = selected
-        width = F.lit(s)
     # band modulus 8× the partition count: repartition() HASHES the salt,
     # so with only ~p distinct salt values balls-into-bins collisions make
     # some partitions 2-3× heavier — a straggler that caps fetch-stage
     # scaling once partitions ≈ cores (measured 0.58 eff at 8→32).  ~8
     # bands per partition + several waves per core keeps tasks uniform.
     band = F.pmod(F.hash("domain"), F.lit(p * 8))
-    salt = (band * s + F.pmod(F.hash("canon_url"), width)).alias("_salt")
-    return sel.repartition(p, salt).drop("_max_conns")
+    salt = (
+        band * cfg.domain_salt_width + F.pmod(F.hash("canon_url"), F.col("fetch_slots"))
+    ).alias("_salt")
+    return selected.repartition(p, salt).drop("fetch_slots")

@@ -61,16 +61,12 @@ from tegenaria_spark.operators.parse import (
     run_parsers,
 )
 from tegenaria_spark.operators.schedule import (
+    politeness_dim,
     round_ts_expr,
     salt_for_fetch,
     schedule_round,
 )
-from tegenaria_spark.schemas import (
-    DOMAIN_BUDGET_SCHEMA,
-    FRONTIER_SCHEMA,
-    METRICS_SCHEMA,
-    ROBOTS_SCHEMA,
-)
+from tegenaria_spark.schemas import FRONTIER_SCHEMA, METRICS_SCHEMA
 from tegenaria_spark.sources.store import LocalSnapshotStore
 from tegenaria_spark.sources.synth import SiteConfig
 
@@ -194,8 +190,10 @@ class CrawlEngine:
     components.go:62-79) are the operator modules wired below.
 
     ``robots_rows`` (ROBOTS_SCHEMA dicts, wildcard patterns included)
-    and ``budget_rows`` are the politeness dimensions every round's
-    ``schedule_round`` joins; ``status()`` reads one commit marker."""
+    and ``budget_rows`` (DOMAIN_BUDGET_SCHEMA dicts) become one
+    ``politeness_dim`` frame at construction, which every round's
+    ``schedule_round`` joins once; ``status()`` reads one commit
+    marker."""
 
     def __init__(
         self,
@@ -213,17 +211,10 @@ class CrawlEngine:
         self.store = store
         self.site = site
         self.cfg = cfg
-        # ROBOTS_SCHEMA rows, `*`/`$` patterns included (lower a robots.txt
-        # corpus with functions.robots.robots_engine_inputs); None ⇒
-        # schedule_round skips the robots join (no rules at all)
-        self.robots = (
-            spark.createDataFrame(robots_rows, ROBOTS_SCHEMA) if robots_rows else None
-        )
-        self.budgets = (
-            spark.createDataFrame(budget_rows, DOMAIN_BUDGET_SCHEMA)
-            if budget_rows
-            else spark.createDataFrame([], DOMAIN_BUDGET_SCHEMA)
-        )
+        # one row per domain: robots rules (`*`/`$` patterns included;
+        # lower a robots.txt corpus with functions.robots.robots_engine_inputs),
+        # budget and connection cap — every round joins it once
+        self.politeness = politeness_dim(spark, robots_rows, budget_rows)
         # two workers, live during run(): a round's side job and the
         # previous round's commit overlap; commits never overlap each other
         self._executor: Optional[ThreadPoolExecutor] = None
@@ -317,7 +308,7 @@ class CrawlEngine:
             now = time.time()
             timings[name] = round(now - (t0 + sum(timings.values())), 3)
 
-        decided = schedule_round(frontier, self.robots, self.budgets, r, cfg)
+        decided = schedule_round(frontier, self.politeness, r, cfg)
         decided = pin(decided)  # budget window runs once
         selected = decided.filter(F.col("sched") == "selected").drop("sched")
         deferred = decided.filter(F.col("sched") == "deferred").drop("sched")
@@ -329,7 +320,7 @@ class CrawlEngine:
         # just before it fetches; response middlewares (descending) see
         # the raw fetch output before the status gate — M1/M2 hook points
         to_fetch = self.plugins.request_middlewares.apply(
-            salt_for_fetch(selected, cfg, self.budgets)
+            salt_for_fetch(selected, cfg)
         )
         fetched = check_status(
             self.plugins.response_middlewares.apply(fetch_stage(to_fetch, site, cfg))

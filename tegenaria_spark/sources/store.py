@@ -81,8 +81,6 @@ from tegenaria_spark.schemas import (
     URL_SEEN_SCHEMA,
 )
 
-APPEND_TABLES = ("items", "fetch_log", "metrics", "lineage")
-
 
 class CommitConflictError(RuntimeError):
     """Another writer holds (or already committed) this round.

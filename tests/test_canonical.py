@@ -70,6 +70,41 @@ def test_canonicalize_rejects_invalid():
     assert py_canonicalize("/relative/only")[2] is False
 
 
+# (given path, canonical path) as Go's URL.EscapedPath() writes it: a
+# raw path of validEncoded bytes stays as given, any other path is
+# decoded and re-escaped with upper-case hex
+_GO_PATHS = [
+    ("/a b", "/a%20b"),
+    ("/a%20b", "/a%20b"),
+    ("/a|b", "/a%7Cb"),
+    ("/a%7Cb", "/a%7Cb"),
+    ("/a(b)", "/a(b)"),
+    ("/a%28b%29", "/a%28b%29"),
+    # a byte Go escapes forces the whole path through decode + escape
+    ("/a b%28", "/a%20b%28"),
+    ("/a%7cb", "/a%7cb"),
+    ("/a%7cb c", "/a%7Cb%20c"),
+    ("/é", "/%C3%A9"),
+    ("/%C3%A9", "/%C3%A9"),
+    ("/a^b\\c\"d<e>f`g{h}", "/a%5Eb%5Cc%22d%3Ce%3Ef%60g%7Bh%7D"),
+    ("/~a-b_c.d/$&+,:;=@!'*[]", "/~a-b_c.d/$&+,:;=@!'*[]"),
+    ("", ""),
+    # malformed escapes (url.Parse rejects them) keep the path as given
+    ("/a%zz b", "/a%zz b"),
+    ("/a%2", "/a%2"),
+]
+
+
+@pytest.mark.parametrize("given, want", _GO_PATHS)
+def test_canonical_path_is_go_escaped_path(given, want):
+    """dupefilters.go:68-76 writes the canonical URL through Go's
+    ``URL.String()``, whose path is ``EscapedPath()``: spellings of one
+    path that differ only in escaping get one fingerprint."""
+    canon, domain, valid = py_canonicalize(f"http://d.io{given}?b=2&a=1#f")
+    assert valid and domain == "d.io"
+    assert canon == f"http://d.io{want}?a=1&b=2"
+
+
 def test_header_encoding_sorted_upper():
     # dupefilters.go:79-96: sort by key, UPPER(k):UPPER(v);\n
     s = py_encode_headers({"b-key": "vB", "a-key": "vA"})

@@ -115,6 +115,18 @@ def test_ngram_decontaminate_counts_distinct_grams(spark):
     assert row["n_matched"] == 1
 
 
+def test_word_ngram_stream_rejects_non_integral_ids(spark):
+    """The Arrow n-gram pass carries ids as int64: a string id column
+    is refused up front rather than cast to NULL ids."""
+    from tegenaria_spark.operators.curation import word_ngram_hash_stream
+
+    docs = spark.createDataFrame([("d0", "a b c d")], "doc_id string, text string")
+    with pytest.raises(TypeError, match="doc_id must be an integral column"):
+        word_ngram_hash_stream(docs, 3)
+    ints = spark.createDataFrame([(7, "a b c d")], "doc_id int, text string")
+    assert sorted(r.doc_id for r in word_ngram_hash_stream(ints, 3).collect()) == [7, 7]
+
+
 def test_pack_sequences_hand_case(spark):
     from tegenaria_spark.operators.curation import pack_sequences
 

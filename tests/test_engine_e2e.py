@@ -247,10 +247,10 @@ def test_round_size_estimate_stays_bounded(spark, tmp_store_dir):
     on a site that does not drain.
 
     The bound is on each round's growth, not on the estimate itself: the
-    budget joins in ``schedule_round`` and ``salt_for_fetch`` are left
-    joins against a driver-built frame whose estimate is the 2^63 default,
-    so every round adds a constant ~126 bits.  A squaring gate doubles
-    the bit length instead."""
+    one politeness join in ``schedule_round`` is a left join against a
+    driver-built frame whose estimate is the 2^63 default, so every
+    round adds a constant ~65 bits (79, 144, 209, 274, 339 over five
+    rounds).  A squaring gate doubles the bit length instead."""
     import dataclasses
 
     site = SiteConfig(n_domains=2, pages_per_domain=40)

@@ -184,14 +184,18 @@ def test_catalyst_matcher_matches_rfc_matcher_on_random_rules(spark):
     DataFrame and one collect, must equal ``robots_allowed``."""
     import pyspark.sql.functions as F
 
-    from tegenaria_spark.operators.schedule import with_robots_allowed
-    from tegenaria_spark.schemas import ROBOTS_SCHEMA
+    from tegenaria_spark.operators.schedule import politeness_dim, with_robots_allowed
 
     rng = random.Random(1809)
     cases = [_random_case(rng) for _ in range(500)]
-    robots = spark.createDataFrame(
-        [(f"k{i}", p, a) for i, (rules, _path) in enumerate(cases) for p, a in rules],
-        ROBOTS_SCHEMA,
+    politeness = politeness_dim(
+        spark,
+        [
+            {"domain": f"k{i}", "path_prefix": p, "allow": a}
+            for i, (rules, _path) in enumerate(cases)
+            for p, a in rules
+        ],
+        None,
     )
     grid = spark.createDataFrame(
         [(f"k{i}", path) for i, (_rules, path) in enumerate(cases)],
@@ -199,7 +203,7 @@ def test_catalyst_matcher_matches_rfc_matcher_on_random_rules(spark):
     )
     got = {
         r["domain"]: r["_allowed"]
-        for r in with_robots_allowed(grid, robots, F.col("path")).collect()
+        for r in with_robots_allowed(grid, politeness, F.col("path")).collect()
     }
     want = {f"k{i}": robots_allowed(rules, path) for i, (rules, path) in enumerate(cases)}
     assert got == want
@@ -245,14 +249,13 @@ _ROBOTS_SHAPES = {
 def test_schedule_round_robots_shapes_match_rfc_matcher(spark, shape):
     """robots.txt → robots_engine_inputs → the ENGINE's schedule_round
     decides every URL exactly like parse_robots_txt + robots_allowed on
-    its path and query, for each robots data shape: no rules
-    (``robots=None``), wildcard-free rules, wildcard rules, and both.
+    its path and query, for each robots data shape: no rules,
+    wildcard-free rules, wildcard rules, and both.
     Covers the equal-length Allow/Disallow tie (RFC 9309 §2.2.2),
     nested longest-prefix wins, `*`/`$` patterns, query strings, and
     domains without a file (default allow)."""
     from tegenaria_spark.config import EngineConfig
-    from tegenaria_spark.operators.schedule import schedule_round
-    from tegenaria_spark.schemas import DOMAIN_BUDGET_SCHEMA, ROBOTS_SCHEMA
+    from tegenaria_spark.operators.schedule import politeness_dim, schedule_round
 
     txts = _ROBOTS_SHAPES[shape]
     rows, _delays = robots_engine_inputs(txts)
@@ -261,12 +264,6 @@ def test_schedule_round_robots_shapes_match_rfc_matcher(spark, shape):
     assert any("*" in r["path_prefix"] or r["path_prefix"].endswith("$") for r in rows) == (
         shape in ("residual", "residual_prefix")
     )
-    # as CrawlEngine builds its inputs: no rows ⇒ no robots frame
-    robots = (
-        spark.createDataFrame(rows, ROBOTS_SCHEMA)
-        if rows
-        else None
-    )
 
     cfg = EngineConfig(shuffle_partitions=4)
     paths = ["/", "/admin/", "/admin/help/x", "/private/public/y", "/private/z",
@@ -274,8 +271,8 @@ def test_schedule_round_robots_shapes_match_rfc_matcher(spark, shape):
              "/fish/safe/x", "/a.php", "/a.php/x", "/else",
              # the query is part of what robots rules match
              "/a.php?x=1", "/else?x=1", "/admin/help?edit=1", "/fish/safe?x",
-             # canonical paths may keep characters java.net.URI rejects
-             "/admin/a b|c^d", "/fish|x.php"]
+             # characters java.net.URI rejects (canonical paths keep [ ])
+             "/admin/a b|c^d", "/fish|x.php", "/admin/[x]"]
     domains = sorted({**_PREFIX_TXTS, **_WILDCARD_TXTS}) + ["nofile.io"]
     ts0 = datetime.fromtimestamp(cfg.epoch_ms / 1000, tz=timezone.utc)
     frontier_rows = [
@@ -289,10 +286,9 @@ def test_schedule_round_robots_shapes_match_rfc_matcher(spark, shape):
         "enqueue_seq bigint, next_fetch_time timestamp",
     )
     # budget above the per-domain row count: robots alone decides
-    budgets = spark.createDataFrame(
-        [(d, len(paths), 128) for d in domains], DOMAIN_BUDGET_SCHEMA
-    )
-    decided = schedule_round(frontier, robots, budgets, 0, cfg)
+    budgets = [{"domain": d, "budget_per_round": len(paths), "max_conns": 128} for d in domains]
+    # as CrawlEngine builds its inputs
+    decided = schedule_round(frontier, politeness_dim(spark, rows, budgets), 0, cfg)
     got = {r["ctx_id"]: r["sched"] for r in decided.collect()}
 
     assert len(got) == len(frontier_rows)

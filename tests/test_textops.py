@@ -88,6 +88,38 @@ def test_jaccard_bitset_and_open_vocab_paths_agree(spark, docs):
     assert fast == slow and fast
 
 
+def test_spread_to_parallelism_branches_agree(spark, docs, monkeypatch):
+    """``spread_to_parallelism`` round-robins an input with fewer
+    partitions than the default parallelism and passes any other input
+    through: word_jaccard_pairs on a 1-partition input (repartition
+    branch) and on a fully split one (no-op branch) must agree."""
+    from tegenaria_spark.operators import curation
+    from tegenaria_spark.operators.textdedup import word_jaccard_pairs
+
+    par = spark.sparkContext.defaultParallelism
+    spread = curation.spread_to_parallelism
+    taken = []
+
+    def spy(df):
+        out = spread(df)
+        taken.append("noop" if out is df else out.rdd.getNumPartitions())
+        return out
+
+    monkeypatch.setattr(curation, "spread_to_parallelism", spy)
+
+    def rows(df):
+        return {
+            (r["doc_a"], r["doc_b"], r["n_common"], r["n_union"]) for r in df.collect()
+        }
+
+    one = docs.coalesce(1)
+    assert one.rdd.getNumPartitions() == 1 < par <= docs.rdd.getNumPartitions()
+    spread_rows = rows(word_jaccard_pairs(one, 70))
+    passed_rows = rows(word_jaccard_pairs(docs, 70))
+    assert taken == [par, "noop"]
+    assert spread_rows == passed_rows and passed_rows
+
+
 def test_ngram_jaccard_short_texts(spark):
     from tegenaria_spark.operators.textdedup import ngram_jaccard_pairs
 

@@ -10,7 +10,7 @@ import pytest
 
 from tegenaria_spark.config import EngineConfig
 from tegenaria_spark.operators.parse import links_to_candidates, retry_candidates
-from tegenaria_spark.operators.schedule import salt_for_fetch
+from tegenaria_spark.operators.schedule import politeness_dim, salt_for_fetch, schedule_round
 
 
 def test_q4_conn_cap_bounds_parallelism(spark):
@@ -18,15 +18,27 @@ def test_q4_conn_cap_bounds_parallelism(spark):
     # concurrent fetch tasks than min(salt width S, its max_conns).
     cfg = EngineConfig(shuffle_partitions=8)  # S = 4 (default salt width)
     rows = [
-        (f"http://capped.example/p{i}", "capped.example") for i in range(60)
+        (f"http://capped.example/p{i}", "capped.example", i) for i in range(60)
     ] + [
-        (f"http://open.example/p{i}", "open.example") for i in range(60)
+        (f"http://open.example/p{i}", "open.example", 60 + i) for i in range(60)
     ]
-    sel = spark.createDataFrame(rows, "canon_url string, domain string")
-    budgets = spark.createDataFrame(
-        [("capped.example", 16, 2)], "domain string, budget int, max_conns int"
+    frontier = spark.createDataFrame(
+        rows, "canon_url string, domain string, enqueue_seq bigint"
+    ).select(
+        "*",
+        F.lit(0).alias("priority"),
+        F.timestamp_millis(F.lit(cfg.epoch_ms)).alias("next_fetch_time"),
     )
-    out = salt_for_fetch(sel, cfg, budgets).withColumn("pid", F.spark_partition_id())
+    politeness = politeness_dim(
+        spark,
+        None,
+        [
+            {"domain": "capped.example", "budget_per_round": 60, "max_conns": 2},
+            {"domain": "open.example", "budget_per_round": 60, "max_conns": 128},
+        ],
+    )
+    sel = schedule_round(frontier, politeness, 0, cfg).drop("sched")
+    out = salt_for_fetch(sel, cfg).withColumn("pid", F.spark_partition_id())
     per_domain = {
         r.domain: r.n
         for r in out.groupBy("domain").agg(F.countDistinct("pid").alias("n")).collect()
